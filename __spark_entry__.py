@@ -9,6 +9,10 @@ non-SQL-expressible and get the driver's rows-only check).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,309 +52,76 @@ def entry(spark: SparkSession) -> DataFrame:
 #      tests/test_plans.py::test_witness_window_leads_with_changed_queries.
 #   2. The remaining slots fill OLDEST-FIRST by freshest driver-witness
 #      round (from the committed CORRECTNESS_r*.json history),
-#      alphabetical within an equal-age cohort - machine-checked by
-#      tests/test_round14.py::test_witness_window_fill_is_oldest_first,
-#      which recomputes the ledger from the artifacts, so a hand-edited
-#      window that skips a stale row fails the suite.
+#      alphabetical within an equal-age cohort. _oldest_first_fill derives
+#      the fill from the ledger at import, so a newly committed ledger
+#      file moves the fill with it;
+#      tests/test_round14.py::test_witness_window_fill_is_oldest_first
+#      recomputes the rule independently.
 # With ~187 declared queries and ~46 fill slots/round, every stable
 # query is re-witnessed at least every 4 rounds.
 #
-# ROUND-19 WINDOW. CORRECTNESS_r18 landed 50/50 green (all hash
-# matches); steady-state rotation continues: the r19 changelist leads,
-# then the fill is exactly the oldest-first prefix of the recomputed
-# ledger - the 13 remaining r14 rows (sim_mmr first, exactly the head
-# the r18 tripwire printed), then the r15 cohort alphabetically to 50.
-# With a 36-entry changelist and 14 fill slots, the ledger says the
-# post-r19 histogram is r15 x 35 / r16 x 35 / r17 x 41 / r18 x 37 /
-# r19 x 50: nothing older than r15, and the 35 remaining r15 rows lead
-# the r20 fill.
-#
-# Round-19 changelist: multimodal_alignment (NEW r19 - VERDICT r18 #5,
-# the CLIP-score image-text alignment gate, LAION/DataComp's first
-# curation stage: both "towers" hash the shared word backbone into a
-# 64-dim feature space - the image side an Arrow kernel over the raw
-# payload bytes at raw tf, the text side JVM expressions over the
-# caption at capped tf - exact integer sparse dot / round-6 cosine,
-# doc_id % 7 caption-swap misalignment fixture (7 is coprime with the
-# generator's %20 source assignment so every source reports a mixed
-# retention), per-source retention report; oracle replays towers,
-# swap, cosine and rollup).
-# stream_index_append (NEW r19 - VERDICT r18 #8 stretch, streaming ANN
-# index maintenance: arrivals stream through a checkpointed
-# foreachBatch that encodes against the RELOADED frozen codebooks and
-# parquet-appends idempotently (per-batch dir overwrite), with a
-# mid-stream restart on the same checkpoint; serves ADC top-k from the
-# combined index plus self-certifying codes_exact /
-# resumed_only_delta columns; oracle = sim_index_append's unrolled SQL
-# with the contracts pinned true).
-# lifecycle_image (CHANGED r19 - rasterline kernel now Liang-Barsky-
-# clips each segment to the canvas slab before sampling, replacing the
-# r18 8*(w+h) sample cap: far-anchored crossings render solid instead
-# of dotted, allocation is slab-bounded for any endpoint magnitude,
-# in-slab walks bit-identical - pinned digest unchanged).
-# lifecycle_image_stream (CHANGED r19 - ADVICE r18 high: the streaming
-# raster's y-range filter now REFERENCES the event-time column, so
-# PushPredicateThroughNonJoin can no longer push it back below
-# EventTimeWatermark; the r18 source-order fix was a runtime no-op -
-# the optimized plan still filtered before the watermark and
-# out-of-band excursions froze event time. Values unchanged;
-# test_round18 now asserts the OPTIMIZED plan of a started query.)
-# sim_ann_compare / sim_ann_lsh / sim_ann_ivf / sim_topk_pq /
-# sim_ann_ivfpq / sim_ivf_probe_sweep (CHANGED r19 - VERDICT r18 #3:
-# every doc-grain ANN method's candidate-generation + scoring pass is
-# now a session-memoized lazy localCheckpoint (_ann_scored, incl. the
-# exact baseline); all six queries rank the SAME frame with
-# topk_per_query, so the compare table stops re-running four
-# generators from scratch. Values bit-identical; plans now serve from
-# the checkpoint - plan-audited in test_plans.)
-# sim_index_persist / sim_index_append (CHANGED r19 - consumers of
-# topk_cosine_pq, now the thin topk_per_query wrapper over the
-# factored adc_scored_pq (same split as r18's ann_topk_ivfpq); values
-# bit-identical, re-witnessed for the operator refactor per the r18
-# precedent.)
-# text_quality / text_bpe / text_entropy / pipe_stats / pipe_curriculum
-# / pipe_curation / pipe_funnel / pipe_pref_pairs / pipe_delta_apply /
-# pipe_token_attribution / dedup_keep_best (CHANGED r19 - the
-# textquality review pass: quality_scores and bpe_token_stats ratios
-# now divide by NULLIF(n, 0), so ONE degenerate (token-less) document
-# emits NULL ratios instead of throwing ANSI DIVIDE_BY_ZERO and
-# killing the whole job - the at-100TB one-bad-row hazard; DuckDB
-# divides-to-NULL already, so the oracles match without change.
-# unigram_entropy reuses size(counts) for n_distinct (one
-# array_distinct pass per row instead of two). No fixture doc is
-# token-less: values identical, plans touched, AST-traced consumer
-# set re-witnessed.)
-# pipe_sample_weighted / pipe_pack / pipe_pack_bpe / pipe_shard_sink /
-# pipe_temperature_mix (CHANGED r19 - the sampling review pass, VALUE
-# changes on the first four, oracles updated in lockstep:
-# weighted_sample's E-S key is now integer nano-nats of ln(u) divided
-# by the weight - the old round-6 of the quotient quantized absolutely
-# and collapsed ~0.1% of a large corpus into one top tie bin,
-# silently degrading weighted selection to smallest-id order;
-# pack_sequences orders within a shard by the FULL 60-bit hash instead
-# of the 10k bucket, whose coarseness packed doc_id-ascending
-# ingestion runs contiguously at scale (shard assignment unchanged);
-# temperature_rebalance joins null-safely so a NULL stratum keeps by
-# its own threshold instead of silently keeping nothing while
-# depressing n_min. Plus parameter guards: per-entry hash_split
-# fractions, positive seq_len/n_shards/n_buckets, alpha in [0,1],
-# and write_training_shards drops docs-side columns that collide with
-# the pack assignment.)
-# lifecycle_query / lifecycle_aggregate (CHANGED r19 - the lifecycle
-# review pass: request windows now go through _time_window -
-# push_time_filter bounds (the raw _ts_ns integer compare where the
-# scan column exists) PLUS the period day-partition IN-list when the
-# store carries the reference's partition column, so /query and the
-# /image extrema+line scans prune the (data_type, period) layout
-# instead of reading every day directory. Same pass: log axes now BIN
-# on log10 positions while aggregating raw values (datashader
-# y_axis_type='log' parity - linear binning collapsed a decade spread
-# into the bottom pixels; bin_2d gained a bin_col, linear plans
-# bit-identical), empty attribute lists resolve to empty results,
-# color specs accept #rgb/basic names, and run_cancellable restores
-# the caller's job properties including interruptOnCancel. Fixture
-# requests are linear-axis and catalog-complete: values identical,
-# plans touched - the whole engine-consumer set re-witnessed
-# (lifecycle_image / lifecycle_image_stream already lead the list).)
-# q15 / q30 / q31 (CHANGED r19 - the core-query review pass: naive
-# datetime literals previously rode py4j's DatetimeConverter, which
-# converts via time.mktime - the HOST local zone - so on any non-UTC
-# machine every literal time bound silently shifted by the host offset
-# while the oracles and the period pruning did not; all literal bounds
-# now build from the integer epoch (functions/time.utc_ts_lit,
-# constant-folded back to a pushable literal). q30/q31 additionally
-# gain deterministic tiebreaks (description / event) in their top-1 /
-# rank windows - unique-by-corpus-invariant before, deterministic BY
-# CONSTRUCTION now - with the oracles mirrored. lifecycle_query also
-# resolves the catalog ONCE for its three query_raw_df variants via
-# _ids, and the lifecycle_aggregate oracle now mirrors the engine's
-# half-open extrema window and inclusive-with-snap canvas edges
-# exactly. Values identical on the UTC driver host.)
-# text_gopher_rules / text_c4_rules / pipe_refinedweb (CHANGED r19 -
-# same review: the line trims are now ASCII-WHITESPACE-aware
-# (regexp \s) instead of space-only, matching the published C4/Gopher
-# semantics and the suite twins' str.strip: a tab-only line is blank,
-# a CRLF line's terminal punctuation is judged after stripping the
-# \r. Oracles mirrored with the chr()-charset trim; the hypothesis
-# rule-corpus alphabet now includes tab/CR words so the divergence
-# class stays pinned. ASCII fixture corpus: values identical.)
-#
+# Round-21 changelist. No plan is meant to change this round: the 30
+# module-level memo stores moved into the one session-artifact registry
+# (cache.artifacts), each keeping its build function and checkpoint mode.
+# The changelist is the first query in battery order to build each
+# registry kind, so the witness window's oracle hash checks cover every
+# re-routed build path.
 _CHANGED_THIS_ROUND = [
-    "multimodal_alignment",
-    "stream_index_append",
-    "lifecycle_image",
-    "lifecycle_image_stream",
-    "sim_ann_compare",
-    "sim_ann_lsh",
-    "sim_ann_ivf",
-    "sim_topk_pq",
-    "sim_ann_ivfpq",
-    "sim_ivf_probe_sweep",
-    "sim_index_persist",
-    "sim_index_append",
-    "text_quality",
-    "text_bpe",
-    "text_entropy",
-    "text_gopher_rules",
-    "text_c4_rules",
-    "pipe_stats",
-    "pipe_curriculum",
-    "pipe_curation",
-    "pipe_funnel",
-    "pipe_pref_pairs",
-    "pipe_delta_apply",
-    "pipe_token_attribution",
-    "pipe_refinedweb",
-    "dedup_keep_best",
-    "pipe_sample_weighted",
-    "pipe_pack",
-    "pipe_pack_bpe",
-    "pipe_shard_sink",
-    "pipe_temperature_mix",
-    "lifecycle_query",
-    "lifecycle_aggregate",
-    "q15",
-    "q30",
-    "q31",
-    # optimization r19 (plan-only, values bit-identical, oracle parity
-    # re-proven in the suite): the chunk-grain ANN family now serves
-    # from session-memoized scored/pooled checkpoints
-    # (_chunk_adc_scored at max(IVF_SWEEP_PROBES) + _chunk_ann_pooled
-    # at IVF_NPROBE - the VERDICT r18 #3 discipline applied at the
-    # chunk grain), so the three queries share ONE candidate-generation
-    # pass per session instead of running three.
-    "sim_chunk_ann",
-    "sim_chunk_ann_recall",
-    "sim_chunk_probe_sweep",
-    # optimization r19 (plan-only, values bit-identical): the
-    # approximate dedup methods' verified-pair frames are
-    # session-memoized (_method_pairs) - dedup_compare and
-    # pipe_dump_dedup read the same checkpoints as the standalone
-    # method queries instead of re-running the pipelines.
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_winnow",
-    "dedup_compare",
-    "pipe_dump_dedup",
-    # optimization r19 (plan-only, values bit-identical): centroids now
-    # come from the session-memoized _coarse_centroids (the SAME
-    # deterministic Lloyd training dedup_semantic shares) instead of
-    # re-training inline.
-    "sim_ann_ivf_trained",
-    # optimization r19 (plan-only, values bit-identical): the embedding
-    # sign-LSH candidate + exact-cosine verification runs once per
-    # session with the threshold open (_emb_scored_pairs, 8x8 pinned
-    # geometry); the three consumers filter the one checkpoint.
-    "dedup_embedding",
-    "dedup_clusters_semantic",
-    "sim_knn_graph",
+    "q1",  # tables
+    "sim_pca",  # pca_gram
+    "dedup_fuzzy",  # fuzzy_gram_idx, fuzzy_rare_idx
+    "pipe_funnel",  # shingle_idx, pair_table
+    "sim_ann_ivf",  # ann_scored
+    "sim_topk_pq",  # pq_codebooks
+    "text_winnow",  # winnow_marks
+    "dedup_winnow",  # dedup_method_pairs
+    "sim_outliers",  # centroid_codebook
+    "text_nb_eval",  # nb_preds
+    "sim_ann_ivfpq",  # ivfpq_artifacts
+    "sim_chunk_ann",  # chunk_vec_store, chunk_ivfpq_artifacts, chunk_adc_scored, chunk_ann_pooled
+    "sim_knn_graph",  # dots_baseline, emb_scored_pairs
+    "text_bpe_apply",  # bpe_merges
+    "lifecycle_image",  # hdbpp_catalog
+    "pipe_refinedweb",  # refinedweb_stages
+    "sim_sparse_topk",  # tfidf_stats
+    "stream_classify",  # nb_artifacts
+    "pipe_curation_lr",  # curation_scores, lr_preds
+    "pipe_stage_order",  # trained_stages
+    "sim_index_append",  # pq_base_codebooks
+    "sim_chunk_ann_recall",  # chunk_exact_docs
+    "dedup_semantic",  # coarse_centroids
 ]
-# (the r19 changelist above is retained as documentation of that
-# round's witness set; the live changelist below supersedes it)
-_CHANGED_R19 = _CHANGED_THIS_ROUND
+_DECLARED = {**CORE_QUERIES, **EXTENSION_QUERIES}
 
-# ROUND-20 WINDOW (optimization round 2/2). CORRECTNESS_r19 landed
-# 50/50 green; steady-state rotation continues. Round-20 changelist -
-# every query whose PLAN changed this round (all plan-only, values
-# bit-identical, oracle parity re-proven in the suite):
-#   dedup_containment (pair exchange carries least(na,nb) instead of
-#     (na,nb) - the VERDICT r19 #1 narrowing; the array-per-hash
-#     regroup was implemented, ABAB-measured 2.3x WORSE, and rejected);
-#   pipe_contamination (train/eval gram semi-join keys on the map-side
-#     60-bit md5 hash instead of gram strings - guide SS2.3, the bloom
-#     variant's established contract);
-#   sim_chunk_ann_recall / sim_ann_compare / sim_ivf_probe_sweep
-#     (_recall_vs_exact broadcasts its constant-bounded inputs -
-#     SortMergeJoins over |queries| x k rows become broadcast joins);
-#   sim_ann_ivfpq / sim_chunk_ann / sim_chunk_probe_sweep (+ the two
-#     recall consumers above) (ann_adc_ivfpq fuses coarse-assign +
-#     PQ-encode: cell rides the argmin aggregation, deleting the
-#     codes JOIN residuals id-join and its duplicated residual
-#     subtree - plan: 2 SortMergeJoin -> 0 in the ADC pass);
-#   lifecycle_query / lifecycle_aggregate / lifecycle_image (the
-#     fixture catalog's att_conf dimension is a session checkpoint -
-#     one distinct-over-events derivation per session instead of one
-#     per resolve; plus the ADVICE r19 per-scale extrema cache key
-#     fix on the render path);
-#   stream_index_append (certification count + stats overlapped; the
-#     one-query-two-triggers idea investigated and closed - availableNow
-#     terminates, and the NEW-query restart IS the witnessed claim);
-#   dedup_embedding / dedup_clusters_semantic / sim_knn_graph
-#     (_emb_scored_pairs bounded: threshold pairs + per-node top-k
-#     edges instead of the open candidate frame - VERDICT r19 #2;
-#     consumer outputs provably unchanged, suite-pinned);
-#   stream_classify / stream_curation (_nb_artifacts memo gains the
-#     LRU cap + driver-data assert - VERDICT r19 #3 / ADVICE r19).
-_CHANGED_THIS_ROUND = [
-    "dedup_containment",
-    "pipe_contamination",
-    "sim_chunk_ann_recall",
-    "sim_ann_compare",
-    "sim_ivf_probe_sweep",
-    "sim_ann_ivfpq",
-    "sim_chunk_ann",
-    "sim_chunk_probe_sweep",
-    "lifecycle_query",
-    "lifecycle_aggregate",
-    "lifecycle_image",
-    "stream_index_append",
-    "dedup_embedding",
-    "dedup_clusters_semantic",
-    "sim_knn_graph",
-    "stream_classify",
-    "stream_curation",
-]
-# fill: the oldest-first prefix of the recomputed ledger (33 slots
-# after the 17 plan-changed entries) - the 10 remaining r14 rows then
-# the r15 cohort alphabetically (machine-checked by test_round14's
-# tripwire against the committed CORRECTNESS_r*.json history)
-_FILL_R20 = [
-    "stream_join",
-    "stream_restart",
-    "stream_sessions_evict",
-    "stream_sink_compact",
-    "text_collocations",
-    "text_domain_shift",
-    "text_fertility",
-    "text_lm_score",
-    "text_nb_train",
-    "text_vocab",
-    "dedup_chunk",
-    "dedup_clusters",
-    "dedup_exact",
-    "events_scd2",
-    "multimodal_near_dup",
-    "multimodal_phash",
-    "pipe_epoch_shuffle",
-    "pipe_interleave",
-    "pipe_mixture_schedule",
-    "pipe_split_safe",
-    "pipe_token_budget",
-    "q1",
-    "q10",
-    "q11",
-    "q12",
-    "q13",
-    "q14",
-    "q16",
-    "q17",
-    "q2",
-    "q22",
-    "q29",
-    "q3",
-]
-_WINDOW = _CHANGED_THIS_ROUND + _FILL_R20
+
+def _oldest_first_fill(changed: list[str], n: int) -> list[str]:
+    """The ``n`` least-recently-witnessed declared queries outside
+    ``changed``: oldest round in the committed CORRECTNESS_r*.json ledger
+    first (never witnessed = round 0), alphabetical within a round; names
+    the ledger holds but no longer declares are ignored."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    latest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                latest[name] = max(latest.get(name, 0), rnd)
+    skip = set(changed)
+    stable = (q for q in _DECLARED if q not in skip)
+    return sorted(stable, key=lambda q: (latest.get(q, 0), q))[:n]
+
+
+_WINDOW = _CHANGED_THIS_ROUND + _oldest_first_fill(
+    _CHANGED_THIS_ROUND, 50 - len(_CHANGED_THIS_ROUND)
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    all_q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    all_q.update(CORE_QUERIES)
-    all_q.update(EXTENSION_QUERIES)
-    missing = [n for n in _WINDOW if n not in all_q]
+    missing = [n for n in _WINDOW if n not in _DECLARED]
     assert not missing, f"witness window names unknown: {missing}"
     assert len(_WINDOW) == 50, len(_WINDOW)
-    out = {name: all_q[name] for name in _WINDOW}
-    for name, fn in all_q.items():
+    out = {name: _DECLARED[name] for name in _WINDOW}
+    for name, fn in _DECLARED.items():
         out.setdefault(name, fn)
     return out
 

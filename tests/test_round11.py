@@ -33,16 +33,16 @@ def test_fuzzy_df_cap_is_in_the_plan_and_contract_enforced(spark):
     from web_maxiv_hdbppviewer_spark.operators.dedup import fuzzy_pairs
     from web_maxiv_hdbppviewer_spark.sources.tables import load_tables
 
-    from web_maxiv_hdbppviewer_spark.operators import dedup as dedup_mod
-
     docs = load_tables(spark, SF_SMOKE)["documents"]
     fuzzy_pairs(docs, df_cap=64)  # populates the session gram/rare memo
     # the capped posting plan is a session-memoized localCheckpoint, so
     # the HAVING df <= cap filter lives in the cached ORIGIN plan, not
     # the consumer's (which reads the checkpoint)
+    from web_maxiv_hdbppviewer_spark.cache import artifacts
+
     assert any(
         "<= 64" in p._jdf.queryExecution().optimizedPlan().toString()
-        for _, p, _ in dedup_mod._FUZZY_RARE_CACHE
+        for p, _ in artifacts._entries["fuzzy_rare_idx"].values()
     ), "df-cap filter missing from the memoized posting plan"
     plan = _plan(QUERIES["dedup_fuzzy"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan

@@ -394,30 +394,29 @@ def test_streaming_raster_boundary_events_match_batch_float_binning(spark):
     assert 28 in xbs and 57 in xbs
 
 
-def test_clear_dedup_caches_clears_every_memo_store():
-    """The corpus-rewrite escape hatch must cover ALL four session memo
-    stores - the fuzzy gram/rare indexes were added after the function
-    and silently survived a clear, returning stale checkpointed indexes
-    after an in-place corpus rewrite (same logical plan, same semantic
-    hash, old blocks)."""
-    from web_maxiv_hdbppviewer_spark.operators import dedup, pca
+def test_registry_clear_empties_every_kind():
+    """The corpus-rewrite escape hatch must cover ALL session artifact
+    kinds - the fuzzy gram/rare indexes were added after the old
+    per-module clear and silently survived it, returning stale
+    checkpointed indexes after an in-place corpus rewrite (same logical
+    plan, same semantic hash, old blocks). One registry clear() now
+    empties every kind at once."""
+    from types import SimpleNamespace
 
-    stores = (
-        dedup._SHINGLE_CACHE,
-        dedup._PAIR_CACHE,
-        dedup._FUZZY_GRAM_CACHE,
-        dedup._FUZZY_RARE_CACHE,
-        pca._GRAM_CACHE,  # r13: the partial-Gram kernel memo
+    from web_maxiv_hdbppviewer_spark.cache import SessionArtifacts
+
+    reg = SessionArtifacts()
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    kinds = (
+        "shingle_idx", "pair_table", "fuzzy_gram_idx", "fuzzy_rare_idx",
+        "pca_gram",  # r13: the partial-Gram kernel memo
+        "ann_scored", "bpe_merges", "hdbpp_catalog", "tables",
     )
-    saved = [list(s) for s in stores]
-    try:
-        for s in stores:
-            s.append((0, None, None))
-        dedup.clear_dedup_caches()
-        assert all(not s for s in stores)
-    finally:
-        for s, old in zip(stores, saved):
-            s[:] = old
+    for kind in kinds:
+        reg.get_or_build(fake, kind, 0, lambda: (0, None, None))
+    reg.clear()
+    assert all(reg.peek(fake, kind, 0) is None for kind in kinds)
+    assert reg.builds() == []
 
 
 def test_nearest_bucket_rounds_half_ties_to_even_like_the_reference(spark, duck):

@@ -10,16 +10,48 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 
-def test_memo_put_evicts_oldest_beyond_cap():
-    from web_maxiv_hdbppviewer_spark.plans.extensions import _memo_put
+def test_registry_evicts_oldest_beyond_cap(spark):
+    """The session-artifact registry bounds every kind at ARTIFACT_CAP
+    entries, frees an evicted checkpoint's blocks, and drops a dead
+    session's entries and build records when a new applicationId
+    appears."""
+    from types import SimpleNamespace
 
-    store: dict = {}
-    for i in range(7):
-        _memo_put(store, i, str(i), cap=4)
-    assert list(store) == [3, 4, 5, 6]  # oldest evicted, newest kept
-    # re-inserting an existing key must not grow the store
-    _memo_put(store, 5, "5b", cap=4)
-    assert len(store) == 4 and store[5] == "5b"
+    from web_maxiv_hdbppviewer_spark.cache import ARTIFACT_CAP, SessionArtifacts
+
+    reg = SessionArtifacts()
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-dead"))
+    n = ARTIFACT_CAP + 3
+    for i in range(n):
+        reg.get_or_build(fake, "k", i, lambda i=i: str(i))
+    live = [i for i in range(n) if reg.peek(fake, "k", i) is not None]
+    assert live == list(range(3, n))  # oldest evicted, newest kept
+    # getting an existing key again must not grow the store or rebuild
+    assert reg.get_or_build(fake, "k", 5, lambda: "5b") == "5"
+    assert len([i for i in range(n) if reg.peek(fake, "k", i)]) == ARTIFACT_CAP
+    assert len(reg.builds()) == n
+
+    # a new applicationId drops the dead session's entries and log
+    sc = spark.sparkContext
+    first = reg.get_or_build(
+        spark, "ckpt", 0,
+        lambda: spark.range(64, numPartitions=2).localCheckpoint(),
+    )
+    assert [k for k, _, _ in reg.builds()] == ["ckpt"]
+
+    # evicting a checkpointed frame frees its blocks
+    def cached_rdds():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    rdd_id = first._jdf.queryExecution().analyzed().rdd().id()
+    assert rdd_id in cached_rdds()
+    for i in range(1, ARTIFACT_CAP + 1):
+        reg.get_or_build(spark, "ckpt", i, lambda: spark.range(1).localCheckpoint())
+    assert reg.peek(spark, "ckpt", 0) is None
+    assert rdd_id not in cached_rdds()
+
+    # the fake session's entries were dropped, not parked: it rebuilds
+    assert reg.get_or_build(fake, "k", n - 1, lambda: "rebuilt") == "rebuilt"
 
 
 def test_emb_scored_pairs_bound_is_lossless_for_consumers(spark):

@@ -48,7 +48,7 @@ def word_kgrams(tokens: Column, k: int) -> Column:
     Deliberately NOT k-1 chained zip_with lambdas (the pre-r13 shape):
     nested lambda variables defeat Catalyst's semanticHash
     normalization, so every call produced a fresh hash and the
-    fuzzy-linkage session memo (_FUZZY_GRAM_CACHE) could never hit
+    fuzzy-linkage session memo ("fuzzy_gram_idx") could never hit
     across calls - a single top-level lambda normalizes (verified: the
     bigram zip_with memo-hits; the chained form re-keyed per call).
     Output strings are byte-identical to the chained form."""

@@ -46,6 +46,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import artifacts
 from ..functions.texthash import (
     hashed_word_kgrams,
     md5_int60,
@@ -119,59 +120,30 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # checkpointed RDD scans keep AQE's runtime shuffle statistics intact.
 
 
-#: Session-scoped memo of materialized shingle-array tables, keyed by the
-#: SEMANTIC hash of the (un-checkpointed) plan: the bench/server session runs
-#: several dedup families (ngram, minhash, clusters) over the same corpus and
-#: each needs the same corpus-linear materialization - without the memo every
-#: query rebuilds it (measured 7.8 s of a 10.3 s minhash run at sf0.1). This
-#: is the "shared materialized intermediate" of a warehouse pipeline, scoped
-#: to the driver process. Entries are dropped when their SparkSession dies.
-#: Caveat (documented contract): the key is the logical plan, so overwriting
-#: the underlying files at the same path within one session returns stale
-#: arrays - call clear_dedup_caches() after rewriting a corpus in place.
-_SHINGLE_CACHE: list[tuple[int, DataFrame, DataFrame]] = []
-#: Same memo pattern for the (tiny) verified near-dup pair tables: the
-#: cluster query consumes exactly the pair table the pair query declares,
-#: so one session computes the prefix-join + verification once.
-_PAIR_CACHE: list[tuple[int, DataFrame, DataFrame]] = []
+def _memoized_checkpoint(kind: str, plan: DataFrame) -> DataFrame:
+    """localCheckpoint ``plan`` once per session per semantic plan, as a
+    ``kind`` entry of the session-artifact registry.
 
-#: fuzzy-linkage 5-gram posting index + its df-capped projection
-#: (fuzzy_pairs) - five consumers share each per session
-_FUZZY_GRAM_CACHE: list[tuple[int, DataFrame, DataFrame]] = []
-_FUZZY_RARE_CACHE: list[tuple[int, DataFrame, DataFrame]] = []
-_MEMO_MAX = 4
-
-
-def clear_dedup_caches() -> None:
-    _SHINGLE_CACHE.clear()
-    _PAIR_CACHE.clear()
-    _FUZZY_GRAM_CACHE.clear()
-    _FUZZY_RARE_CACHE.clear()
-    # the PCA gram-kernel memo lives with its operator but is cleared by
-    # the same corpus-rewrite escape hatch (import here: pca imports this
-    # module's _memoized_checkpoint, so the reverse import must be lazy)
-    from . import pca
-
-    pca._GRAM_CACHE.clear()
-
-
-def _memoized_checkpoint(cache: list, plan: DataFrame) -> DataFrame:
-    """localCheckpoint ``plan`` once per session per semantic plan.
-
-    Keyed by Catalyst's semantic hash (+ a full sameSemantics check on hash
-    hits); entries from a different/stopped SparkSession never match."""
-    sem = plan.semanticHash()
-    for h, p, res in cache:
-        if (
-            h == sem
-            and res.sparkSession is plan.sparkSession
-            and plan.sameSemantics(p)
-        ):
-            return res
-    res = plan.localCheckpoint()
-    cache.append((sem, plan, res))
-    del cache[:-_MEMO_MAX]
-    return res
+    Session-scoped memo of materialized intermediates keyed by the SEMANTIC
+    hash of the (un-checkpointed) plan: the bench/server session runs
+    several dedup families (ngram, minhash, clusters) over the same corpus
+    and each needs the same corpus-linear shingle materialization - without
+    the memo every query rebuilds it (measured 7.8 s of a 10.3 s minhash
+    run at sf0.1). A hash hit is served only if the stored origin plan
+    also passes ``sameSemantics``; a 32-bit hash collision checkpoints
+    unshared instead. Caveat (documented contract): the key is the logical
+    plan, so overwriting the underlying files at the same path within one
+    session returns stale blocks - call ``cache.artifacts.clear()`` after
+    rewriting a corpus in place."""
+    origin, res = artifacts.get_or_build(
+        plan.sparkSession,
+        kind,
+        plan.semanticHash(),
+        lambda: (plan, plan.localCheckpoint()),
+    )
+    if origin is plan or plan.sameSemantics(origin):
+        return res
+    return plan.localCheckpoint()
 
 
 def doc_shingle_arrays(
@@ -216,7 +188,7 @@ def doc_shingle_arrays(
             F.count(F.lit(1)).alias("n"),
         )
     )
-    return _memoized_checkpoint(_SHINGLE_CACHE, docs)
+    return _memoized_checkpoint("shingle_idx", docs)
 
 
 #: Slack for float threshold comparisons in EXACT filters: double rounding
@@ -331,7 +303,7 @@ def ngram_jaccard_pairs(
     pairs = _verify_pairs(docs, cands).where(F.col("jaccard") >= min_jaccard)
     # |pairs| ~ |true near-dups| - tiny; memoized so the pair query and the
     # cluster query share one prefix-join + verification per session
-    return _memoized_checkpoint(_PAIR_CACHE, pairs)
+    return _memoized_checkpoint("pair_table", pairs)
 
 
 def minhash_signatures(
@@ -672,11 +644,15 @@ def contamination_overlap(
     MAP-SIDE before any exchange (optimization r20, guide SS2.3 - the
     doc_shingle_arrays discipline: every exchange in the chain moves
     int64s, never k-word gram strings; the bloom variant's oracle
-    already certifies the 60-bit key adds no collision inflation, and
-    n_shingles still counts distinct STRINGS, so a within-doc hash
+    shows the 60-bit key adds no collision inflation on the shipped
+    corpus, and n_shingles still counts distinct STRINGS, so a within-doc hash
     collision cannot shrink it). At 100 TB the standard production
     refinement is a bloom filter on the train shingle set broadcast to
-    the eval side; the join below is the exact form of that check.
+    the eval side. The join below is that check without the bloom's
+    false positives, but it is exact only up to 60-bit md5 collisions: a
+    collision between an eval gram and a different train gram counts a
+    shared shingle that is not there. Oracle parity rules such
+    collisions out for the shipped corpus only, not in general.
     """
     ev_grams = eval_docs.select(
         F.col(id_col).alias("id"),
@@ -1242,7 +1218,7 @@ def fuzzy_pairs(
     # are session-memoized localCheckpoints (the shingle-index idiom) -
     # without this the explode and the df aggregation replay per consumer
     grams = _memoized_checkpoint(
-        _FUZZY_GRAM_CACHE,
+        "fuzzy_gram_idx",
         base.select(
             "id",
             "len",
@@ -1256,7 +1232,7 @@ def fuzzy_pairs(
         ),
     )
     rare = _memoized_checkpoint(
-        _FUZZY_RARE_CACHE,
+        "fuzzy_rare_idx",
         grams.join(
             grams.groupBy("h").agg(F.count(F.lit(1)).alias("gdf"))
             .where(F.col("gdf") <= df_cap)

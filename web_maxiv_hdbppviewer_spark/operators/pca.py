@@ -49,13 +49,6 @@ def quantized_coords(df: DataFrame, id_col: str = "vec_id",
     )
 
 
-#: session memo for the partial-Gram kernel output (the (semanticHash,
-#: plan, checkpointed) triple list dedup._memoized_checkpoint manages):
-#: sim_pca and sim_pca_gram share one kernel pass per (session, corpus)
-#: instead of re-running it per call. Cleared by
-#: dedup.clear_dedup_caches like every other memo store.
-_GRAM_CACHE: list = []
-
 #: hi/lo split radix for second-moment sums: products |q_a * q_b| < 2^58
 #: split as p = (p DIV 2^26) * 2^26 + (p % 2^26) - truncating division,
 #: identical in Spark (DIV/%) and DuckDB (///%) including negatives
@@ -177,10 +170,10 @@ def moment_sums_gram(df: DataFrame, id_col: str = "vec_id",
 
     # the mapInPandas plan semanticHash-canonicalizes across calls
     # (probe-verified: same hash + sameSemantics for fresh closures), so
-    # the session memo makes the kernel a once-per-(session, corpus)
-    # cost shared by sim_pca and sim_pca_gram
+    # the session memo (registry kind "pca_gram") makes the kernel a
+    # once-per-(session, corpus) cost shared by sim_pca and sim_pca_gram
     parts = _memoized_checkpoint(
-        _GRAM_CACHE,
+        "pca_gram",
         quantized.mapInPandas(gram, "i int, j int, s_hi long, s_lo long"),
     )
     first = (

@@ -240,9 +240,6 @@ def _hyperplanes(n: int, dim: int) -> list[list[int]]:
 
 HYPERPLANES = _hyperplanes(HYPERPLANE_DIM, HYPERPLANE_DIM)
 
-#: session memo for the materialized plane-dot table (see near_dup_pairs)
-_DOTS_CACHE: list = []
-
 
 def plane_dot(vec_col, plane_idx: int):
     """ROUND(dot(vec, HYPERPLANES[plane_idx]), 6) as a left-to-right chain
@@ -630,7 +627,7 @@ def near_dup_pairs(
     # checkpoint is (id, 64 doubles) - corpus-linear and tiny.
     from .dedup import _memoized_checkpoint
 
-    dotted = _memoized_checkpoint(_DOTS_CACHE, dotted)
+    dotted = _memoized_checkpoint("dots_baseline", dotted)
     if bands is None:
         # Geometry count runs on the MEMOIZED checkpoint, not the raw
         # input (ADVICE r18): with_norms never drops rows, so the counts
@@ -1660,13 +1657,6 @@ def _quantized_vec(vec_col: str):
     )
 
 
-#: session memo for the (codebook-sized) class-centroid table - BOTH
-#: centroid queries consume the identical build, and the checkpointed
-#: frame is labels x dim longs (the safe, tiny shape - NOT the wide
-#: gram-stream shape that regressed text_boilerplate in-battery)
-_CENTROID_CACHE: list = []
-
-
 def class_centroids(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1693,8 +1683,11 @@ def class_centroids(
     (640 longs for 10 classes x 64 dims), not the corpus; the ordered
     array re-assembly sorts n_labels tiny structs. The output is
     codebook-sized (labels x dim), broadcastable by construction, and
-    session-memoized (localCheckpoint) because the confusion and
-    dispersion queries both consume the identical build.
+    session-memoized (localCheckpoint, registry kind
+    "centroid_codebook") because the confusion and dispersion queries
+    both consume the identical build. The checkpointed frame is labels x
+    dim longs (the safe, tiny shape - NOT the wide gram-stream shape that
+    regressed text_boilerplate in-battery).
     """
     from .dedup import _memoized_checkpoint
 
@@ -1732,7 +1725,7 @@ def class_centroids(
             ).alias("cvec")
         )
     )
-    return _memoized_checkpoint(_CENTROID_CACHE, cents)
+    return _memoized_checkpoint("centroid_codebook", cents)
 
 
 def _sq_dist(qvec, cvec):

@@ -828,10 +828,6 @@ def tfidf_keywords(
     )
 
 
-#: session memo of materialized TF-IDF posting lists (semantic-hash keyed)
-_TFIDF_CACHE: list = []
-
-
 def tfidf_term_weights(
     df: DataFrame,
     gram_k: int = 3,
@@ -881,7 +877,7 @@ def tfidf_term_weights(
             .alias("w"),
         )
     )
-    return _memoized_checkpoint(_TFIDF_CACHE, plan)
+    return _memoized_checkpoint("tfidf_stats", plan)
 
 
 def tfidf_cosine_pairs(
@@ -1041,12 +1037,6 @@ def _winnow_marks(w):
     )
 
 
-#: session cache for the winnowed-marks materialization (keyed by
-#: Catalyst semantic hash via dedup._memoized_checkpoint): text_winnow
-#: and dedup_winnow share ONE selection pass per corpus per session
-_WINNOW_MARKS_CACHE: list = []
-
-
 def winnow_marked(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1056,8 +1046,9 @@ def winnow_marked(
 ) -> DataFrame:
     """(id_col, n_grams, marks = array<struct(p, h, sel)>): the
     robust-winnowing selections, localCheckpoint-memoized per session
-    (the doc_shingle_arrays discipline) so the O(n*w) selection pass
-    runs once however many consumers read it."""
+    (the doc_shingle_arrays discipline; registry kind "winnow_marks") so
+    text_winnow and dedup_winnow share ONE O(n*w) selection pass per
+    corpus per session."""
     from .dedup import _memoized_checkpoint
 
     base = _winnow_base(df, id_col, text_col, k, w)
@@ -1066,7 +1057,7 @@ def winnow_marked(
         F.size("hs").cast("long").alias("n_grams"),
         _winnow_marks(w).alias("marks"),
     )
-    return _memoized_checkpoint(_WINNOW_MARKS_CACHE, plan)
+    return _memoized_checkpoint("winnow_marks", plan)
 
 
 def winnow_fingerprints(

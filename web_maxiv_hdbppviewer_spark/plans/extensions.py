@@ -18,9 +18,10 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from ..cache import artifacts
 from ..operators import bpe, dedup, multimodal, sampling, similarity, textquality
 from ..sources.tables import load_tables
 
@@ -76,35 +77,6 @@ def _emb(spark, sf_dir):
     return load_tables(spark, sf_dir)["embeddings"]
 
 
-def _session_key(spark, sf_dir):
-    """Memo key for SparkSession-BOUND artifacts (lazy localCheckpoint
-    frames): (applicationId, sf_dir), so a second SparkSession created in
-    the same process can never read frames bound to a stopped
-    predecessor's checkpoints (ADVICE r16). Driver-DATA memos
-    (_IVFPQ_MEMO etc. - plain Python lists) survive sessions safely and
-    stay keyed by sf_dir alone."""
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-#: LRU cap for the dict-shaped session memo stores (VERDICT r19 #3 -
-#: the operators/dedup._MEMO_MAX discipline applied here): one process
-#: serving multiple sf_dirs/sessions must not retain checkpoints
-#: unboundedly. 4 matches the list-store cap; per-method stores hold
-#: (methods x sessions) entries, so callers with a composite key pass a
-#: proportionally larger cap.
-_MEMO_MAX = 4
-
-
-def _memo_put(store: dict, key, value, cap: int = _MEMO_MAX):
-    """Insert into a memo dict, evicting oldest entries beyond ``cap``
-    (dict preserves insertion order; re-inserting an existing key keeps
-    its old position - fine, eviction is a bound, not a usage ranking)."""
-    store[key] = value
-    while len(store) > cap:
-        store.pop(next(iter(store)))
-    return value
-
-
 # --- deduplication -------------------------------------------------------
 
 
@@ -118,25 +90,16 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-#: Session-bound verified-pair memos for the approximate dedup methods
-#: (optimization r19 - the _ann_scored discipline applied to the dedup
-#: family): each method's full pipeline (shingle/fingerprint stage,
-#: banded candidate join, exact verification) runs ONCE per
-#: (session, sf_dir) and every battery consumer reads the one
-#: lazily-checkpointed pair frame - previously dedup_minhash_lsh /
-#: dedup_simhash / dedup_winnow each ran their pipeline AND
-#: dedup_compare re-ran all three from scratch (pipe_dump_dedup a
-#: fourth copy of the minhash one). Values bit-identical: same
-#: operator call, same threshold constants. Registered in bench.py's
-#: _memo_sizes ("dedup_method_pairs") for first-touch attribution.
-_DEDUP_PAIRS_MEMO: dict = {}
-
-
 def _method_pairs(spark, sf_dir, method):
-    """Session-memoized verified near-dup pair frame for one
-    approximate method (full output columns, unordered)."""
-    key = (*_session_key(spark, sf_dir), method)
-    if key not in _DEDUP_PAIRS_MEMO:
+    """Verified near-dup pair frame for one approximate dedup method
+    (full output columns, unordered), built once per session (registry
+    kind "dedup_method_pairs", optimization r19): each method's full
+    pipeline (shingle/fingerprint stage, banded candidate join, exact
+    verification) runs ONCE and dedup_compare / pipe_dump_dedup read the
+    same lazily-checkpointed frame. Values bit-identical: same operator
+    call, same threshold constants."""
+
+    def build():
         docs = _docs(spark, sf_dir)
         if method == "minhash_lsh":
             df = dedup.minhash_dedup_pairs(docs, JACCARD_THRESHOLD)
@@ -146,14 +109,11 @@ def _method_pairs(spark, sf_dir, method):
             df = textquality.winnow_matches(docs)
         else:
             raise ValueError(f"unknown dedup method {method!r}")
-        # cap = 3 methods x _MEMO_MAX sessions (the key carries the method)
-        _memo_put(
-            _DEDUP_PAIRS_MEMO,
-            key,
-            df.localCheckpoint(eager=False),
-            cap=3 * _MEMO_MAX,
-        )
-    return _DEDUP_PAIRS_MEMO[key]
+        return df.localCheckpoint(eager=False)
+
+    return artifacts.get_or_build(
+        spark, "dedup_method_pairs", (sf_dir, method), build
+    )
 
 
 def dedup_minhash_lsh(spark, sf_dir):
@@ -176,8 +136,7 @@ def dedup_simhash(spark, sf_dir):
 #: sim_knn_graph derive their outputs by filter - previously each ran
 #: the full candidate join + verification. Geometry pinned 8x8 (the
 #: oracle-replayed bands all three consumers already shared).
-#: Registered in bench.py's _memo_sizes ("emb_scored_pairs").
-_EMB_PAIRS_MEMO: dict = {}
+#: Registry kind "emb_scored_pairs".
 
 
 def _emb_scored_pairs(spark, sf_dir):
@@ -196,8 +155,8 @@ def _emb_scored_pairs(spark, sf_dir):
     top-k by a total order is invariant under removing rows ranked
     below k at both endpoints. Size bound: |threshold pairs| +
     2*KNN_K*|vectors| rows - corpus-linear, never candidate-quadratic."""
-    key = _session_key(spark, sf_dir)
-    if key not in _EMB_PAIRS_MEMO:
+
+    def build():
         from pyspark.sql.window import Window
 
         scored = similarity.near_dup_pairs(
@@ -223,10 +182,9 @@ def _emb_scored_pairs(spark, sf_dir):
             )
             .select("id_a", "id_b", "cos_r")
         )
-        _memo_put(
-            _EMB_PAIRS_MEMO, key, bounded.localCheckpoint(eager=False)
-        )
-    return _EMB_PAIRS_MEMO[key]
+        return bounded.localCheckpoint(eager=False)
+
+    return artifacts.get_or_build(spark, "emb_scored_pairs", sf_dir, build)
 
 
 def dedup_embedding(spark, sf_dir):
@@ -521,9 +479,7 @@ def sim_mips(spark, sf_dir):
 #: sim_topk_pq / sim_ann_ivfpq, sim_ivf_probe_sweep and sim_ann_compare
 #: all rank the SAME lazily-checkpointed frame with topk_per_query (the
 #: one ranking-tail definition), so the compare table stops re-running
-#: four candidate generators from scratch. Registered in bench.py's
-#: _memo_sizes ("ann_scored") for first-touch attribution.
-_ANN_SCORED_MEMO: dict = {}
+#: four candidate generators from scratch. Registry kind "ann_scored".
 
 
 def _ann_scored(spark, sf_dir, method):
@@ -543,12 +499,8 @@ def _ann_scored(spark, sf_dir, method):
     - "lsh":   ann_scored_lsh at ANN_NBITS.
     - "pq":    adc_scored_pq with the memoized _pq_codebooks.
     """
-    # FLAT key (session, sf_dir, method) - bench.py's first-touch
-    # attribution diffs the store's value identities, so each method's
-    # frame must be its own top-level entry
-    key = (*_session_key(spark, sf_dir), method)
-    store = _ANN_SCORED_MEMO
-    if key not in store:
+
+    def build():
         emb = _emb(spark, sf_dir)
         if method == "exact":
             df = similarity.topk_cosine(
@@ -572,8 +524,9 @@ def _ann_scored(spark, sf_dir, method):
             )
         else:
             raise ValueError(f"unknown ANN method {method!r}")
-        store[key] = df.localCheckpoint(eager=False)
-    return store[key]
+        return df.localCheckpoint(eager=False)
+
+    return artifacts.get_or_build(spark, "ann_scored", (sf_dir, method), build)
 
 
 def sim_ann_lsh(spark, sf_dir):
@@ -698,111 +651,113 @@ def text_lm_score(spark, sf_dir):
     return textquality.lm_bigram_scores(_docs(spark, sf_dir)).orderBy("id")
 
 
-#: learned merge tables per (sf_dir, n_merges): training is deterministic,
-#: so text_bpe_train and text_bpe_apply share one training run per session
-#: instead of each paying it again (merge lists are tiny driver values, no
-#: Spark state is cached). Whichever BPE query runs FIRST in a session pays
-#: training - since round 5 that is ONE word-count Spark job plus
-#: driver-side incremental merge learning (operators/bpe.py), ~1 s at
-#: sf0.1; bench.py additionally pre-trains in its warmup so no timed entry
-#: carries even that (the r4 bench charged a 32.6 s job-per-merge loop to
+#: learned merge tables per (sf_dir, n_merges) (registry kind
+#: "bpe_merges"): training is deterministic, so text_bpe_train and
+#: text_bpe_apply share one training run per session instead of each
+#: paying it again (merge lists are tiny driver values, no Spark state is
+#: cached). Whichever BPE query runs FIRST in a session pays training -
+#: since round 5 that is ONE word-count Spark job plus driver-side
+#: incremental merge learning (operators/bpe.py), ~1 s at sf0.1; bench.py
+#: additionally pre-trains in its warmup so no timed entry carries even
+#: that (the r4 bench charged a 32.6 s job-per-merge loop to
 #: text_bpe_apply - that loop is gone).
-_BPE_MERGE_MEMO: dict[tuple[str, int], list[tuple[int, str, str, int]]] = {}
-
-
 def _trained_merges(spark, sf_dir) -> list[tuple[int, str, str, int]]:
-    key = (sf_dir, bpe.N_MERGES)
-    if key not in _BPE_MERGE_MEMO:
-        _BPE_MERGE_MEMO[key] = [
+    return artifacts.get_or_build(
+        spark,
+        "bpe_merges",
+        (sf_dir, bpe.N_MERGES),
+        lambda: [
             (r["step"], r["lhs"], r["rhs"], r["n_pairs"])
             for r in bpe.train_bpe_merges(_docs(spark, sf_dir), bpe.N_MERGES)
             .orderBy("step")
             .collect()
-        ]
-    return _BPE_MERGE_MEMO[key]
-
-
-#: trained PQ codebooks per sf_dir - training is deterministic, so
-#: sim_topk_pq and sim_pq_recall share one training run per session (the
-#: same bounded-driver-value memo discipline as _BPE_MERGE_MEMO: plain
-#: rows, recreated as a DataFrame per call, no Spark state cached)
-_PQ_CODEBOOK_MEMO: dict[str, list] = {}
-
-
-def _pq_codebooks(spark, sf_dir):
-    if sf_dir not in _PQ_CODEBOOK_MEMO:
-        cb = similarity.train_pq_codebooks(_emb(spark, sf_dir))
-        _PQ_CODEBOOK_MEMO[sf_dir] = [
-            (int(r["m"]), int(r["cid"]), list(r["cv"])) for r in cb.collect()
-        ]
-    return spark.createDataFrame(
-        _PQ_CODEBOOK_MEMO[sf_dir], "m int, cid long, cv array<double>"
+        ],
     )
 
 
-#: base-corpus-trained codebooks for the append lifecycle (vec_id % 10
-#: != 3 training subset) - same bounded-row memo discipline; the
-#: per-call append/persist/reload/serve work stays UNmemoized, that IS
-#: the witnessed lifecycle
-_PQ_BASE_CODEBOOK_MEMO: dict[str, list] = {}
+def _codebook_rows(cb) -> list:
+    return [(int(r["m"]), int(r["cid"]), list(r["cv"])) for r in cb.collect()]
 
 
-def _pq_base_codebooks(spark, sf_dir):
-    if sf_dir not in _PQ_BASE_CODEBOOK_MEMO:
-        base_emb = _emb(spark, sf_dir).where(
-            ~(F.col("vec_id") % APPEND_MOD == APPEND_RESIDUE)
-        )
-        cb = similarity.train_pq_codebooks(base_emb)
-        _PQ_BASE_CODEBOOK_MEMO[sf_dir] = [
-            (int(r["m"]), int(r["cid"]), list(r["cv"])) for r in cb.collect()
-        ]
-    return spark.createDataFrame(
-        _PQ_BASE_CODEBOOK_MEMO[sf_dir], "m int, cid long, cv array<double>"
-    )
+def _centroid_rows(cents) -> list:
+    return [(int(r["cid"]), list(r["cvec"])) for r in cents.collect()]
 
 
-#: trained IVFPQ artifacts (coarse centroids + residual codebooks) per
-#: sf_dir - same bounded-row memo discipline; sim_ann_ivf_trained shares
-#: the coarse centroids (identical deterministic training)
-_IVFPQ_MEMO: dict[str, tuple[list, list]] = {}
+def _codebook_df(spark, rows):
+    return spark.createDataFrame(rows, "m int, cid long, cv array<double>")
 
 
-#: coarse-centroid memo for queries that need ONLY the trained quantizer
-#: cells (dedup_semantic): identical deterministic training to the IVFPQ
-#: coarse stage, so reuse those artifacts when the session already has
-#: them; otherwise train just the coarse stage (bounded: K rows collected)
-_COARSE_MEMO: dict[str, list] = {}
-
-
-def _coarse_centroids(spark, sf_dir):
-    if sf_dir in _IVFPQ_MEMO:
-        rows = _IVFPQ_MEMO[sf_dir][0]
-    else:
-        if sf_dir not in _COARSE_MEMO:
-            cb = similarity.train_ivf_centroids(
-                _emb(spark, sf_dir), IVF_CELLS, KMEANS_ITERS
-            )
-            _COARSE_MEMO[sf_dir] = [
-                (int(r["cid"]), list(r["cvec"])) for r in cb.collect()
-            ]
-        rows = _COARSE_MEMO[sf_dir]
+def _centroid_df(spark, rows):
     return spark.createDataFrame(rows, "cid long, cvec array<double>")
 
 
-def _ivfpq_artifacts(spark, sf_dir):
-    if sf_dir not in _IVFPQ_MEMO:
-        cents, rcb = similarity.train_ivfpq(
-            _emb(spark, sf_dir), IVF_CELLS, KMEANS_ITERS
-        )
-        _IVFPQ_MEMO[sf_dir] = (
-            [(int(r["cid"]), list(r["cvec"])) for r in cents.collect()],
-            [(int(r["m"]), int(r["cid"]), list(r["cv"])) for r in rcb.collect()],
-        )
-    cr, rr = _IVFPQ_MEMO[sf_dir]
-    return (
-        spark.createDataFrame(cr, "cid long, cvec array<double>"),
-        spark.createDataFrame(rr, "m int, cid long, cv array<double>"),
+#: trained PQ codebooks per sf_dir (registry kind "pq_codebooks") -
+#: training is deterministic, so sim_topk_pq and sim_pq_recall share one
+#: training run per session (the bpe_merges discipline: plain rows,
+#: recreated as a DataFrame per call, no Spark state cached)
+def _pq_codebooks(spark, sf_dir):
+    rows = artifacts.get_or_build(
+        spark,
+        "pq_codebooks",
+        sf_dir,
+        lambda: _codebook_rows(similarity.train_pq_codebooks(_emb(spark, sf_dir))),
     )
+    return _codebook_df(spark, rows)
+
+
+#: base-corpus-trained codebooks for the append lifecycle (vec_id % 10
+#: != 3 training subset; registry kind "pq_base_codebooks") - same
+#: bounded-row discipline; the per-call append/persist/reload/serve work
+#: stays UNmemoized, that IS the witnessed lifecycle
+def _pq_base_codebooks(spark, sf_dir):
+    def build():
+        base_emb = _emb(spark, sf_dir).where(
+            ~(F.col("vec_id") % APPEND_MOD == APPEND_RESIDUE)
+        )
+        return _codebook_rows(similarity.train_pq_codebooks(base_emb))
+
+    return _codebook_df(
+        spark, artifacts.get_or_build(spark, "pq_base_codebooks", sf_dir, build)
+    )
+
+
+#: coarse centroids for queries that need ONLY the trained quantizer
+#: cells (dedup_semantic; registry kind "coarse_centroids"): identical
+#: deterministic training to the IVFPQ coarse stage, so reuse the
+#: "ivfpq_artifacts" entry when the session already has it; otherwise
+#: train just the coarse stage (bounded: K rows collected)
+def _coarse_centroids(spark, sf_dir):
+    ivfpq = artifacts.peek(spark, "ivfpq_artifacts", sf_dir)
+    if ivfpq is not None:
+        rows = ivfpq[0]
+    else:
+        rows = artifacts.get_or_build(
+            spark,
+            "coarse_centroids",
+            sf_dir,
+            lambda: _centroid_rows(
+                similarity.train_ivf_centroids(
+                    _emb(spark, sf_dir), IVF_CELLS, KMEANS_ITERS
+                )
+            ),
+        )
+    return _centroid_df(spark, rows)
+
+
+def _ivfpq_rows(vectors, **cols):
+    cents, rcb = similarity.train_ivfpq(vectors, IVF_CELLS, KMEANS_ITERS, **cols)
+    return _centroid_rows(cents), _codebook_rows(rcb)
+
+
+#: trained IVFPQ artifacts (coarse centroids + residual codebooks) per
+#: sf_dir (registry kind "ivfpq_artifacts") - same bounded-row
+#: discipline; sim_ann_ivf_trained shares the coarse centroids
+#: (identical deterministic training)
+def _ivfpq_artifacts(spark, sf_dir):
+    cr, rr = artifacts.get_or_build(
+        spark, "ivfpq_artifacts", sf_dir, lambda: _ivfpq_rows(_emb(spark, sf_dir))
+    )
+    return _centroid_df(spark, cr), _codebook_df(spark, rr)
 
 
 def sim_quantize(spark, sf_dir):
@@ -1209,12 +1164,16 @@ def _chunk_vec_store(spark, sf_dir):
     both. The rank is the DISTRIBUTED global rank (operators/rank.py) -
     never a partition-less window. Session-memoized (the shingle-index
     discipline): the rank materializes eagerly at build time, so every
-    caller after the first reads the one checkpointed store."""
+    caller after the first reads the one checkpointed store (registry
+    kind "chunk_vec_store")."""
+    return artifacts.get_or_build(
+        spark, "chunk_vec_store", sf_dir, lambda: _build_chunk_vec_store(spark, sf_dir)
+    )
+
+
+def _build_chunk_vec_store(spark, sf_dir):
     from ..operators.rank import global_rank
 
-    key = _session_key(spark, sf_dir)
-    if key in _CHUNK_STORE_MEMO:
-        return _CHUNK_STORE_MEMO[key]
     chunks = _chunk_windows(_docs(spark, sf_dir)).select("doc_id", "chunk_idx")
     ranked = global_rank(chunks, ["doc_id", "chunk_idx"], out_col="rank")
     emb = _emb(spark, sf_dir).select(
@@ -1235,41 +1194,28 @@ def _chunk_vec_store(spark, sf_dir):
         )
         / F.lit(512.0),
     )
-    store = (
+    return (
         ranked.select("doc_id", "chunk_idx", (F.col("rank") - 1).alias("rid"))
         .join(emb, "doc_id")
         .select("rid", "doc_id", "chunk_idx", cvec.alias("cvec"))
         .localCheckpoint(eager=False)
     )
-    _CHUNK_STORE_MEMO[key] = store
-    return store
-
-
-_CHUNK_STORE_MEMO: dict = {}
-_CHUNK_IVFPQ_MEMO: dict = {}
 
 
 def _chunk_ivfpq_artifacts(spark, sf_dir):
     """Chunk-store IVFPQ artifacts (coarse centroids + residual
-    codebooks), memoized like _ivfpq_artifacts - the chunk store is a
-    different vector population, so it trains its own index."""
-    if sf_dir not in _CHUNK_IVFPQ_MEMO:
-        cents, rcb = similarity.train_ivfpq(
-            _chunk_vec_store(spark, sf_dir),
-            IVF_CELLS,
-            KMEANS_ITERS,
-            id_col="rid",
-            vec_col="cvec",
-        )
-        _CHUNK_IVFPQ_MEMO[sf_dir] = (
-            [(int(r["cid"]), list(r["cvec"])) for r in cents.collect()],
-            [(int(r["m"]), int(r["cid"]), list(r["cv"])) for r in rcb.collect()],
-        )
-    cr, rr = _CHUNK_IVFPQ_MEMO[sf_dir]
-    return (
-        spark.createDataFrame(cr, "cid long, cvec array<double>"),
-        spark.createDataFrame(rr, "m int, cid long, cv array<double>"),
+    codebooks; registry kind "chunk_ivfpq_artifacts"), built like
+    _ivfpq_artifacts - the chunk store is a different vector population,
+    so it trains its own index."""
+    cr, rr = artifacts.get_or_build(
+        spark,
+        "chunk_ivfpq_artifacts",
+        sf_dir,
+        lambda: _ivfpq_rows(
+            _chunk_vec_store(spark, sf_dir), id_col="rid", vec_col="cvec"
+        ),
     )
+    return _centroid_df(spark, cr), _codebook_df(spark, rr)
 
 
 #: Session-bound scored/pooled frame memos for the CHUNK-grain ANN
@@ -1283,9 +1229,7 @@ def _chunk_ivfpq_artifacts(spark, sf_dir):
 #: equivalence the sweep oracles already use). The nprobe=IVF_NPROBE
 #: parent-document pooling is likewise computed once (the two pooling
 #: windows are identical in sim_chunk_ann and the recall's ANN leg).
-#: Registered in bench.py's _memo_sizes for first-touch attribution.
-_CHUNK_ADC_MEMO: dict = {}
-_CHUNK_ANN_POOLED_MEMO: dict = {}
+#: Registry kinds "chunk_adc_scored" and "chunk_ann_pooled".
 
 
 def _chunk_adc_scored(spark, sf_dir):
@@ -1293,26 +1237,23 @@ def _chunk_adc_scored(spark, sf_dir):
     acos_r, cell_rank) at max(IVF_SWEEP_PROBES) - the _ann_scored
     discipline at the chunk grain; every smaller nprobe is a pure
     cell_rank filter over this one lazily-checkpointed frame."""
-    key = _session_key(spark, sf_dir)
-    if key not in _CHUNK_ADC_MEMO:
+
+    def build():
         store = _chunk_vec_store(spark, sf_dir)
         cents, rcb = _chunk_ivfpq_artifacts(spark, sf_dir)
-        _memo_put(
-            _CHUNK_ADC_MEMO,
-            key,
-            similarity.ann_adc_ivfpq(
-                store,
-                QUERY_IDS_BELOW,
-                IVF_CELLS,
-                max(IVF_SWEEP_PROBES),
-                KMEANS_ITERS,
-                id_col="rid",
-                vec_col="cvec",
-                centroids=cents,
-                codebooks=rcb,
-            ).localCheckpoint(eager=False),
-        )
-    return _CHUNK_ADC_MEMO[key]
+        return similarity.ann_adc_ivfpq(
+            store,
+            QUERY_IDS_BELOW,
+            IVF_CELLS,
+            max(IVF_SWEEP_PROBES),
+            KMEANS_ITERS,
+            id_col="rid",
+            vec_col="cvec",
+            centroids=cents,
+            codebooks=rcb,
+        ).localCheckpoint(eager=False)
+
+    return artifacts.get_or_build(spark, "chunk_adc_scored", sf_dir, build)
 
 
 def _chunk_ann_pooled(spark, sf_dir):
@@ -1323,8 +1264,8 @@ def _chunk_ann_pooled(spark, sf_dir):
     from scratch. Values bit-identical to the pre-memo
     ann_topk_ivfpq(..., nprobe=IVF_NPROBE) wrapper: same scored pass
     (cell_rank <= nprobe filter), same ranking tail, same windows."""
-    key = _session_key(spark, sf_dir)
-    if key not in _CHUNK_ANN_POOLED_MEMO:
+
+    def build():
         store = _chunk_vec_store(spark, sf_dir)
         ann = similarity.topk_per_query(
             _chunk_adc_scored(spark, sf_dir)
@@ -1333,16 +1274,13 @@ def _chunk_ann_pooled(spark, sf_dir):
             CHUNK_ANN_CAND_K,
             "acos_r",
         )
-        _memo_put(
-            _CHUNK_ANN_POOLED_MEMO,
-            key,
-            _pool_parent_docs(
-                ann.select("q_id", "cand_id", "acos_r"),
-                store.select("rid", "doc_id", "chunk_idx"),
-                "acos_r",
-            ).localCheckpoint(eager=False),
-        )
-    return _CHUNK_ANN_POOLED_MEMO[key]
+        return _pool_parent_docs(
+            ann.select("q_id", "cand_id", "acos_r"),
+            store.select("rid", "doc_id", "chunk_idx"),
+            "acos_r",
+        ).localCheckpoint(eager=False)
+
+    return artifacts.get_or_build(spark, "chunk_ann_pooled", sf_dir, build)
 
 
 def sim_chunk_ann(spark, sf_dir):
@@ -1419,30 +1357,29 @@ def _pool_parent_docs(scored, cmap, score_col):
     )
 
 
-_CHUNK_EXACT_DOCS_MEMO: dict = {}
-
-
 def _chunk_exact_docs(spark, sf_dir):
     """The exact float-cosine parent-document top-5 leg (q_id, cand_id),
     session-memoized per (session, sf_dir): the |queries| x |chunks|
     broadcast cosine pooled with the shared max-pool windows - computed
     once and read by both sim_chunk_ann_recall and
-    sim_chunk_probe_sweep (r17). Bounded: |queries| x 5 rows."""
-    key = _session_key(spark, sf_dir)
-    if key not in _CHUNK_EXACT_DOCS_MEMO:
+    sim_chunk_probe_sweep (r17). Bounded: |queries| x 5 rows. Registry
+    kind "chunk_exact_docs"."""
+
+    def build():
         store = _chunk_vec_store(spark, sf_dir)
         cmap = store.select("rid", "doc_id", "chunk_idx")
         exact = similarity.topk_cosine(
             store, 1 << 40, QUERY_IDS_BELOW, id_col="rid", vec_col="cvec"
         )
-        _CHUNK_EXACT_DOCS_MEMO[key] = (
+        return (
             _pool_parent_docs(
                 exact.select("q_id", "cand_id", "cos_r"), cmap, "cos_r"
             )
             .select("q_id", F.col("cand_doc").alias("cand_id"))
             .localCheckpoint(eager=False)
         )
-    return _CHUNK_EXACT_DOCS_MEMO[key]
+
+    return artifacts.get_or_build(spark, "chunk_exact_docs", sf_dir, build)
 
 
 def sim_chunk_ann_recall(spark, sf_dir):
@@ -2993,28 +2930,17 @@ def stream_restart(spark, sf_dir):
 #: streaming servers (stream_classify / stream_curation), which each
 #: re-ran the identical deterministic training aggregation + two
 #: bounded collects (optimization r19, guide §1.2). Plain driver data
-#: (the _BPE_MERGE_MEMO class - survives sessions safely), bounded by
-#: the vocabulary cut x |labels|. Registered in bench.py's _memo_sizes
-#: ("nb_artifacts") for first-touch attribution.
-_NB_ARTIFACTS_MEMO: dict = {}
-
-
+#: (the bpe_merges class), bounded by the vocabulary cut x |labels|.
+#: Registry kind "nb_artifacts".
 def _nb_artifacts(spark, sf_dir):
     from ..operators import nbayes
 
-    key = (sf_dir, NB_MIN_COUNT)
-    if key not in _NB_ARTIFACTS_MEMO:
-        value = nbayes.nb_artifacts(_docs(spark, sf_dir), NB_MIN_COUNT)
-        # session-unkeyed on purpose: the value is fully-collected DRIVER
-        # data (model dict + stats row), which survives sessions safely.
-        # Guard the assumption (ADVICE r19): a future change returning a
-        # DataFrame/lazy checkpoint would silently violate the r16
-        # session-binding rule the frame memos follow.
-        assert not any(
-            isinstance(v, DataFrame) for v in value
-        ), "_nb_artifacts must memoize driver data, not session-bound frames"
-        _memo_put(_NB_ARTIFACTS_MEMO, key, value)
-    return _NB_ARTIFACTS_MEMO[key]
+    return artifacts.get_or_build(
+        spark,
+        "nb_artifacts",
+        (sf_dir, NB_MIN_COUNT),
+        lambda: nbayes.nb_artifacts(_docs(spark, sf_dir), NB_MIN_COUNT),
+    )
 
 
 def stream_classify(spark, sf_dir):
@@ -3852,19 +3778,20 @@ def pipe_curation_trained(spark, sf_dir):
     return _funnel_report(spark, _trained_stages(spark, sf_dir))
 
 
-_TRAINED_STAGES_MEMO: dict = {}
-
-
 def _trained_stages(spark, sf_dir):
     """pipe_curation_trained's stage list [(name, in_frame, kept_frame)]
     - the FILTER-FIRST order of the trained funnel (nb_lang -> lm_ppl ->
     exact_dedup -> near_dup), session-memoized per (session, sf_dir)
     like _refinedweb_stages so the trained report and the filter-order
     ablation (pipe_stage_order) read one materialization. Frames are
-    lazy localCheckpoint id-frames (bytes per doc)."""
-    key = _session_key(spark, sf_dir)
-    if key in _TRAINED_STAGES_MEMO:
-        return _TRAINED_STAGES_MEMO[key]
+    lazy localCheckpoint id-frames (bytes per doc). Registry kind
+    "trained_stages"."""
+    return artifacts.get_or_build(
+        spark, "trained_stages", sf_dir, lambda: _build_trained_stages(spark, sf_dir)
+    )
+
+
+def _build_trained_stages(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     total = docs.select("doc_id")
     lm, s1_ids = _curation_scores(spark, sf_dir)
@@ -3898,13 +3825,12 @@ def _trained_stages(spark, sf_dir):
     s4_ids = s3_ids.join(dominated, "doc_id", "left_anti").localCheckpoint(
         eager=False
     )
-    _TRAINED_STAGES_MEMO[key] = [
+    return [
         ("nb_lang", total, s1_ids),
         ("lm_ppl", s1_ids, s2_ids),
         ("exact_dedup", s2_ids, s3_ids),
         ("near_dup", s3_ids, s4_ids),
     ]
-    return _TRAINED_STAGES_MEMO[key]
 
 
 def _dedup_first_stages(spark, sf_dir):
@@ -4092,9 +4018,6 @@ def pipe_dump_dedup(spark, sf_dir):
     )
 
 
-_NB_PREDS_MEMO: dict = {}
-
-
 def _nb_preds(spark, sf_dir):
     """The trained NB classifier's prediction frame (doc_id, lang, pred,
     score_fp), session-memoized per (session, sf_dir) - the r16
@@ -4104,18 +4027,17 @@ def _nb_preds(spark, sf_dir):
     nb_classify plan (each re-collecting the bounded stats and
     re-scoring the corpus, ~2 s per query at sf0.1); one lazy
     localCheckpoint pays it once per session. Memory is bytes per doc
-    (two strings + one int64)."""
+    (two strings + one int64). Registry kind "nb_preds"."""
     from ..operators import nbayes
 
-    key = _session_key(spark, sf_dir)
-    if key not in _NB_PREDS_MEMO:
-        _NB_PREDS_MEMO[key] = nbayes.nb_classify(
+    return artifacts.get_or_build(
+        spark,
+        "nb_preds",
+        sf_dir,
+        lambda: nbayes.nb_classify(
             _docs(spark, sf_dir), NB_MIN_COUNT
-        ).localCheckpoint(eager=False)
-    return _NB_PREDS_MEMO[key]
-
-
-_LR_PREDS_MEMO: dict = {}
+        ).localCheckpoint(eager=False),
+    )
 
 
 def _lr_preds(spark, sf_dir):
@@ -4123,12 +4045,15 @@ def _lr_preds(spark, sf_dir):
     (doc_id, lang, pred, score), session-memoized per (session, sf_dir)
     - trained once (operators/linear.perceptron_classify: LR_STEPS
     full-batch integer subgradient steps, driver holds only the D x L
-    weight table) and shared by the LR funnel and the agreement row."""
+    weight table) and shared by the LR funnel and the agreement row.
+    Registry kind "lr_preds"."""
     from ..operators import linear
 
-    key = _session_key(spark, sf_dir)
-    if key not in _LR_PREDS_MEMO:
-        _LR_PREDS_MEMO[key] = (
+    return artifacts.get_or_build(
+        spark,
+        "lr_preds",
+        sf_dir,
+        lambda: (
             linear.perceptron_classify(_docs(spark, sf_dir))
             .select(
                 F.col("id").alias("doc_id"),
@@ -4137,8 +4062,8 @@ def _lr_preds(spark, sf_dir):
                 "score",
             )
             .localCheckpoint(eager=False)
-        )
-    return _LR_PREDS_MEMO[key]
+        ),
+    )
 
 
 def pipe_curation_lr(spark, sf_dir):
@@ -4231,7 +4156,6 @@ def pipe_lr_agreement(spark, sf_dir):
 
 
 CURATION_SWEEP_PCTS = (25, 50, 75, 100)
-_CURATION_SCORES_MEMO: dict = {}
 
 
 def _curation_scores(spark, sf_dir):
@@ -4240,24 +4164,24 @@ def _curation_scores(spark, sf_dir):
     (doc_id, nll_r) and the NB language-agreement survivor ids - both
     lazy localCheckpoints, so pipe_curation_trained and
     pipe_curation_sweep train each model ONCE per session instead of
-    once per query. Memory is bytes per doc (one double + one id)."""
-    key = _session_key(spark, sf_dir)
-    if key in _CURATION_SCORES_MEMO:
-        return _CURATION_SCORES_MEMO[key]
-    docs = _docs(spark, sf_dir)
-    lm = (
-        textquality.lm_bigram_scores(docs)
-        .select(F.col("id").alias("doc_id"), "nll_r")
-        .localCheckpoint(eager=False)
-    )
-    agree = (
-        _nb_preds(spark, sf_dir)
-        .where(F.col("pred") == F.col("lang"))
-        .select("doc_id")
-        .localCheckpoint(eager=False)
-    )
-    _CURATION_SCORES_MEMO[key] = (lm, agree)
-    return _CURATION_SCORES_MEMO[key]
+    once per query. Memory is bytes per doc (one double + one id).
+    Registry kind "curation_scores"."""
+
+    def build():
+        lm = (
+            textquality.lm_bigram_scores(_docs(spark, sf_dir))
+            .select(F.col("id").alias("doc_id"), "nll_r")
+            .localCheckpoint(eager=False)
+        )
+        agree = (
+            _nb_preds(spark, sf_dir)
+            .where(F.col("pred") == F.col("lang"))
+            .select("doc_id")
+            .localCheckpoint(eager=False)
+        )
+        return lm, agree
+
+    return artifacts.get_or_build(spark, "curation_scores", sf_dir, build)
 
 
 def pipe_curation_sweep(spark, sf_dir):
@@ -4945,9 +4869,6 @@ def pipe_refinedweb(spark, sf_dir):
     return _funnel_report(spark, _refinedweb_stages(spark, sf_dir))
 
 
-_RW_STAGES_MEMO: dict = {}
-
-
 def _refinedweb_stages(spark, sf_dir):
     """The funnel's stage list [(name, in_frame, kept_frame)], shared by
     pipe_refinedweb (doc counts) and pipe_token_attribution (raw-token
@@ -4958,10 +4879,17 @@ def _refinedweb_stages(spark, sf_dir):
     the frames the first one already materialized instead of re-running
     the whole funnel. Memory is bounded: the id-frames are bytes per
     doc and the one corpus-sized entry (the derived lined corpus) is
-    the same deliberate hot-slice cache class as the shingle index."""
-    key = _session_key(spark, sf_dir)
-    if key in _RW_STAGES_MEMO:
-        return _RW_STAGES_MEMO[key]
+    the same deliberate hot-slice cache class as the shingle index.
+    Registry kind "refinedweb_stages"."""
+    return artifacts.get_or_build(
+        spark,
+        "refinedweb_stages",
+        sf_dir,
+        lambda: _build_refinedweb_stages(spark, sf_dir),
+    )
+
+
+def _build_refinedweb_stages(spark, sf_dir):
     docs = _lined_docs(
         spark, sf_dir, keep_cols=("lang",), stopwords=True
     ).localCheckpoint(eager=False)
@@ -5010,7 +4938,7 @@ def _refinedweb_stages(spark, sf_dir):
         .distinct()
     )
     s5_ids = s4_ids.join(dominated, "doc_id", "left_anti")
-    _RW_STAGES_MEMO[key] = [
+    return [
         ("url_filter", total, s0_ids),
         ("lang_id", s0_ids, s1_ids),
         ("gopher", s1_ids, s2_ids),
@@ -5018,7 +4946,6 @@ def _refinedweb_stages(spark, sf_dir):
         ("exact_cleaned", s3, s4_ids),
         ("near_dup", s4_ids, s5_ids),
     ]
-    return _RW_STAGES_MEMO[key]
 
 
 def pipe_token_attribution(spark, sf_dir):
@@ -5866,14 +5793,15 @@ def _overlapped(spark, *thunks):
     thread's own JVM thread only under PYSPARK_PIN_THREAD; with it
     disabled, concurrent setLocalProperty calls can clobber a shared
     JVM thread's locals and the cancellation tag may not cover (or may
-    wrongly cover) overlapped jobs (ADVICE r19). When the mode is
-    explicitly disabled we run the thunks serially - correct either
-    way, just without the overlap."""
-    import os as _os
+    wrongly cover) overlapped jobs (ADVICE r19). The mode is fixed when
+    the gateway launches, so it is read from the live gateway (a py4j
+    ClientServer iff pinned - the check pyspark.util itself makes), not
+    from the environment; unpinned, the thunks run serially - correct
+    either way, just without the overlap."""
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext
 
-    if _os.environ.get("PYSPARK_PIN_THREAD", "true").lower() in (
-        "false", "0", "no",
-    ):
+    if not isinstance(SparkContext._gateway, ClientServer):
         for t in thunks:
             t()
         return

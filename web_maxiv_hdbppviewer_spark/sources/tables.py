@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import artifacts
 from ..session import configure
 
 TESTDATA_TABLES = [
@@ -40,15 +41,6 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-# (applicationId, sf_dir) -> {table: DataFrame}; avoids re-deriving the
-# normalized plans for every declared query in one verification run.
-# Keyed by applicationId, NOT id(spark) (r19 review): a stopped session's
-# id() can be recycled by CPython for a NEW session at the same address,
-# which would serve DataFrames bound to the dead session - the same
-# hazard class the extensions _session_key discipline already closes.
-_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
 
 def _normalize(df: DataFrame) -> DataFrame:
     """Convert raw physical column types to the engine's logical types."""
@@ -76,17 +68,22 @@ def load_tables(
     register: bool = True,
     tables: list[str] | None = None,
 ) -> dict[str, DataFrame]:
-    """Load (and temp-view register) the testdata tables for one scale factor."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CACHE:
-        return _CACHE[key]
-    configure(spark)
-    out: dict[str, DataFrame] = {}
-    for name in tables or TESTDATA_TABLES:
-        df = _normalize(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-        out[name] = df
-        if register:
-            df.createOrReplaceTempView(name)
-    if tables is None:
-        _CACHE[key] = out
-    return out
+    """Load (and temp-view register) the testdata tables for one scale factor.
+
+    The full table set is a session artifact (registry kind "tables"), so
+    the normalized plans are derived once per session, not once per
+    declared query; a ``tables`` subset is loaded afresh."""
+
+    def build() -> dict[str, DataFrame]:
+        configure(spark)
+        out: dict[str, DataFrame] = {}
+        for name in tables or TESTDATA_TABLES:
+            df = _normalize(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+            out[name] = df
+            if register:
+                df.createOrReplaceTempView(name)
+        return out
+
+    if tables is not None:
+        return build()
+    return artifacts.get_or_build(spark, "tables", sf_dir, build)
