@@ -551,28 +551,50 @@ def test_cassandra_adapter_pushdown_and_normalization(spark):
         assert col in plan, f"missing pushable predicate on {col}"
 
 
-# --- rasterline x-tiling ---------------------------------------------------
+# --- rasterline: Catalyst operator vs numpy reference ----------------------
 
 
-def test_rasterline_tiled_equals_untiled(spark, events):
-    """Property: (series, x-tile) grouping with boundary duplication draws
-    the same pixels with the same counts as whole-series grouping."""
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+def test_rasterline_native_equals_reference(spark, events):
+    """Property: the Catalyst line raster draws the same pixels with the
+    same counts as the sequential numpy walk, on fixture events over the
+    whole month, a log axis, a deep zoom whose segments are anchored far
+    off the canvas, and a series with non-finite values."""
+    from tests.rasterline_reference import assert_native_equals_reference
 
-    data = events.select("user_id", "ts", F.col("value").alias("value_r"))
+    data = events.select(
+        "user_id", "ts", F.col("value").alias("value_r"),
+        F.log10(F.col("value")).alias("log_v"),
+    )
     x0 = 1_704_067_200_000_000  # 2024-01-01 UTC
     span = 2_592_000_000_000.0
     kw = dict(series_col="user_id", w=64, ymin=0.0, ymax=500.0, h=48)
-    untiled = {
-        (r["series"], r["xb"], r["yb"]): r["cnt"]
-        for r in rasterize_lines(data, x0, span, tile_px=10**9, **kw).collect()
-    }
-    tiled = {
-        (r["series"], r["xb"], r["yb"]): r["cnt"]
-        for r in rasterize_lines(data, x0, span, tile_px=7, **kw).collect()
-    }
-    assert tiled == untiled
-    assert len(untiled) > 0
+    month = assert_native_equals_reference(data, x0, span, **kw)
+    assert len(month) > 0
+    log_axis = assert_native_equals_reference(
+        data, x0, span, **{**kw, "ymin": -1.0, "ymax": 3.0}, value_col="log_v"
+    )
+    assert len(log_axis) > 0
+    # 0.001 of the month over a 2-unit value band, centered on one point
+    # of a series, so its segments enter from anchors far off the canvas
+    t_mid, v_mid = data.where(F.col("value_r").isNotNull()).orderBy("user_id", "ts").select(
+        F.unix_micros("ts"), "value_r"
+    ).first()
+    zoom = assert_native_equals_reference(
+        data, t_mid - int(span * 0.0005), span * 0.001,
+        **{**kw, "ymin": v_mid - 1.0, "ymax": v_mid + 1.0},
+    )
+    assert len(zoom) > 0
+    odd = data.sparkSession.createDataFrame(
+        [(1, 0, float("nan")), (1, 1000, 5.0), (1, 2000, float("inf")),
+         (1, 3000, 7.0), (1, 4000, 8.0), (2, 500, 1e300), (2, 900, 3.0),
+         (3, 2500, 4.5), (4, 100, -float("inf")), (5, -23, 4.0)],
+        "user_id long, t long, value_r double",
+    ).select("user_id", F.timestamp_micros("t").alias("ts"), "value_r")
+    odd_px = assert_native_equals_reference(odd, 0, 5000.0, **{**kw, "ymax": 10.0})
+    # series 1 draws only its finite 7 -> 8 segment, series 3 is a lone
+    # dot, series 4's only point is non-finite, series 5's lone point
+    # floors off the canvas (x = -0.29) although it rounds onto it
+    assert {s for s, _, _ in odd_px} == {1, 2, 3}
 
 
 def test_slice_cache_refuses_future_periods(spark, events):

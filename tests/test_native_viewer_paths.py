@@ -1,0 +1,108 @@
+"""The viewer's request paths run without Python workers.
+
+/image's line raster and /query's name join are plain Catalyst plans, and
+name resolution reads a driver-side catalog snapshot: a request launches
+no Python worker (no ``pyspark.daemon`` fork, no pandas/pyarrow import per
+worker), and a resolve of known names launches no Spark job at all while
+the snapshot is younger than the catalog TTL.
+"""
+
+from __future__ import annotations
+
+from datetime import datetime
+
+import pytest
+
+from tests.conftest import SF_SMOKE
+
+from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
+from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+from web_maxiv_hdbppviewer_spark.sources import hdbpp
+from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
+
+#: physical nodes that run rows through a Python worker, or read an RDD a
+#: Python worker fed (``createDataFrame`` of a local list)
+PYTHON_NODES = (
+    "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython",
+    "MapInPandas", "ExistingRDD",
+)
+
+NAMES = [f"cs1/dom{u % 5}/fam{u % 10}/mem{u % 3}/attr{u}" for u in range(4)]
+T0, T1 = datetime(2024, 1, 5), datetime(2024, 1, 20)
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    return HdbppQueryEngine(*hdbpp_fixture(spark, SF_SMOKE))
+
+
+def _physical_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """(result of ``fn``, number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_viewer_plans_have_no_python_nodes(engine):
+    ids = engine._resolve(NAMES)
+    assert len(ids) == len(NAMES)
+    frames = {
+        "rasterize_lines": rasterize_lines(
+            engine.datapoints.where(engine.datapoints.att_conf_id.isin(list(ids.values()))),
+            1_704_067_200_000_000, 2_592_000_000_000.0, 200, 0.0, 500.0, 120,
+        ),
+        "query_raw_df raw": engine.query_raw_df(NAMES, T0, T1, _ids=ids),
+        "query_raw_df resampled": engine.query_raw_df(NAMES, T0, T1, interval="12h", _ids=ids),
+        "query_raw_df no names": engine.query_raw_df([], T0, T1),
+    }
+    for label, df in frames.items():
+        plan = _physical_plan(df)
+        found = [node for node in PYTHON_NODES if node in plan]
+        assert not found, f"{label} plans {found}:\n{plan}"
+    assert frames["query_raw_df raw"].count() > 0
+    assert frames["query_raw_df no names"].count() == 0
+
+
+def test_resolve_of_known_names_runs_no_spark_job(spark):
+    engine = HdbppQueryEngine(*hdbpp_fixture(spark, SF_SMOKE))
+    first, jobs = _jobs_in_group(spark, "resolve-first", lambda: engine._resolve(NAMES))
+    assert jobs >= 1  # the snapshot is collected on first use
+    again, jobs = _jobs_in_group(spark, "resolve-again", lambda: engine._resolve(NAMES))
+    assert jobs == 0
+    assert again == first and len(first) == len(NAMES)
+    # unknown names are dropped (F7) and lookups are case-insensitive,
+    # still without a job
+    upper = NAMES[0].upper()
+    mixed, jobs = _jobs_in_group(
+        spark, "resolve-mixed",
+        lambda: engine._resolve([upper, "cs1/dom0/fam0/mem0/nosuch"]),
+    )
+    assert jobs == 0
+    assert mixed == {upper: first[NAMES[0]]}
+    assert engine._resolve([]) == {}
+
+
+def test_catalog_snapshot_expires_after_ttl(spark, monkeypatch):
+    now = [1000.0]
+    monkeypatch.setattr(hdbpp, "_clock", lambda: now[0])
+    catalog, _ = hdbpp_fixture(spark, SF_SMOKE)
+    snap, jobs = _jobs_in_group(spark, "snapshot-first", catalog.ids)
+    assert jobs >= 1 and snap
+    now[0] += hdbpp.CATALOG_TTL_S
+    same, jobs = _jobs_in_group(spark, "snapshot-fresh", catalog.ids)
+    assert jobs == 0 and same is snap
+    now[0] += 1.0
+    fresh, jobs = _jobs_in_group(spark, "snapshot-expired", catalog.ids)
+    assert jobs >= 1 and fresh is not snap and fresh == snap
+    again, jobs = _jobs_in_group(spark, "snapshot-renewed", catalog.ids)
+    assert jobs == 0 and again is fresh

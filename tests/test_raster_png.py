@@ -17,31 +17,48 @@ from web_maxiv_hdbppviewer_spark.api.png import (
     render_png_base64,
 )
 from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-from web_maxiv_hdbppviewer_spark.operators.rasterline import (
-    _segments_to_pixels,
-    rasterize_lines,
-)
+from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
+from tests.rasterline_reference import (
+    _segments_to_pixels,
+    assert_native_equals_reference,
+    native_pixels,
+    segments_frame,
+)
 
-def test_segment_walk_diagonal():
+
+def _native_grid(spark, segment, w, h):
+    """The Catalyst raster of one pixel-space segment as a dense grid,
+    after checking it against the numpy reference on the same rows."""
+    df, canvas = segments_frame(spark, [segment], w, h)
+    grid = np.zeros((h, w), dtype=np.int64)
+    for (_, xb, yb), cnt in assert_native_equals_reference(df, **canvas).items():
+        grid[yb, xb] = cnt
+    return grid
+
+
+def test_segment_walk_diagonal(spark):
     # a straight diagonal from (0,0) to (9,9) covers exactly the diagonal
     grid = _segments_to_pixels(np.array([0.0, 9.0]), np.array([0.0, 9.0]), 10, 10)
     assert grid.sum() == 10
     assert all(grid[i, i] == 1 for i in range(10))
+    assert np.array_equal(_native_grid(spark, (0.0, 0.0, 9.0, 9.0), 10, 10), grid)
 
 
-def test_segment_walk_vertical_jump():
+def test_segment_walk_vertical_jump(spark):
     # a vertical value jump must fill the intermediate pixels (connect-the-
     # dots, not a scatter: this is what distinguishes A7 from A6)
     grid = _segments_to_pixels(np.array([2.0, 2.0]), np.array([0.0, 7.0]), 10, 8)
     assert grid[:, 2].sum() == 8
     assert grid.sum() == 8
+    assert np.array_equal(_native_grid(spark, (2.0, 0.0, 2.0, 7.0), 10, 8), grid)
 
 
-def test_segment_walk_clips_out_of_range():
+def test_segment_walk_clips_out_of_range(spark):
     grid = _segments_to_pixels(np.array([-5.0, 4.0]), np.array([2.0, 2.0]), 5, 5)
     assert grid.sum() == 5  # only the in-canvas half drew
+    assert np.array_equal(_native_grid(spark, (-5.0, 2.0, 4.0, 2.0), 5, 5), grid)
 
 
 def test_rasterize_lines_single_series(spark):
@@ -67,6 +84,32 @@ def test_rasterize_lines_null_values_skipped(spark):
     x0 = int(datetime(2024, 1, 1).timestamp() * 1e6)
     out = rasterize_lines(df, x0, 60e6, 6, 0.0, 6.0, 6).collect()
     assert len(out) == 1  # single surviving point, single pixel
+
+
+def test_rasterize_lines_tie_order_is_deterministic(spark):
+    """Points of one series at the same instant connect in value order,
+    whatever order the rows arrive in: one request renders one PNG."""
+    rows = [
+        (1, 0, 1.0), (1, 10, 9.0), (1, 10, 2.0), (1, 10, 6.0), (1, 20, 4.0),
+        (2, 5, 3.0), (2, 5, 8.0), (2, 15, 0.5),
+    ]
+    df = spark.createDataFrame(rows, "att_conf_id long, t long, value_r double").select(
+        "att_conf_id", F.timestamp_micros("t").alias("ts"), "value_r"
+    )
+    canvas = dict(x0_us=0, span_us=20.0, w=20, ymin=0.0, ymax=10.0, h=10)
+    drawn = [
+        native_pixels(part, **canvas)
+        for part in (
+            df.orderBy("value_r").coalesce(1),
+            df.orderBy(F.desc("value_r")).coalesce(1),
+            df.repartition(3, "value_r"),
+        )
+    ]
+    assert drawn[0] == drawn[1] == drawn[2]
+    assert drawn[0] == assert_native_equals_reference(df, **canvas)
+    # the tie at t=10 is walked 1 -> 2 -> 6 -> 9 -> 4: column 10 is lit
+    # from row 2 up to row 9 by the vertical run
+    assert {yb for (s, xb, yb) in drawn[0] if s == 1 and xb == 10} >= set(range(2, 10))
 
 
 def test_png_roundtrip_bytes():

@@ -14,7 +14,9 @@
    cancellation would alias samples onto .5 boundaries and dot the
    line anyway), clipped coverage stays within 1px of the unclipped
    ground truth wherever that ground truth is materializable, and
-   allocation is bounded by the slab.
+   allocation is bounded by the slab. The walk lives in
+   tests/rasterline_reference.py; every geometry here is also drawn by
+   the Catalyst operator, which must match the reference exactly.
 
 2. Streaming raster watermark predicate (ADVICE r18 high) is pinned in
    tests/test_round18.py::test_streaming_raster_watermark_hardening
@@ -24,6 +26,13 @@
 from __future__ import annotations
 
 import numpy as np
+
+from tests.rasterline_reference import (
+    _clip_to_slab,
+    _segments_to_pixels,
+    assert_native_equals_reference,
+    segments_frame,
+)
 
 
 def _unclipped_walk(x0, y0, x1, y1, w, h):
@@ -45,14 +54,14 @@ def _unclipped_walk(x0, y0, x1, y1, w, h):
 
 
 def _clipped_walk(x0, y0, x1, y1, w, h):
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import (
-        _tile_segments_to_pixels,
-    )
+    return _segments_to_pixels(np.asarray([x0, x1]), np.asarray([y0, y1]), w, h)
 
-    return _tile_segments_to_pixels(
-        np.asarray([x0, x1]), np.asarray([y0, y1]),
-        np.asarray([True, True]), w, h,
-    )
+
+def _native_matches_reference(spark, segments, w, h):
+    """Draw every segment as its own series with the Catalyst operator
+    and require the reference walk's pixels and counts."""
+    df, canvas = segments_frame(spark, segments, w, h)
+    assert_native_equals_reference(df, **canvas)
 
 
 def _dilate(mask: np.ndarray) -> np.ndarray:
@@ -69,13 +78,14 @@ def _dilate(mask: np.ndarray) -> np.ndarray:
     return out
 
 
-def test_in_slab_segments_bit_equal_unclipped_walk():
+def test_in_slab_segments_bit_equal_unclipped_walk(spark):
     """Property: for random segments wholly inside the slab
     [-1, w] x [-1, h] the clip is an identity, so the kernel must
     reproduce the historical unclipped walk EXACTLY - same pixels,
     same counts. This is the geometry every pinned digest exercises."""
     rng = np.random.default_rng(1907)
     w, h = 100, 80
+    segments = []
     for trial in range(300):
         x0, x1 = rng.uniform(-1.0, w, 2)
         y0, y1 = rng.uniform(-1.0, h, 2)
@@ -84,9 +94,11 @@ def test_in_slab_segments_bit_equal_unclipped_walk():
         assert np.array_equal(got, want), (
             f"trial {trial}: segment ({x0},{y0})->({x1},{y1}) diverged"
         )
+        segments.append((x0, y0, x1, y1))
+    _native_matches_reference(spark, segments, w, h)
 
 
-def test_out_of_slab_coverage_within_1px_of_ground_truth():
+def test_out_of_slab_coverage_within_1px_of_ground_truth(spark):
     """Property: for segments with endpoints beyond the slab (spans up
     to ~1e5 px, still materializable by the ground-truth walk), the
     clipped walk's sample phase differs from the unclipped walk's, but
@@ -94,6 +106,7 @@ def test_out_of_slab_coverage_within_1px_of_ground_truth():
     Bresenham-equivalence class."""
     rng = np.random.default_rng(4111)
     w, h = 100, 80
+    segments = []
     for trial in range(200):
         scale = 10.0 ** rng.uniform(2, 5)
         x0, x1 = rng.uniform(-scale, scale, 2)
@@ -102,9 +115,11 @@ def test_out_of_slab_coverage_within_1px_of_ground_truth():
         want = _unclipped_walk(x0, y0, x1, y1, w, h) > 0
         assert not (got & ~_dilate(want)).any(), f"trial {trial}: extra pixel"
         assert not (want & ~_dilate(got)).any(), f"trial {trial}: missing pixel"
+        segments.append((x0, y0, x1, y1))
+    _native_matches_reference(spark, segments, w, h)
 
 
-def test_axis_aligned_and_degenerate_cases_match_ground_truth():
+def test_axis_aligned_and_degenerate_cases_match_ground_truth(spark):
     """Deterministic edges: axis-aligned crossings (where clipped and
     unclipped pixel sets agree exactly, not just within 1px), zero-
     length and sub-pixel segments, slab-boundary hugs, full misses."""
@@ -126,9 +141,10 @@ def test_axis_aligned_and_degenerate_cases_match_ground_truth():
         got = _clipped_walk(x0, y0, x1, y1, w, h)
         want = _unclipped_walk(x0, y0, x1, y1, w, h)
         assert np.array_equal(got > 0, want > 0), (x0, y0, x1, y1)
+    _native_matches_reference(spark, exact, w, h)
 
 
-def test_far_endpoint_crossing_renders_solid_not_dotted():
+def test_far_endpoint_crossing_renders_solid_not_dotted(spark):
     """The ADVICE r18 low: a FINITE wild endpoint (sensor glitch under
     manual axis bounds) anchoring a segment that crosses the canvas.
     The r18 cap subsampled the whole span - every span/(8*(w+h))-th
@@ -152,13 +168,17 @@ def test_far_endpoint_crossing_renders_solid_not_dotted():
         assert rows.size >= h - 1 and np.all(np.diff(rows) == 1), (
             f"far={far}: vertical crossing has gaps"
         )
+    _native_matches_reference(
+        spark,
+        [seg for far in (1e6, 1e9, 1e12, 1e15)
+         for seg in ((-far, 40.25, 99.5, 40.25), (50.2, -far, 50.2, 79.5))],
+        w, h,
+    )
 
 
 def test_clip_bounds_allocation_by_slab():
     """The clipped span - hence the walk's sample count - is bounded by
     the slab perimeter for ANY endpoint magnitude."""
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import _clip_to_slab
-
     w, h = 100, 80
     for far in (1e6, 1e9, 1e15, 1e18, 1e300):
         clip = _clip_to_slab(-far, 40.25, 99.5, 40.25, w, h)

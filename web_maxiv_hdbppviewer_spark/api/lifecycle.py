@@ -14,6 +14,7 @@ from __future__ import annotations
 import math
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -171,25 +172,18 @@ class HdbppQueryEngine:
             )
         return out
 
-    # --- routing ---------------------------------------------------------
+    # --- name resolution -------------------------------------------------
 
     def _resolve(self, attributes: list[str]) -> dict[str, int]:
-        """Lower-cased name -> att_conf_id via the broadcast-joined catalog
-        (J1). Names absent from the catalog are dropped, like the
-        reference's None results (reference data.py:107,113 F7)."""
-        # names are lowered HERE, once (_split_attr over a.lower());
-        # the explicit schema keeps an EMPTY attribute list a valid
-        # request resolving to {} - the reference returns an empty
-        # result for it, while schema inference over [] raised
-        # ValueError and 500'd the endpoint (r19 review)
-        wanted = [(a, *_split_attr(a.lower())) for a in attributes]
-        spark = self.datapoints.sparkSession
-        req = spark.createDataFrame(
-            wanted, schema="orig_name string, cs_name string, att_name string"
-        )
-        routed = self.catalog.route(req)
-        rows = routed.where(F.col("att_conf_id").isNotNull()).collect()
-        return {r["orig_name"]: r["att_conf_id"] for r in rows}
+        """Requested name -> att_conf_id, looked up in the catalog's
+        driver-side snapshot (J1): no Spark job while the snapshot is
+        fresh. Names are lower-cased and split right-anchored
+        (_split_attr); names absent from the catalog are dropped, like the
+        reference's None results (reference data.py:107,113 F7), and an
+        empty list resolves to {}."""
+        ids = self.catalog.ids()
+        found = ((a, ids.get(_split_attr(a.lower()))) for a in attributes)
+        return {a: i for a, i in found if i is not None}
 
     # --- /query lifecycle (SURVEY §3.2) ----------------------------------
 
@@ -213,9 +207,12 @@ class HdbppQueryEngine:
         """
         ids = _ids if _ids is not None else self._resolve(attributes)
         spark = self.datapoints.sparkSession
-        name_dim = spark.createDataFrame(
-            list(ids.items()) or [("", -1)], ["name", "att_conf_id"]
-        ).where(F.col("att_conf_id") >= 0)
+        # from an Arrow table: the rows go to the JVM as one LocalRelation,
+        # where a list of tuples would go through a Python-worker RDD
+        name_dim = spark.createDataFrame(pa.table({
+            "name": pa.array(list(ids), pa.string()),
+            "att_conf_id": pa.array(list(ids.values()), pa.int64()),
+        }))
         df = self.datapoints.where(F.col("att_conf_id").isin(list(ids.values()) or [-1]))
         if restrict_time:
             df = self._time_window(df, t0, t1, upper_inclusive=True)
@@ -311,11 +308,9 @@ class HdbppQueryEngine:
         span_us = float(x1_us - x0_us)
         result: dict = {}
 
-        # ONE catalog resolve for the whole request (r14: the per-axis
-        # _resolve was ~0.8 s of catalog-join collect PER AXIS - the
-        # largest single line in the lifecycle_image profile, PLANS.md);
-        # per-axis routing below is a driver-side dict slice. Same
-        # drop-unknown-names semantics (F7), one broadcast-join job.
+        # ONE catalog resolve for the whole request; per-axis routing
+        # below is a driver-side dict slice. Same drop-unknown-names
+        # semantics (F7).
         all_ids = self._resolve([spec["name"] for spec in attributes])
 
         # ONE extrema job per distinct axis SCALE, not per axis
@@ -475,8 +470,8 @@ class HdbppQueryEngine:
         {"images": {axis: {image: base64 PNG, y_range, x_range}},
          "descs": {attr: hover stats}}.
 
-        The line raster (A7) runs as a pandas kernel per series; the driver
-        only ever sees pixel rows and the tiny extrema results.
+        The line raster (A7) runs as Catalyst expressions per segment; the
+        driver only ever sees pixel rows and the tiny extrema results.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -490,7 +485,7 @@ class HdbppQueryEngine:
         # per-axis line raster + PNG encode are INDEPENDENT chains
         # (separate ids, separate bin geometry) - overlap them from a
         # small thread pool (guide-standard concurrent-jobs pattern) so
-        # axis 1's kernel tasks back-fill executors freed by axis 0's
+        # axis 1's raster tasks back-fill executors freed by axis 0's
         # stragglers instead of running serially. Job-group properties
         # are thread-local; copy the caller's into each worker so
         # run_cancellable's tag (X10) still covers every job.

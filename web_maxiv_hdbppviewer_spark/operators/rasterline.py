@@ -1,172 +1,137 @@
-"""Line rasterization kernel (SURVEY A7, reference plot.py:27,34-42).
+"""Line rasterization (SURVEY A7, reference plot.py:27,34-42).
 
 The reference draws each series with datashader's ``Canvas.line`` -
 connect-the-dots onto the pixel grid - then shades per-series colors and
-stacks. That is not a relational aggregate (a segment between two points
-touches pixels no single row maps to), so it is the one place the engine
-runs a Pandas kernel: ``applyInPandas`` per series group, a vectorized
-numpy Bresenham-style segment walk, emitting (series, xb, yb, cnt) pixel
-rows. Everything after (shade, stack, encode) happens driver-side on
-<= w*h rows per series.
+stacks. A segment between two points touches pixels no single row maps
+to, so the raster is not a plain binning aggregate; it is still plain
+Catalyst, and no Python worker runs: ``lead()`` pairs each point with the
+next one of its series, each segment is clipped and sampled by column
+expressions, its samples are exploded into pixel rows, and the pixels are
+counted per (series, pixel), each segment at most once per pixel.
+Everything after (shade, stack, encode) happens driver-side on <= w*h
+rows per series.
 
-Scale: groups are (series, x-tile), NOT whole series (the reference
-assumes <100k points/day/attr, hdbpp.py:283-284; one hot series over a
-long window would otherwise land in a single pandas task). Each point goes
-to its tile by pixel-x; additionally, whenever consecutive points fall in
-different tiles, the LATER point is duplicated into the EARLIER point's
-tile so the crossing segment has both endpoints there. The kernel draws a
-segment only when its first endpoint is tile-native, so every real segment
-is drawn EXACTLY once (by the tile owning its first endpoint) - a final
-per-pixel sum merges tile outputs. The kernel is O(points + drawn pixels)
-per group.
+The walk is the numpy kernel it replaced (kept as the test reference,
+tests/rasterline_reference.py), expression for expression:
+
+  - points map to CONTINUOUS pixel coordinates ``(t - x0) / span * w`` and
+    ``(v - ymin) / (ymax - ymin) * h``, y in data orientation (yb 0 =
+    ymin row); a series' points are connected in (t, v) order, so a tie
+    in time connects the same way whatever the input partitioning;
+  - a segment with a non-finite endpoint paints nothing;
+  - each segment is Liang-Barsky-clipped to the conservative slab
+    [-1, w] x [-1, h] (>= 0.5 px margin around every coordinate the
+    in-canvas test can accept, so clipping never removes a pixel). A
+    segment inside the slab keeps its original endpoints; the walk's
+    sample count is bounded by the slab for ANY endpoint magnitude, and
+    a far-anchored crossing stays solid;
+  - the clipped segment is sampled at ``floor(span) + 1`` points exactly
+    as ``np.linspace`` computes them and rounded half-to-even (``rint``);
+  - a single-point series paints one FLOOR dot (bin_2d's mapping).
+
+The stages are SQL expression text, one ``selectExpr`` each: a PySpark
+Column operator is a py4j round trip, and the walk built from Column
+operators took longer to construct than to run.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import math
+import sys
 
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions.time import epoch_us
 
-LINE_PIXELS_SCHEMA = StructType(
-    [
-        StructField("series", LongType(), False),
-        StructField("xb", LongType(), False),
-        StructField("yb", LongType(), False),
-        StructField("cnt", LongType(), False),
-    ]
+
+def _finite(*cols: str) -> str:
+    """SQL: all ``cols`` finite (NaN, +-inf and null are not)."""
+    return " AND ".join(f"abs({c}) <= {sys.float_info.max!r}D" for c in cols)
+
+
+#: Liang-Barsky (p, q) pairs of a segment (x0, y0) -> (x1, y1) against the
+#: slab [-1, w] x [-1, h]
+_SLAB = (
+    ("-(x1 - x0)", "x0 + 1.0D"), ("x1 - x0", "w - x0"),
+    ("-(y1 - y0)", "y0 + 1.0D"), ("y1 - y0", "h - y0"),
 )
 
-#: default x-tile width in pixels; tune so one tile's points fit a task
-DEFAULT_TILE_PX = 256
+#: a lone point on the canvas
+_DOT = (f"lone AND {_finite('x0', 'y0')}"
+        " AND x0 >= 0 AND x0 < w AND y0 >= 0 AND y0 < h")
 
+_BY_TIME = "PARTITION BY series ORDER BY t_us, v"
 
-def _draw_dot(grid: np.ndarray, x: float, y: float, w: int, h: int) -> None:
-    """Paint one point at FLOOR pixel coordinates (bin_2d's mapping - a
-    coordinate in (-1, 0) floors to -1 and is dropped; plain int() would
-    truncate it to 0 and paint an off-canvas point onto the canvas edge,
-    r18 review). Non-finite coordinates paint nothing."""
-    if not (np.isfinite(x) and np.isfinite(y)):
-        return
-    xi, yi = int(np.floor(x)), int(np.floor(y))
-    if 0 <= xi < w and 0 <= yi < h:
-        grid[yi, xi] += 1
+#: each point with the next one of its series, connected in (t, v) order
+_PAIRED = (
+    "series",
+    f"row_number() OVER ({_BY_TIME}) AS seg",
+    f"count(1) OVER ({_BY_TIME} ROWS BETWEEN UNBOUNDED PRECEDING"
+    " AND UNBOUNDED FOLLOWING) = 1 AS lone",
+    "t_us",
+    "v",
+    f"lead(t_us) OVER ({_BY_TIME}) AS t_next",
+    f"lead(v) OVER ({_BY_TIME}) AS v_next",
+)
 
-
-def _segments_to_pixels(xs: np.ndarray, ys: np.ndarray, w: int, h: int) -> np.ndarray:
-    """Walk each consecutive segment, marking covered pixels (dense w x h
-    count grid). Vectorized per segment via linear interpolation at
-    max(|dx|,|dy|)+1 sample points - equivalent coverage to Bresenham.
-    One body: the all-segments walk IS the tiled walk with every segment
-    native (r18 review - the two copies previously had to be kept
-    bit-identical by hand for the tiled==untiled property)."""
-    if len(xs) == 1:
-        grid = np.zeros((h, w), dtype=np.int64)
-        _draw_dot(grid, xs[0], ys[0], w, h)
-        return grid
-    return _tile_segments_to_pixels(
-        xs, ys, np.ones(len(xs), dtype=bool), w, h
-    )
-
-
-def _clip_to_slab(
-    x0: float, y0: float, x1: float, y1: float, w: int, h: int
-):
-    """Liang-Barsky clip of one segment to the conservative canvas slab
-    [-1, w] x [-1, h] (r19, VERDICT r18 #4 / ADVICE r18). The slab has
-    >= 0.5px margin around every coordinate the keep mask can accept
-    (rint maps exactly [-0.5, limit-0.5] into the canvas), so clipping
-    never removes geometry that could paint a pixel.
-
-    Returns the clipped endpoints, or None when the segment misses the
-    slab. A segment already inside the slab comes back with its
-    ORIGINAL float endpoints (t stays exactly [0, 1]) - the subsequent
-    walk is bit-identical to the historical unclipped walk, which is
-    what the pinned image digests exercise. Clipped endpoints of a
-    far-anchored segment carry only O(|span| * eps) absolute error from
-    the parametric evaluation, and are clamped back into the slab.
-    """
-    dx, dy = x1 - x0, y1 - y0
-    t0, t1 = 0.0, 1.0
-    for p, q in (
-        (-dx, x0 - (-1.0)),
-        (dx, float(w) - x0),
-        (-dy, y0 - (-1.0)),
-        (dy, float(h) - y0),
-    ):
-        if p == 0.0:
-            if q < 0.0:
-                return None
-            continue
-        r = q / p
-        if p < 0.0:
-            if r > t1:
-                return None
-            if r > t0:
-                t0 = r
-        else:
-            if r < t0:
-                return None
-            if r < t1:
-                t1 = r
-    cx0 = x0 if t0 == 0.0 else min(max(x0 + t0 * dx, -1.0), float(w))
-    cy0 = y0 if t0 == 0.0 else min(max(y0 + t0 * dy, -1.0), float(h))
-    cx1 = x1 if t1 == 1.0 else min(max(x0 + t1 * dx, -1.0), float(w))
-    cy1 = y1 if t1 == 1.0 else min(max(y0 + t1 * dy, -1.0), float(h))
-    return cx0, cy0, cx1, cy1
-
-
-def _tile_segments_to_pixels(
-    xs: np.ndarray, ys: np.ndarray, native: np.ndarray, w: int, h: int
-) -> np.ndarray:
-    """Like _segments_to_pixels but draws only segments whose FIRST endpoint
-    is tile-native (duplicated boundary points exist solely to complete the
-    crossing segments owned by this tile).
-
-    Hardening (r18 review): a segment with a non-finite endpoint paints
-    nothing (previously int(inf) raised OverflowError; a NaN endpoint
-    already painted nothing through the keep mask). r19 (VERDICT r18
-    #4): each segment is Liang-Barsky-clipped to the canvas slab BEFORE
-    the sample count is computed, so the walk's allocation is bounded by
-    the in-slab span (<= w + h + 4 samples) for ANY endpoint magnitude
-    and in-view coverage stays solid (Bresenham-equivalent). This
-    replaces the r18 8*(w+h) sample cap, which subsampled a
-    far-anchored segment's whole span and rendered its in-view crossing
-    DOTTED. In-slab segments are untouched by the clip and walk
-    bit-identically to the historical kernel. (Clipping also sidesteps
-    the unclipped formula's float trap: at |endpoint| >~ 1e9 px the
-    cancellation in k*step+start rounds in-canvas samples onto exact
-    .5 boundaries, where banker's rounding halves the coverage - the
-    clipped walk computes from slab-sized coordinates and never
-    cancels.)"""
-    grid = np.zeros((h, w), dtype=np.int64)
-    for i in range(len(xs) - 1):
-        if not native[i]:
-            continue
-        x0, y0, x1, y1 = xs[i], ys[i], xs[i + 1], ys[i + 1]
-        if not (
-            np.isfinite(x0) and np.isfinite(y0)
-            and np.isfinite(x1) and np.isfinite(y1)
-        ):
-            continue
-        clip = _clip_to_slab(x0, y0, x1, y1, w, h)
-        if clip is None:
-            continue
-        x0, y0, x1, y1 = clip
-        span = max(abs(x1 - x0), abs(y1 - y0))
-        n = int(span) + 1
-        px = np.rint(np.linspace(x0, x1, n)).astype(np.int64)
-        py = np.rint(np.linspace(y0, y1, n)).astype(np.int64)
-        keep = (px >= 0) & (px < w) & (py >= 0) & (py < h)
-        if keep.any():
-            # dedup within the segment so a pixel counts once per pass
-            flat = np.unique(py[keep] * w + px[keep])
-            grid.flat[flat] += 1
-    return grid
+#: the walk as SQL over one row per point, (series, seg, lone, t_us, v,
+#: t_next, v_next) plus the canvas columns (x_lo, x_span, w, y_lo, y_span,
+#: h). Each stage reads the previous one's columns, so no expression is
+#: repeated inside another. The text is fixed: request values arrive as
+#: canvas columns, never spliced in.
+_STAGES = (
+    # continuous pixel coordinates of both endpoints, numpy's order of
+    # operations
+    ("series", "seg", "lone", "w", "h",
+     "(CAST(t_us AS DOUBLE) - x_lo) / x_span * w AS x0",
+     "(v - y_lo) / y_span * h AS y0",
+     "(CAST(t_next AS DOUBLE) - x_lo) / x_span * w AS x1",
+     "(v_next - y_lo) / y_span * h AS y1"),
+    # Liang-Barsky: t0 = max(0, q/p over p < 0), t1 = min(1, q/p over
+    # p > 0); reject when p == 0 & q < 0 or t0 > t1 - the same decisions
+    # as the sequential clip loop
+    ("series", "seg", "lone", "w", "h", "x0", "y0", "x1", "y1",
+     "greatest(0.0D, " + ", ".join(
+         f"CASE WHEN {p} < 0 THEN ({q}) / ({p}) END" for p, q in _SLAB) + ") AS t0",
+     "least(1.0D, " + ", ".join(
+         f"CASE WHEN {p} > 0 THEN ({q}) / ({p}) END" for p, q in _SLAB) + ") AS t1",
+     "(" + " OR ".join(f"({p} = 0 AND {q} < 0)" for p, q in _SLAB) + ") AS miss"),
+    # a lone point's pixel is its FLOOR (bin_2d's mapping); a segment's
+    # endpoints are clipped, or kept exactly when the clip kept them
+    ("series", "seg", "w", "h",
+     f"CASE WHEN {_DOT} THEN floor(y0) * w + floor(x0) END AS dot",
+     f"CASE WHEN {_DOT} THEN 1 WHEN {_finite('x0', 'y0', 'x1', 'y1')}"
+     " AND NOT miss AND t0 <= t1 THEN 0 END AS walked",
+     "CASE WHEN t0 = 0 THEN x0 ELSE least(greatest(x0 + t0 * (x1 - x0), -1.0D), w) END AS cx0",
+     "CASE WHEN t0 = 0 THEN y0 ELSE least(greatest(y0 + t0 * (y1 - y0), -1.0D), h) END AS cy0",
+     "CASE WHEN t1 = 1 THEN x1 ELSE least(greatest(x0 + t1 * (x1 - x0), -1.0D), w) END AS cx1",
+     "CASE WHEN t1 = 1 THEN y1 ELSE least(greatest(y0 + t1 * (y1 - y0), -1.0D), h) END AS cy1"),
+    # samples per walk: floor(span) + 1; one for a dot, none if nothing
+    # is drawn
+    ("series", "seg", "w", "h", "dot", "cx0", "cy0", "cx1", "cy1",
+     "CASE walked WHEN 1 THEN 1"
+     " WHEN 0 THEN floor(greatest(abs(cx1 - cx0), abs(cy1 - cy0))) + 1 END AS n"),
+    # np.linspace(start, stop, n), bit for bit: sample k is k*step + start
+    # and the last one (k = n - 1) is stop; a step that underflows to 0
+    # samples (k/div)*delta + start instead; a one-sample walk is start
+    ("series", "seg", "w", "h", "dot", "n - 1 AS last", "CAST(n - 1 AS DOUBLE) AS div",
+     "cx0 AS x_start", "IF(n > 1, cx1, cx0) AS x_stop", "cx1 - cx0 AS x_delta",
+     "IF(n > 1, (cx1 - cx0) / (n - 1), NULL) AS x_step",
+     "cy0 AS y_start", "IF(n > 1, cy1, cy0) AS y_stop", "cy1 - cy0 AS y_delta",
+     "IF(n > 1, (cy1 - cy0) / (n - 1), NULL) AS y_step",
+     "explode(sequence(0L, n - 1)) AS k"),
+    ("series", "seg", "w", "h", "dot") + tuple(
+        f"rint(CASE WHEN k = last THEN {a}_stop"
+        f" WHEN {a}_step = 0 THEN k / div * {a}_delta + {a}_start"
+        f" ELSE k * {a}_step + {a}_start END) AS r{a}"
+        for a in ("x", "y")),
+    # the sample's pixel, null off the canvas
+    ("series", "seg", "w",
+     "CAST(coalesce(dot, CASE WHEN rx >= 0 AND rx < w AND ry >= 0 AND ry < h"
+     " THEN ry * w + rx END) AS BIGINT) AS pix"),
+)
 
 
 def rasterize_lines(
@@ -180,67 +145,37 @@ def rasterize_lines(
     series_col: str = "att_conf_id",
     ts_col: str = "ts",
     value_col: str = "value_r",
-    tile_px: int = DEFAULT_TILE_PX,
 ) -> DataFrame:
-    """Connect-the-dots raster -> (series, xb, yb, cnt) rows, grouped by
-    (series, x-tile) so a hot series parallelizes across tiles.
-
-    Points are mapped to CONTINUOUS pixel coordinates before the segment
-    walk (the line can pass through pixels between points), y axis in data
-    orientation (yb 0 = ymin row). The per-pixel counts are tile-output
-    sums; tiled output == untiled output (property-tested) because every
-    real segment is drawn exactly once, by the tile of its first endpoint,
-    onto the full-width grid (a segment may legally paint pixels outside
-    its own tile's x-range).
-    """
-
-    def draw(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t_us")
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=["series", "xb", "yb", "cnt"])
-        xs = (pdf["t_us"].to_numpy(np.float64) - x0_us) / span_us * w
-        ys = (pdf["v"].to_numpy(np.float64) - ymin) / (ymax - ymin) * h
-        native = pdf["native"].to_numpy(bool)
-        if bool(pdf["lone"].iloc[0]):
-            # single-point SERIES: one dot (untiled-kernel semantics). A
-            # multi-point series' point sitting alone in its tile draws
-            # nothing here - its segments are owned by neighboring tiles.
-            grid = np.zeros((h, w), dtype=np.int64)
-            _draw_dot(grid, xs[0], ys[0], w, h)
-        else:
-            grid = _tile_segments_to_pixels(xs, ys, native, w, h)
-        yy, xx = np.nonzero(grid)
-        return pd.DataFrame(
-            {
-                "series": pdf["series"].iloc[0],
-                "xb": xx.astype(np.int64),
-                "yb": yy.astype(np.int64),
-                "cnt": grid[yy, xx],
-            }
-        )
-
-    prepared = df.select(
-        F.col(series_col).alias("series"),
+    """Connect-the-dots raster -> (series, xb, yb, cnt) rows: ``cnt`` is
+    the number of segments of ``series`` that paint pixel (xb, yb). Null
+    values are skipped; their neighbors connect."""
+    paired = df.select(
+        F.col(series_col).cast("long").alias("series"),
         epoch_us(F.col(ts_col)).alias("t_us"),
         F.col(value_col).cast("double").alias("v"),
-    ).where(F.col("v").isNotNull())
-    # pixel-x tile of each point + the previous point's tile (one streaming
-    # window pass; the EXPENSIVE rasterization then parallelizes per tile)
-    px = (F.col("t_us") - F.lit(x0_us)) / F.lit(span_us) * F.lit(w)
-    by_series = Window.partitionBy("series").orderBy("t_us")
-    pointed = (
-        prepared.withColumn("tile", F.floor(px / F.lit(tile_px)).cast("long"))
-        .withColumn("prev_tile", F.lag("tile").over(by_series))
-        .withColumn("lone", F.count(F.lit(1)).over(Window.partitionBy("series")) == 1)
+    ).where("v IS NOT NULL").selectExpr(*_PAIRED)
+    # the canvas enters as the columns of one broadcast row, not as
+    # literals: the generated code then does not change between requests,
+    # so it is compiled once per session instead of once per request. A
+    # zero span maps every point off the canvas (NaN), as numpy's division
+    # by zero does.
+    canvas = df.sparkSession.createDataFrame(pa.table({
+        "x_lo": [float(x0_us)],
+        "x_span": [float(span_us) if span_us else math.nan],
+        "w": [float(w)],
+        "y_lo": [float(ymin)],
+        "y_span": [float(ymax - ymin) if ymax != ymin else math.nan],
+        "h": [float(h)],
+    }))
+    walked = paired.crossJoin(F.broadcast(canvas))
+    for stage in _STAGES:
+        walked = walked.selectExpr(*stage)
+    # a pixel counts once per segment however many of its samples land
+    # there. Off-canvas samples (null pix) drop out AFTER the count: a
+    # filter on pix would be pushed down and repeat the sample expressions.
+    return (
+        walked.groupBy("series", "pix", "w")
+        .agg(F.expr("count(DISTINCT IF(pix IS NULL, NULL, seg)) AS cnt"))
+        .where("cnt > 0")
+        .selectExpr("series", "CAST(pix % w AS BIGINT) AS xb", "floor(pix / w) AS yb", "cnt")
     )
-    native = pointed.select(
-        "series", "t_us", "v", "lone", F.col("tile").alias("gtile"), F.lit(True).alias("native")
-    )
-    dup = pointed.where(
-        F.col("prev_tile").isNotNull() & (F.col("prev_tile") != F.col("tile"))
-    ).select(
-        "series", "t_us", "v", "lone", F.col("prev_tile").alias("gtile"), F.lit(False).alias("native")
-    )
-    tiled = native.unionByName(dup)
-    pixels = tiled.groupBy("series", "gtile").applyInPandas(draw, LINE_PIXELS_SCHEMA)
-    return pixels.groupBy("series", "xb", "yb").agg(F.sum("cnt").alias("cnt"))

@@ -541,7 +541,7 @@ def lifecycle_aggregate(spark, sf_dir):
 def lifecycle_query(spark, sf_dir):
     """End-to-end /query lifecycle witness (reference server.py:151-165 ->
     get_att_data, data.py:17-75), the §3.2 twin of lifecycle_aggregate:
-    fixture catalog -> name resolution (J1 broadcast routing) -> ONE
+    fixture catalog -> name resolution (J1 catalog snapshot) -> ONE
     combined query_raw_df plan -> exact time trim (F1) -> the raw series
     UNION the interval-resampled series (A1 round-to-NEAREST, 12h
     buckets), as one hashable frame (kind, name, t, value_r). A green row
@@ -558,10 +558,8 @@ def lifecycle_query(spark, sf_dir):
     engine = HdbppQueryEngine(catalog, datapoints)
     names = [f"cs1/dom{u % 5}/fam{u % 10}/mem{u % 3}/attr{u}" for u in range(6)]
     t0, t1 = datetime(2024, 1, 5), datetime(2024, 1, 20)
-    # ONE catalog resolve for all three variants (r19 review: three
-    # query_raw_df calls each ran the ~0.8 s broadcast-route collect for
-    # the SAME six names - the image_aggregates one-resolve discipline,
-    # via the _ids parameter built for exactly this reuse)
+    # ONE catalog resolve for all three variants, shared through the
+    # _ids parameter (the image_aggregates one-resolve discipline)
     ids = engine._resolve(names)
     raw = engine.query_raw_df(names, t0, t1, _ids=ids).select(
         F.lit("raw").alias("kind"), "name", "t", "value_r"

@@ -60,7 +60,7 @@ def hdbpp_fixture(spark: SparkSession, sf_dir: str) -> tuple[HdbppCatalog, DataF
     VERDICT r19 #6; registry kind "hdbpp_catalog"): the fixture catalog
     is a STATIC artifact of the corpus, but every lifecycle query's name
     resolve re-ran its distinct-over-events derivation to build the
-    broadcast route table. One lazy localCheckpoint per (session,
+    catalog snapshot. One lazy localCheckpoint per (session,
     sf_dir); a deployed HDB++ system reads att_conf from a real (tiny)
     dimension table, so serving later resolves from the checkpointed
     rows is the deployment shape, not a benchmark shortcut. Values

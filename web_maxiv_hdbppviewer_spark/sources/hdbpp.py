@@ -1,14 +1,14 @@
-"""HDB++ logical-model source layer: catalogs, routing, partition layout.
+"""HDB++ logical-model source layer: catalogs, name resolution, partition layout.
 
 Replaces the reference's Cassandra access layer (reference hdbpp.py) with
 DataFrame-native equivalents:
 
   - catalogs (``att_conf``, ``att_names``) are small cached dimensions; the
-    reference fetches them wholesale every 60 s (hdbpp.py:213-241) - we
-    cache and refresh via ``cache.TtlDimension``.
-  - name -> (att_conf_id, data_type) routing is a BROADCAST join (J1,
-    reference does a python dict lookup hdbpp.py:404) so request fan-out
-    stays distributed.
+    reference fetches them wholesale every 60 s (hdbpp.py:213-241).
+  - name -> att_conf_id resolution is a lookup in a driver-side snapshot of
+    ``att_conf`` (J1), refreshed on the same 60 s TTL - the reference's
+    dict lookup (hdbpp.py:404). A request's names are a handful; a Spark
+    job per request to join them would cost more than the request.
   - day-partition enumeration (X1, reference hdbpp.py:303-321 hand-builds
     one CQL future per local-calendar day) becomes partition PRUNING: data
     is stored partitioned by (data_type, period) and the planner emits a
@@ -30,6 +30,7 @@ Storage layout for 100 TB (write_datapoints):
 
 from __future__ import annotations
 
+import time
 from datetime import datetime, timedelta
 from zoneinfo import ZoneInfo
 
@@ -38,6 +39,13 @@ from pyspark.sql import functions as F
 
 from ..functions.names import attr_full_name
 from ..functions.time import utc_ts_lit
+
+#: seconds a catalog snapshot serves name resolution before it is
+#: collected again - the reference's catalog TTL (hdbpp.py:213, 230)
+CATALOG_TTL_S = 60.0
+
+#: the snapshot's clock; monotonic, so wall-clock steps cannot expire it
+_clock = time.monotonic
 
 #: the reference pins Europe/Stockholm for period derivation
 #: (reference Dockerfile:14-17); ours is explicit and per-deployment
@@ -81,11 +89,13 @@ def derive_period(ts_col, zone: str = DEFAULT_PERIOD_ZONE):
 
 
 class HdbppCatalog:
-    """The two dimension tables + routing/search over them."""
+    """The two dimension tables + name resolution/search over them."""
 
     def __init__(self, att_conf: DataFrame, att_names: DataFrame):
         self.att_conf = att_conf
         self.att_names = att_names
+        self._ids: dict[tuple[str, str], int] | None = None
+        self._ids_at = float("-inf")
 
     def controlsystems(self) -> DataFrame:
         """Distinct control systems, sorted (reference server.py:63-70)."""
@@ -135,13 +145,17 @@ class HdbppCatalog:
             limit=None if max_n is None else int(max_n),
         )
 
-    def route(self, requests: DataFrame) -> DataFrame:
-        """Resolve (cs_name, att_name) request rows to (att_conf_id,
-        data_type) via broadcast join (J1; reference dict lookup
-        hdbpp.py:399-411)."""
-        return requests.join(
-            F.broadcast(self.att_conf), ["cs_name", "att_name"], "left"
-        )
+    def ids(self) -> dict[tuple[str, str], int]:
+        """The driver-side {(cs_name, att_name): att_conf_id} snapshot.
+        Collected on first use and again once it is older than
+        CATALOG_TTL_S, like the reference's catalog memo (hdbpp.py:213,
+        230); in between, name resolution launches no Spark job."""
+        now = _clock()
+        if self._ids is None or now - self._ids_at > CATALOG_TTL_S:
+            rows = self.att_conf.select("cs_name", "att_name", "att_conf_id").collect()
+            self._ids = {(r[0], r[1]): r[2] for r in rows}
+            self._ids_at = now
+        return self._ids
 
 
 def write_datapoints(df: DataFrame, path: str, zone: str = DEFAULT_PERIOD_ZONE) -> None:
