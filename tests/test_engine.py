@@ -1618,13 +1618,6 @@ def test_funnel_seq_requires_strict_order(spark, tmp_path):
         " value double, props string",
     )
     df.write.parquet(str(tmp_path / "events.parquet"))
-    # load_tables eagerly opens every testdata table name: give the other
-    # nine a placeholder frame (only events is read by the funnel)
-    from web_maxiv_hdbppviewer_spark.sources.tables import TESTDATA_TABLES
-
-    for name in TESTDATA_TABLES:
-        if name != "events":
-            df.limit(1).write.parquet(str(tmp_path / f"{name}.parquet"))
     out = {
         r["stage"]: r["n_users"]
         for r in ext.events_funnel_seq(spark, str(tmp_path)).collect()

@@ -4,7 +4,9 @@
 name resolution reads a driver-side catalog snapshot: a request launches
 no Python worker (no ``pyspark.daemon`` fork, no pandas/pyarrow import per
 worker), and a resolve of known names launches no Spark job at all while
-the snapshot is younger than the catalog TTL.
+the snapshot is younger than the catalog TTL. Set-up and /image do only
+the work the response reads: the fixture opens the ``events`` table alone,
+and /image builds no binned-raster or hover plan.
 """
 
 from __future__ import annotations
@@ -106,3 +108,65 @@ def test_catalog_snapshot_expires_after_ttl(spark, monkeypatch):
     assert jobs >= 1 and fresh is not snap and fresh == snap
     again, jobs = _jobs_in_group(spark, "snapshot-renewed", catalog.ids)
     assert jobs == 0 and again is fresh
+
+
+def test_render_image_builds_no_binned_or_hover_plan(engine, monkeypatch):
+    """/image's response reads the line raster, never ``image_aggregates``'
+    binned raster or hover stats, so render_image must not build them."""
+    from web_maxiv_hdbppviewer_spark.api import lifecycle
+
+    attributes = [{"name": n, "y_axis": k % 2} for k, n in enumerate(NAMES)]
+    args = (attributes, T0, T1, (120, 60), {"1": {"scale": "log"}})
+    want = engine.render_image(*args)
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("render_image built a plan its response does not read")
+
+    monkeypatch.setattr(lifecycle, "bin_2d", refuse)
+    monkeypatch.setattr(lifecycle, "hover_stats", refuse)
+    assert engine.render_image(*args) == want
+    assert sorted(want["images"]) == [0, 1]
+
+
+def test_fixture_opens_only_the_events_table(spark, tmp_path):
+    """The HDB++ fixture reads ``events`` alone: built over a directory
+    holding nothing else, the session's table mapping has one entry."""
+    import shutil
+
+    from web_maxiv_hdbppviewer_spark.cache import artifacts
+
+    shutil.copy(f"{SF_SMOKE}/events.parquet", tmp_path / "events.parquet")
+    catalog, datapoints = hdbpp_fixture(spark, str(tmp_path))
+    assert list(artifacts.peek(spark, "tables", str(tmp_path))) == ["events"]
+    assert len(catalog.ids()) == datapoints.select("att_conf_id").distinct().count()
+
+
+def test_concurrent_first_use_opens_a_table_once(spark):
+    """Threads that ask for an unopened table at once all get one frame."""
+    import sys
+    import threading
+
+    from web_maxiv_hdbppviewer_spark.sources.tables import _Tables
+
+    tables = _Tables(spark, SF_SMOKE)
+    got, errors = [], []
+
+    def fetch():
+        try:
+            got.append(tables["orders"])
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=fetch) for _ in range(8)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert len(got) == len(threads) and all(df is got[0] for df in got)
+    assert list(tables) == ["orders"]

@@ -20,6 +20,7 @@ from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
 from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
+from tests.compose_reference import compose_image_reference
 from tests.rasterline_reference import (
     _segments_to_pixels,
     assert_native_equals_reference,
@@ -237,6 +238,57 @@ def test_compose_image_is_row_order_independent():
         shuffled = rows[:]
         rng.shuffle(shuffled)
         assert (compose_image(shuffled, 4, 4) == ref).all()
+
+
+def _random_pixel_rows(rng, w, h):
+    """Random (series, xb, yb, cnt) rows: some off the canvas on each side,
+    some repeating a pixel of their series, series ids unordered."""
+    n = int(rng.integers(0, 400))
+    series = rng.choice([3, 11, 7, 42, 5], size=n)
+    xb = rng.integers(-3, w + 3, size=n)
+    yb = rng.integers(-3, h + 3, size=n)
+    cnt = rng.integers(1, 9, size=n)
+    rows = [(int(s), int(x), int(y), int(c)) for s, x, y, c in zip(series, xb, yb, cnt)]
+    # exact duplicates and same-pixel rows with another count
+    for i in rng.integers(0, max(n, 1), size=min(n, 20)):
+        s, x, y, _ = rows[i]
+        rows.append((s, x, y, int(rng.integers(1, 9))))
+    return rows
+
+
+def test_compose_image_matches_per_row_reference():
+    """The column-wise compose equals the per-row reference bit for bit on
+    Spark Rows (with extra fields in another order) and on dicts, with and
+    without colors, widths, request order and linear shading."""
+    from pyspark.sql import Row
+
+    from web_maxiv_hdbppviewer_spark.api.png import compose_image
+
+    collected = Row("cnt", "vmax", "series", "yb", "xb")
+    rng = np.random.default_rng(20240105)
+    for case in range(300):
+        w, h = int(rng.integers(1, 24)), int(rng.integers(1, 16))
+        rows = _random_pixel_rows(rng, w, h)
+        dicts = [{"series": s, "xb": x, "yb": y, "cnt": c} for s, x, y, c in rows]
+        spark_rows = [collected(c, 0.5, s, y, x) for s, x, y, c in rows]
+        ids = sorted({r[0] for r in rows})
+        kwargs = {}
+        if rng.random() < 0.5:
+            kwargs["colors"] = {s: tuple(int(v) for v in rng.integers(0, 256, 3))
+                                for s in ids if rng.random() < 0.5}
+        if rng.random() < 0.5:
+            kwargs["widths"] = {s: int(rng.integers(0, 3)) for s in ids}
+        if rng.random() < 0.5:
+            kwargs["shading"] = "linear"
+        if rng.random() < 0.5:
+            # a partial request order, with an id no row carries
+            listed = [s for s in ids if rng.random() < 0.7]
+            kwargs["order"] = list(rng.permutation(listed + [99]).tolist())
+        want = compose_image_reference(dicts, w, h, **kwargs)
+        for form, given in (("dict", dicts), ("Row", spark_rows)):
+            got = compose_image(given, w, h, **kwargs)
+            assert got.dtype == want.dtype and got.shape == want.shape
+            assert (got == want).all(), f"case {case} ({form} rows, {kwargs})"
 
 
 def test_lifecycle_image_digest_matches_independent_compositor(spark):

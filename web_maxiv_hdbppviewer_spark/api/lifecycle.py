@@ -279,23 +279,21 @@ class HdbppQueryEngine:
 
     # --- /image lifecycle (SURVEY §3.1, pre-render aggregates) -----------
 
-    def image_aggregates(
+    def _axis_windows(
         self,
         attributes: list[dict],
         t0: datetime,
         t1: datetime,
-        size: tuple[int, int],
         axes: dict[str, dict] | None = None,
     ) -> dict:
-        """Everything the /image endpoint needs BEFORE pixel encoding:
-        per-axis y_range (extrema + padding + manual overrides,
-        plot.py:74-188), the 2-D binned raster aggregate (A6) and per-column
-        hover stats (A8). Driver receives <= w*h rows per axis.
+        """The per-axis preparation both /image paths share: one resolve,
+        per-scale extrema, and for each axis its y-range, its descs (point
+        count and extrema per series), its window plan (log projection
+        included) and its bin geometry. Builds no raster or hover plan.
 
         ``attributes``: [{"name": full_name, "y_axis": 0|1}, ...]
         ``axes``: {"0": {"scale": "linear"|"log", "min": x?, "max": x?}}
         """
-        w, h = size
         axes = axes or {}
         by_axis: dict[int, list[str]] = {}
         for spec in attributes:
@@ -305,7 +303,6 @@ class HdbppQueryEngine:
         # .timestamp() would shift the pixel x-axis by the host's UTC offset
         x0_us = datetime_to_epoch_us(t0)
         x1_us = datetime_to_epoch_us(t1)
-        span_us = float(x1_us - x0_us)
         result: dict = {}
 
         # ONE catalog resolve for the whole request; per-axis routing
@@ -431,31 +428,50 @@ class HdbppQueryEngine:
                 bin_col = "_v_bin"
             else:
                 bin_lo, bin_hi = y0, y1
-                bin_col = None
-            raster = bin_2d(
-                plot_data, x0_us, span_us, w, bin_lo, bin_hi, h,
-                value_col="value_r", keys=["att_conf_id"], bin_col=bin_col,
-            )
-            # hover clips on raw values (monotone-equivalent to the bin-
-            # space clip) and never y-bins, so it stays in data space
-            hover = hover_stats(
-                plot_data, x0_us, span_us, w, y0, y1,
-                value_col="value_r", keys=["att_conf_id"],
-            )
+                bin_col = "value_r"
             result[axis] = {
                 "y_range": (y0, y1),
                 "x_range": (x0_us, x1_us),
                 "bin_range": (bin_lo, bin_hi),
-                "bin_col": bin_col or "value_r",
-                "raster": raster,
-                "hover": hover,
+                "bin_col": bin_col,
                 "descs": descs,
                 # resolved routing + the filtered window plan, exposed so
-                # downstream passes (render_image's line raster) reuse them
-                # instead of re-collecting the catalog and rebuilding the scan
+                # the raster passes reuse them instead of re-resolving
+                # names and rebuilding the scan
                 "ids": ids,
                 "data": plot_data,
             }
+        return result
+
+    def image_aggregates(
+        self,
+        attributes: list[dict],
+        t0: datetime,
+        t1: datetime,
+        size: tuple[int, int],
+        axes: dict[str, dict] | None = None,
+    ) -> dict:
+        """The /image pre-render aggregates: ``_axis_windows``' per-axis
+        y_range, descs and window plan (extrema + padding + manual
+        overrides, plot.py:74-188), plus the 2-D binned raster aggregate
+        (A6, ``raster``) and per-column hover stats (A8, ``hover``) as
+        lazy plans. Driver receives <= w*h rows per axis when collected.
+        """
+        w, h = size
+        result = self._axis_windows(attributes, t0, t1, axes)
+        for ax in result.values():
+            x0_us, x1_us = ax["x_range"]
+            span_us = float(x1_us - x0_us)
+            ax["raster"] = bin_2d(
+                ax["data"], x0_us, span_us, w, *ax["bin_range"], h,
+                value_col="value_r", keys=["att_conf_id"], bin_col=ax["bin_col"],
+            )
+            # hover clips on raw values (monotone-equivalent to the bin-
+            # space clip) and never y-bins, so it stays in data space
+            ax["hover"] = hover_stats(
+                ax["data"], x0_us, span_us, w, *ax["y_range"],
+                value_col="value_r", keys=["att_conf_id"],
+            )
         return result
 
     def render_image(
@@ -468,10 +484,13 @@ class HdbppQueryEngine:
     ) -> dict:
         """The complete /image response (reference server.py:92-148):
         {"images": {axis: {image: base64 PNG, y_range, x_range}},
-         "descs": {attr: hover stats}}.
+         "descs": {attr: per-series point count and extrema}}.
 
-        The line raster (A7) runs as Catalyst expressions per segment; the
-        driver only ever sees pixel rows and the tiny extrema results.
+        Reads only ``_axis_windows``' preparation and the line raster (A7,
+        Catalyst expressions per segment): the binned raster and hover
+        plans of ``image_aggregates`` are not part of the response, so
+        they are never built. The driver only ever sees pixel rows and
+        the tiny extrema results.
         """
         from concurrent.futures import ThreadPoolExecutor
 
@@ -479,7 +498,7 @@ class HdbppQueryEngine:
         from .png import render_png_base64
 
         w, h = size
-        aggs = self.image_aggregates(attributes, t0, t1, size, axes)
+        aggs = self._axis_windows(attributes, t0, t1, axes)
         descs: dict = {}
 
         # per-axis line raster + PNG encode are INDEPENDENT chains

@@ -4,10 +4,13 @@ The reference shades each series' raster with its color (datashader
 ``tf.shade(agg, cmap=[color])`` - single-hue, EQ-HIST alpha by default),
 optionally widens the line (``tf.spread(image, px=width)``,
 plot.py:38-42), then stacks the per-series layers with source-over
-compositing (``tf.stack``, plot.py:206). Here the pixel rows arrive as
-bounded aggregates (<= w*h per series) and the shade/spread/stack/encode
-happens driver-side with a dependency-free PNG writer (stdlib zlib):
+compositing (``tf.stack``, plot.py:206). Here the pixel rows are the
+line raster's collected (series, xb, yb, cnt) rows, at most w*h per
+series, and shade/spread/stack/encode happens driver-side with a
+dependency-free PNG writer (stdlib zlib):
 
+  - columns: the rows are transposed into one array per column once, and
+    grouped by series with a stable argsort (no per-row field lookups).
   - eq-hist shading: alpha follows the count histogram's CDF (rank-based),
     so dense and sparse regions both keep contrast - same transfer
     function family as datashader's default; ``shading="linear"`` keeps
@@ -15,8 +18,11 @@ happens driver-side with a dependency-free PNG writer (stdlib zlib):
   - spread: per-series max-alpha dilation by a square (2*px+1) kernel
     before stacking (single-hue layers make over-compositing of a layer
     with itself equivalent to max-alpha).
-  - stack: straight source-over in float, later series over earlier
-    (attribute order), like the reference.
+  - stack: source-over in premultiplied float, unpremultiplied once at
+    the end; later series over earlier in request order (ascending id
+    without one), like the reference. Each layer is composited only at
+    the pixels it paints: over-compositing a zero-alpha pixel leaves it
+    unchanged, so the result equals a whole-canvas stack bit for bit.
 """
 
 from __future__ import annotations
@@ -162,6 +168,19 @@ def snap_streamed_edge_rows(pixel_rows: list, w: int) -> list:
     return result
 
 
+def _pixel_columns(pixel_rows: list) -> list:
+    """The series, xb, yb and cnt columns of the pixel rows, one sequence
+    each. Spark ``Row``s (all from one collect, so of one schema) are
+    transposed with one ``zip`` and picked in ``Row.__fields__`` order;
+    mappings are read by key."""
+    names = ("series", "xb", "yb", "cnt")
+    fields = getattr(pixel_rows[0], "__fields__", None) if pixel_rows else None
+    if fields is None:
+        return [[r[c] for r in pixel_rows] for c in names]
+    cols = list(zip(*pixel_rows))
+    return [cols[fields.index(c)] for c in names]
+
+
 def compose_image(
     pixel_rows: list,
     w: int,
@@ -179,45 +198,68 @@ def compose_image(
     else in ascending id order. Either key is DETERMINISTIC, where
     first-appearance order of collected pixel rows depends on partition
     scheduling and would flip both the default palette assignment and the
-    stacking between runs. ``widths`` maps series -> spread px."""
-    by_series: dict = {}
-    for r in pixel_rows:
-        by_series.setdefault(r["series"], []).append(r)
+    stacking between runs. ``widths`` maps series -> spread px.
+
+    The rows become columns once and are grouped by a stable argsort of
+    their series, so each series keeps its row order; each layer touches
+    only the pixels it paints (after ``_spread``), and over-compositing an
+    unpainted pixel is the identity."""
+    series, xb, yb, cnt = _pixel_columns(pixel_rows)
+    present, code = np.unique(np.asarray(series), return_inverse=True)
+    present = present.tolist()
     if order is not None:
         # request order first (reference z-order), any series the request
         # didn't name appended deterministically by ascending id
-        series_ids = [s for s in order if s in by_series]
-        series_ids += sorted(s for s in by_series if s not in set(order))
+        listed, known = set(order), set(present)
+        series_ids = [s for s in order if s in known]
+        series_ids += [s for s in present if s not in listed]
     else:
-        series_ids = sorted(by_series)
+        series_ids = present
     # user overrides layered OVER the default palette: a request that colors
     # only SOME series must not crash the uncolored ones (they fall back to
     # their palette slot, like the reference client's per-line defaults)
     defaults = {s: LINE_COLORS[i % len(LINE_COLORS)] for i, s in enumerate(series_ids)}
     color_of = {**defaults, **(colors or {})}
 
+    # off-canvas rows are dropped before shading (they take no part in a
+    # series' alpha histogram); a series left without rows paints nothing
+    xs = np.asarray(xb).astype(np.int64)
+    ys = np.asarray(yb).astype(np.int64)
+    keep = (xs >= 0) & (xs < w) & (ys >= 0) & (ys < h)
+    xs, ys, code = xs[keep], h - 1 - ys[keep], code[keep]
+    cnts = np.asarray(cnt, dtype=np.float64)[keep]
+    by_series = np.argsort(code, kind="stable")
+    bounds = np.searchsorted(code[by_series], np.arange(len(present) + 1))
+    rows_of = {s: by_series[bounds[i] : bounds[i + 1]] for i, s in enumerate(present)}
+
     # premultiplied float compositing; unpremultiply at the end
     acc = np.zeros((h, w, 4), dtype=np.float64)
+    layer = np.zeros((h, w), dtype=np.float64)
     for s in series_ids:
-        rows = [
-            r for r in by_series[s] if 0 <= int(r["xb"]) < w and 0 <= int(r["yb"]) < h
-        ]
-        if not rows:
+        rows = rows_of[s]
+        if not len(rows):
             continue
-        xs = np.array([int(r["xb"]) for r in rows])
-        ys = h - 1 - np.array([int(r["yb"]) for r in rows])
-        cnts = np.array([r["cnt"] for r in rows], dtype=np.float64)
+        py, px = ys[rows], xs[rows]
+        c = cnts[rows]
         if shading == "linear":
-            alphas = 128.0 + 127.0 * np.minimum(cnts / cnts.max(), 1.0)
+            alphas = 128.0 + 127.0 * np.minimum(c / c.max(), 1.0)
         else:
-            alphas = _eq_hist_alpha(cnts)
-        layer_a = np.zeros((h, w), dtype=np.float64)
-        layer_a[ys, xs] = alphas / 255.0
-        layer_a = _spread(layer_a, int((widths or {}).get(s, 0)))
+            alphas = _eq_hist_alpha(c)
+        # a pixel listed twice keeps the value the canvas assignment
+        # leaves, as a dense layer would
+        layer[py, px] = alphas / 255.0
+        spread_px = int((widths or {}).get(s, 0))
+        if spread_px > 0:
+            wide = _spread(layer, spread_px)
+            layer[py, px] = 0.0
+            py, px = np.nonzero(wide)
+            a = wide[py, px]
+        else:
+            a = layer[py, px]
+            layer[py, px] = 0.0
         rgb = np.array(color_of[s], dtype=np.float64)
-        a = layer_a[..., None]
-        acc[..., :3] = rgb * a + acc[..., :3] * (1.0 - a)
-        acc[..., 3] = layer_a + acc[..., 3] * (1.0 - layer_a)
+        acc[py, px, :3] = rgb * a[:, None] + acc[py, px, :3] * (1.0 - a[:, None])
+        acc[py, px, 3] = a + acc[py, px, 3] * (1.0 - a)
 
     img = np.zeros((h, w, 4), dtype=np.uint8)
     visible = acc[..., 3] > 0

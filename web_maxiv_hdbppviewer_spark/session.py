@@ -85,7 +85,8 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         # dimension joins (att_conf/nation/region/...) must broadcast
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Arrow for every pandas interop path (pandas_udf raster kernel, toPandas)
+        # Arrow for every pandas interop path (the dedup bloom-probe
+        # pandas_udf, mapInPandas stages, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )

@@ -23,6 +23,8 @@ still prunes row groups via the derived-column statistics of the rewrite).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,28 +64,40 @@ def _normalize(df: DataFrame) -> DataFrame:
     return df.select(*cols)
 
 
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    register: bool = True,
-    tables: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """Load (and temp-view register) the testdata tables for one scale factor.
+class _Tables(dict):
+    """Table name -> normalized frame for one scale factor, each read,
+    normalized and temp-view registered on first access: a caller that
+    reads only ``events`` never opens the other nine files. Queries that
+    run on concurrent threads share the mapping, so a table is opened
+    under a lock and every caller gets the same frame."""
 
-    The full table set is a session artifact (registry kind "tables"), so
-    the normalized plans are derived once per session, not once per
-    declared query; a ``tables`` subset is loaded afresh."""
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        super().__init__()
+        self._spark, self._sf_dir = spark, sf_dir
+        self._lock = threading.Lock()
+
+    def __missing__(self, name: str) -> DataFrame:
+        if name not in TESTDATA_TABLES:
+            raise KeyError(name)
+        with self._lock:
+            df = self.get(name)
+            if df is None:
+                df = _normalize(self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet"))
+                df.createOrReplaceTempView(name)
+                self[name] = df
+        return df
+
+
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The testdata tables of one scale factor, by name.
+
+    One mapping per ``sf_dir`` is a session artifact (registry kind
+    "tables"); it opens a table the first time a caller asks for it, so
+    each normalized plan is derived once per session and only for the
+    tables the session reads."""
 
     def build() -> dict[str, DataFrame]:
         configure(spark)
-        out: dict[str, DataFrame] = {}
-        for name in tables or TESTDATA_TABLES:
-            df = _normalize(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-            out[name] = df
-            if register:
-                df.createOrReplaceTempView(name)
-        return out
+        return _Tables(spark, sf_dir)
 
-    if tables is not None:
-        return build()
     return artifacts.get_or_build(spark, "tables", sf_dir, build)
