@@ -60,36 +60,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # With ~187 declared queries and ~46 fill slots/round, every stable
 # query is re-witnessed at least every 4 rounds.
 #
-# Round-21 changelist. No plan is meant to change this round: the 30
-# module-level memo stores moved into the one session-artifact registry
-# (cache.artifacts), each keeping its build function and checkpoint mode.
-# The changelist is the first query in battery order to build each
-# registry kind, so the witness window's oracle hash checks cover every
-# re-routed build path.
+# This round's changelist: the three HDB++ lifecycle queries. Their
+# catalog path changed - the fixture's att_conf checkpoint is gone, and
+# name resolution, search and the control-system list read one
+# driver-side snapshot of the catalog, which is the session artifact
+# (registry kind "hdbpp_catalog"). No plan outside them is meant to change.
 _CHANGED_THIS_ROUND = [
-    "q1",  # tables
-    "sim_pca",  # pca_gram
-    "dedup_fuzzy",  # fuzzy_gram_idx, fuzzy_rare_idx
-    "pipe_funnel",  # shingle_idx, pair_table
-    "sim_ann_ivf",  # ann_scored
-    "sim_topk_pq",  # pq_codebooks
-    "text_winnow",  # winnow_marks
-    "dedup_winnow",  # dedup_method_pairs
-    "sim_outliers",  # centroid_codebook
-    "text_nb_eval",  # nb_preds
-    "sim_ann_ivfpq",  # ivfpq_artifacts
-    "sim_chunk_ann",  # chunk_vec_store, chunk_ivfpq_artifacts, chunk_adc_scored, chunk_ann_pooled
-    "sim_knn_graph",  # dots_baseline, emb_scored_pairs
-    "text_bpe_apply",  # bpe_merges
-    "lifecycle_image",  # hdbpp_catalog
-    "pipe_refinedweb",  # refinedweb_stages
-    "sim_sparse_topk",  # tfidf_stats
-    "stream_classify",  # nb_artifacts
-    "pipe_curation_lr",  # curation_scores, lr_preds
-    "pipe_stage_order",  # trained_stages
-    "sim_index_append",  # pq_base_codebooks
-    "sim_chunk_ann_recall",  # chunk_exact_docs
-    "dedup_semantic",  # coarse_centroids
+    "lifecycle_aggregate",
+    "lifecycle_query",
+    "lifecycle_image",
 ]
 _DECLARED = {**CORE_QUERIES, **EXTENSION_QUERIES}
 

@@ -12,7 +12,6 @@ from tests.conftest import SF_SMOKE
 
 from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
 from web_maxiv_hdbppviewer_spark.api.render import render_csv, render_grafana_json
-from web_maxiv_hdbppviewer_spark.cache import SliceCache, TtlDimension
 from web_maxiv_hdbppviewer_spark.operators.asof import asof_join
 from web_maxiv_hdbppviewer_spark.operators.extrema import pad_range
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
@@ -242,84 +241,6 @@ def test_asof_join_forward_includes_ties(spark):
         for r in asof_join(probes, hist, ["k"], direction="forward").collect()
     }
     assert got == {(1, 10): "a", (1, 15): "b", (1, 21): None, (2, 15): "c"}
-
-
-# --- cache ---------------------------------------------------------------
-
-
-def test_slice_cache_hit_equals_miss_and_evicts(spark, events):
-    day = events.where(F.to_date("ts") == "2024-01-05")
-    day6 = events.where(F.to_date("ts") == "2024-01-06")
-    # measure each entry's accounted size with a generous budget
-    probe = SliceCache(max_bytes=1 << 40)
-    probe.put(("cs1", 1, "2024-01-05"), day)
-    b5 = probe.size_bytes
-    probe.put(("cs1", 1, "2024-01-06"), day6)
-    b6 = probe.size_bytes - b5
-    probe.clear()
-
-    # budget admits either entry alone but not both: second put evicts first
-    cache = SliceCache(max_bytes=max(b5, b6) + 1)
-    first = cache.put(("cs1", 1, "2024-01-05"), day)
-    n1 = first.count()
-    assert cache.get(("cs1", 1, "2024-01-05")) is not None
-    cache.put(("cs1", 1, "2024-01-06"), day6)
-    assert cache.get(("cs1", 1, "2024-01-06")) is not None
-    assert cache.get(("cs1", 1, "2024-01-05")) is None
-    assert cache.size_bytes <= cache.max_bytes  # never exceeds budget
-    fresh = events.where(F.to_date("ts") == "2024-01-05").count()
-    assert n1 == fresh
-    cache.clear()
-
-    # reference utils.py:220-223: a value at or over the WHOLE budget is
-    # never stored at all (it would evict everything and still breach)
-    tiny = SliceCache(max_bytes=1)
-    out = tiny.put(("cs1", 1, "2024-01-05"), day)
-    assert out.count() == n1  # caller's plan still works uncached
-    assert tiny.get(("cs1", 1, "2024-01-05")) is None
-    assert tiny.size_bytes == 0
-    tiny.clear()
-
-
-def test_cache_guard_matches_query_rule(spark, events):
-    """The F6 future-period guard has TWO expressions of one rule - the
-    SliceCache.put refusal (driver-side string compare) and the declared
-    query q34's ``cacheable_period`` column - and they must agree on every
-    period of the testdata, including the today-is-hot boundary: put() must
-    persist exactly the periods q34 marks cacheable."""
-    from datetime import date
-
-    import __spark_entry__ as entry_mod
-    from tests.conftest import SF_SMOKE
-
-    today = date(2024, 1, 15)
-    rows = entry_mod.queries()["q34"](spark, SF_SMOKE).collect()
-    assert {r["period"] for r in rows} >= {"2024-01-14", "2024-01-15"}  # edge present
-    cache = SliceCache(max_bytes=1 << 40)
-    try:
-        for r in rows:
-            day = events.where(F.to_date("ts") == r["period"]).limit(1)
-            cache.put(("cs1", 1, r["period"]), day, today=today)
-            assert (cache.get(("cs1", 1, r["period"])) is not None) == r["cacheable"], (
-                r["period"], r["cacheable"])
-    finally:
-        cache.clear()
-
-
-def test_ttl_dimension_refresh(spark):
-    calls = []
-
-    def loader():
-        calls.append(1)
-        return spark.range(3)
-
-    dim = TtlDimension(loader, ttl_seconds=1000)
-    assert dim.get().count() == 3
-    assert dim.get().count() == 3
-    assert len(calls) == 1
-    dim.invalidate()
-    dim.get()
-    assert len(calls) == 2
 
 
 # --- incremental merge (X8: merged == full re-read) ----------------------
@@ -595,28 +516,6 @@ def test_rasterline_native_equals_reference(spark, events):
     # dot, series 4's only point is non-finite, series 5's lone point
     # floors off the canvas (x = -0.29) although it rounds onto it
     assert {s for s, _, _ in odd_px} == {1, 2, 3}
-
-
-def test_slice_cache_refuses_future_periods(spark, events):
-    """F6 guard: today/future day-slices keep growing - the cache must
-    refuse them (reference hdbpp.py:352-359) and route callers to the
-    incremental path."""
-    from datetime import date
-
-    cache = SliceCache()
-    day = events.where(F.to_date("ts") == "2024-01-05")
-    fake_today = date(2024, 1, 5)
-    # today's slice: returned un-persisted, never enters the cache
-    out = cache.put(("cs1", 1, "2024-01-05"), day, today=fake_today)
-    assert out is day
-    assert cache.get(("cs1", 1, "2024-01-05")) is None
-    assert cache.size_bytes == 0
-    # future slice likewise; completed (past) slice caches normally
-    cache.put(("cs1", 1, "2024-02-01"), day, today=fake_today)
-    assert cache.get(("cs1", 1, "2024-02-01")) is None
-    cache.put(("cs1", 1, "2024-01-04"), day, today=fake_today)
-    assert cache.get(("cs1", 1, "2024-01-04")) is not None
-    cache.clear()
 
 
 # --- parameter / history lifecycles (S5/S6) --------------------------------
@@ -2354,20 +2253,13 @@ def test_image_log_axis_filters_nonpositive_from_raster_and_extrema(spark):
     assert cells == 2  # only the two positive points rasterize
 
 
-def test_search_class_glob_is_fully_anchored_like_the_reference(spark):
-    """CONSTRUCTED: class globs take the regex fallback (LIKE cannot
-    express [seq]), and the reference fully anchors - re.match pins the
-    start, fnmatch.translate's \\Z the end (server.py:78-86). Java rlike
-    is find()-style, so an unanchored translate would also admit
-    'xfam1b' (suffix) and anything longer (prefix). Case-insensitivity
-    must hold on the class too."""
-    from web_maxiv_hdbppviewer_spark.operators.search import search_names
+def test_search_class_glob_is_fully_anchored_like_the_reference():
+    """CONSTRUCTED: the reference fully anchors a glob - re.match pins the
+    start, fnmatch.translate's \\Z the end (server.py:78-86). An
+    unanchored match would also admit 'xfam1b' (suffix) and anything
+    longer (prefix). Case-insensitivity must hold on the class too."""
+    from web_maxiv_hdbppviewer_spark.sources.hdbpp import match_names
 
-    df = spark.createDataFrame(
-        [("fam1b",), ("fam2b",), ("fam3b",), ("xfam1b",), ("fam1bx",), ("FAM2B",)],
-        ["name"],
-    )
-    got = sorted(
-        r["name"] for r in search_names(df, "fam[12]?", limit=None).collect()
-    )
+    names = ["fam1b", "fam2b", "fam3b", "xfam1b", "fam1bx", "FAM2B"]
+    got = sorted(match_names(names, "fam[12]?", limit=None))
     assert got == ["FAM2B", "fam1b", "fam2b"], got

@@ -1,12 +1,13 @@
 """The viewer's request paths run without Python workers.
 
 /image's line raster and /query's name join are plain Catalyst plans, and
-name resolution reads a driver-side catalog snapshot: a request launches
-no Python worker (no ``pyspark.daemon`` fork, no pandas/pyarrow import per
-worker), and a resolve of known names launches no Spark job at all while
-the snapshot is younger than the catalog TTL. Set-up and /image do only
-the work the response reads: the fixture opens the ``events`` table alone,
-and /image builds no binned-raster or hover plan.
+name resolution, /attributes search and the control-system listing read
+one driver-side catalog snapshot: a request launches no Python worker (no
+``pyspark.daemon`` fork, no pandas/pyarrow import per worker), and a
+catalog answer launches no Spark job at all while the snapshot is younger
+than the catalog TTL. Set-up and /image do only the work the response
+reads: the fixture opens the ``events`` table alone, and /image builds no
+binned-raster or hover plan.
 """
 
 from __future__ import annotations
@@ -75,8 +76,15 @@ def test_viewer_plans_have_no_python_nodes(engine):
     assert frames["query_raw_df no names"].count() == 0
 
 
+def _fresh_catalog(spark) -> hdbpp.HdbppCatalog:
+    """A catalog over the fixture's frames with no snapshot yet (the
+    fixture's own catalog is shared by the session)."""
+    shared, _ = hdbpp_fixture(spark, SF_SMOKE)
+    return hdbpp.HdbppCatalog(shared.att_conf, shared.att_names)
+
+
 def test_resolve_of_known_names_runs_no_spark_job(spark):
-    engine = HdbppQueryEngine(*hdbpp_fixture(spark, SF_SMOKE))
+    engine = HdbppQueryEngine(_fresh_catalog(spark), hdbpp_fixture(spark, SF_SMOKE)[1])
     first, jobs = _jobs_in_group(spark, "resolve-first", lambda: engine._resolve(NAMES))
     assert jobs >= 1  # the snapshot is collected on first use
     again, jobs = _jobs_in_group(spark, "resolve-again", lambda: engine._resolve(NAMES))
@@ -97,7 +105,7 @@ def test_resolve_of_known_names_runs_no_spark_job(spark):
 def test_catalog_snapshot_expires_after_ttl(spark, monkeypatch):
     now = [1000.0]
     monkeypatch.setattr(hdbpp, "_clock", lambda: now[0])
-    catalog, _ = hdbpp_fixture(spark, SF_SMOKE)
+    catalog = _fresh_catalog(spark)
     snap, jobs = _jobs_in_group(spark, "snapshot-first", catalog.ids)
     assert jobs >= 1 and snap
     now[0] += hdbpp.CATALOG_TTL_S
@@ -108,6 +116,21 @@ def test_catalog_snapshot_expires_after_ttl(spark, monkeypatch):
     assert jobs >= 1 and fresh is not snap and fresh == snap
     again, jobs = _jobs_in_group(spark, "snapshot-renewed", catalog.ids)
     assert jobs == 0 and again is fresh
+
+
+def test_warm_search_and_controlsystems_run_no_spark_job(spark, engine):
+    """/attributes and the control-system listing answer from the warm
+    snapshot: matching, sorting and capping run on the driver, and the
+    answer frame is a LocalRelation whose collect launches no job."""
+    engine._resolve(NAMES)  # the snapshot is warm from here on
+    hits, jobs = _jobs_in_group(
+        spark, "search-warm", lambda: engine.search("cs1", "DOM1/*/mem?/*", 3).collect()
+    )
+    assert jobs == 0
+    assert len(hits) == 3 and [r["name"] for r in hits] == sorted(r["name"] for r in hits)
+    assert all(r["cs_name"] == "cs1" and r["name"].startswith("dom1/") for r in hits)
+    cs, jobs = _jobs_in_group(spark, "controlsystems-warm", lambda: engine.controlsystems().collect())
+    assert jobs == 0 and [r["cs_name"] for r in cs] == ["cs1"]
 
 
 def test_render_image_builds_no_binned_or_hover_plan(engine, monkeypatch):

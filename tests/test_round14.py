@@ -209,7 +209,7 @@ def test_grafana_search_wrap_byte_parity_on_literal_terms(spark):
 
 
 def test_grafana_search_metacharacter_divergence_pinned(spark):
-    """Documented divergence (operators/search.py header): the reference
+    """Documented divergence (sources/hdbpp.match_names): the reference
     splices the term into the regex UNESCAPED, so 'a.c' also matches
     'aXc'; the engine treats the term as a literal substring. Pin both
     sides so the divergence stays deliberate."""

@@ -182,32 +182,47 @@ def test_search_cap_divergence_reference_never_caps(spark):
     assert engine_uncapped == ref_matches  # byte-shape parity, cap excluded
 
 
-def test_catalog_ttl_staleness_window_pinned(spark):
+def test_catalog_ttl_staleness_window_pinned(spark, tmp_path, monkeypatch):
     """VERDICT r14 #7: the reference memoizes both catalog fetches for
     60 s (@memoized_ttl(60), hdbpp.py:213,230 / utils.py:29-50), so an
     attribute registered after the memo fill is INVISIBLE to /search for
-    up to a minute. Pin that the engine's TtlDimension twin accepts the
-    same staleness contract - within the TTL the snapshot does NOT see a
-    source append (that IS the reference behavior, not a bug), and
-    invalidate()/expiry swaps in the fresh list. The engine's default
-    ttl_seconds=60.0 matches the reference literal."""
-    import inspect
+    up to a minute. Pin that the engine's catalog snapshot keeps the
+    same staleness contract - within the TTL a search does NOT see a
+    source append (that IS the reference behavior, not a bug), and once
+    the snapshot is older than the TTL the next search sees the fresh
+    list. The engine's CATALOG_TTL_S matches the reference literal."""
+    from web_maxiv_hdbppviewer_spark.sources import hdbpp
 
-    from web_maxiv_hdbppviewer_spark.cache import TtlDimension
-
-    sig = inspect.signature(TtlDimension.__init__)
-    assert sig.parameters["ttl_seconds"].default == 60.0  # hdbpp.py:213
-
-    source = [("cs1", "dom0/fam0/mem0/attr0")]
-    dim = TtlDimension(
-        lambda: spark.createDataFrame(source, "cs_name string, name string"),
-        ttl_seconds=1000,
+    assert hdbpp.CATALOG_TTL_S == 60.0  # hdbpp.py:213
+    now = [1000.0]
+    monkeypatch.setattr(hdbpp, "_clock", lambda: now[0])
+    table = "ttl_pin_att_names"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(
+        f"CREATE TABLE {table} (cs_name string, domain string, family string,"
+        f" member string, name string) USING parquet LOCATION '{tmp_path}/names'"
     )
-    assert dim.get().count() == 1
-    source.append(("cs1", "dom0/fam0/mem0/attr1"))  # registered mid-TTL
-    assert dim.get().count() == 1  # stale by contract: the 60s window
-    dim.invalidate()
-    assert dim.get().count() == 2  # fresh after expiry/invalidate
+    try:
+        spark.sql(f"INSERT INTO {table} VALUES ('cs1', 'dom0', 'fam0', 'mem0', 'attr0')")
+        att_conf = spark.createDataFrame(
+            [("cs1", "dom0/fam0/mem0/attr0", 1, "scalar_devdouble_ro")],
+            "cs_name string, att_name string, att_conf_id long, data_type string",
+        )
+        catalog = hdbpp.HdbppCatalog(att_conf, spark.table(table))
+
+        def found():
+            return [r["name"] for r in catalog.search("cs1", "*").collect()]
+
+        assert found() == ["dom0/fam0/mem0/attr0"]
+        # registered mid-TTL
+        spark.sql(f"INSERT INTO {table} VALUES ('cs1', 'dom0', 'fam0', 'mem0', 'attr1')")
+        assert spark.table(table).count() == 2  # the source does see it
+        now[0] += hdbpp.CATALOG_TTL_S
+        assert found() == ["dom0/fam0/mem0/attr0"]  # stale by contract
+        now[0] += 1.0
+        assert found() == ["dom0/fam0/mem0/attr0", "dom0/fam0/mem0/attr1"]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_pipe_curation_trained_funnel_is_self_auditing(spark):

@@ -10,13 +10,13 @@ Layout:
   schemas    - fixed StructType declarations (HDB++ logical model + testdata)
   sources    - parquet loaders / HDB++ logical-model adapters
   functions  - column-expression helpers (time, names, vectors, text hashing)
-  operators  - engine operators (resample, raster, extrema, as-of, search,
-               dedup, similarity, text quality, multimodal)
+  operators  - engine operators (resample, raster, extrema, as-of, dedup,
+               similarity, text quality, multimodal)
   plans      - declared queries (SURVEY.md section 2.11 Q1-Q28 + extensions)
                and their DuckDB oracle SQL
   api        - result renderers (CSV, Grafana JSON) for the /query lifecycle
   streaming  - incremental merge (hot "today" partition) + live-mode streams
-  cache      - keyed slice cache manager (reference utils.py:174-236 analog)
+  cache      - session-artifact registry, F6 future-period rule
 """
 
 __version__ = "0.1.0"

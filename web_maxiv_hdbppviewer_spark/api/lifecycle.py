@@ -5,8 +5,9 @@
 Spark lifecycle (SURVEY §3.1 "Spark lifecycle equivalent"): request ->
 DataFrame expression -> Catalyst optimized plan (partition pruning replaces
 the reference's hand-built day fan-out, pushdown replaces its incremental
-lower-bound scan) -> only bounded aggregates (pixels, extrema, capped
-search) ever reach the driver.
+lower-bound scan) -> only bounded aggregates (pixels, extrema) ever reach
+the driver. /attributes and name resolution run no Spark job: they read the
+catalog's driver-side snapshot (``HdbppCatalog``).
 """
 
 from __future__ import annotations
@@ -619,9 +620,12 @@ class HdbppQueryEngine:
     # --- /attributes lifecycle (SURVEY §3.3) ------------------------------
 
     def search(self, cs: str, pattern: str, max_n: int = 100, contains: bool = False):
+        """(cs_name, name) matches from the catalog snapshot, sorted and
+        capped (``HdbppCatalog.search``); no Spark job while it is fresh."""
         return self.catalog.search(cs, pattern, max_n, contains)
 
     def controlsystems(self):
+        """Sorted control systems from the same snapshot, no Spark job."""
         return self.catalog.controlsystems()
 
     # --- staleness control (X10) ------------------------------------------

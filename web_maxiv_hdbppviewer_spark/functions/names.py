@@ -2,9 +2,10 @@
 
 The reference builds a 5-part attribute name ``cs/domain/family/member/name``
 with string formatting (reference server.py:83-84) and splits it back with
-``rsplit("/", 4)`` (reference hdbpp.py:90-92); lookups lower-case the name
-first (reference data.py:92). All of it is plain column expressions here -
-never a UDF.
+``rsplit("/", 4)`` (reference hdbpp.py:90-92). Both are plain column
+expressions here - never a UDF. Lookups lower-case the name first
+(reference data.py:92); the engine does that driver-side, against the
+catalog snapshot (``api.lifecycle._split_attr``).
 """
 
 from __future__ import annotations
@@ -42,9 +43,3 @@ def attr_without_cs(full_name: Column | str) -> Column:
     (the other half of reference hdbpp.py:90-92's rsplit)."""
     c = F.col(full_name) if isinstance(full_name, str) else full_name
     return F.regexp_extract(c, _RSPLIT4_ATTR, 1)
-
-
-def attr_normalized(name: Column | str) -> Column:
-    """Lower-cased lookup key (reference data.py:92)."""
-    c = F.col(name) if isinstance(name, str) else name
-    return F.lower(c)

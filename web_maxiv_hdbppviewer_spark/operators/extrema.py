@@ -4,8 +4,10 @@ The reference computes per-series min/max over the view window (reference
 plot.py:92-99), dropping non-positive values first when the axis is log
 scaled (plot.py:94-97), then folds min-of-mins / max-of-maxes across all
 series on one axis (plot.py:112-130), finally merging manual axis overrides
-(plot.py:101-104). All of it is one aggregation pass here; series with no
-surviving points surface as null extrema (the reference's ``nodata`` set).
+(plot.py:101-104). The per-series pass is one aggregation here; series with
+no surviving points surface as null extrema (the reference's ``nodata``
+set). The axis fold and the manual overrides are driver-side over those
+few rows (``api.lifecycle``), followed by ``pad_range``.
 """
 
 from __future__ import annotations
@@ -41,26 +43,6 @@ def series_extrema(
         F.max(valid).alias("vmax"),
         F.count(F.lit(1)).alias("n"),
     )
-
-
-def axis_extrema(
-    df: DataFrame,
-    value_col: str = "value",
-    log_scale: bool = False,
-    manual_min: float | None = None,
-    manual_max: float | None = None,
-) -> DataFrame:
-    """Cross-series axis extrema (min of mins / max of maxes, plot.py:112-130)
-    with the reference's manual-override merge (plot.py:101-104)."""
-    v = F.col(value_col)
-    if log_scale:
-        df = df.where(v > 0)
-    agg = df.agg(F.min(v).alias("axis_min"), F.max(v).alias("axis_max"))
-    if manual_min is not None:
-        agg = agg.withColumn("axis_min", F.lit(float(manual_min)))
-    if manual_max is not None:
-        agg = agg.withColumn("axis_max", F.lit(float(manual_max)))
-    return agg
 
 
 def pad_range(vmin: float, vmax: float, log_scale: bool = False) -> tuple[float, float]:

@@ -362,7 +362,7 @@ CORE_ORACLE = {
         ORDER BY ts, event_id LIMIT 200 OFFSET 400
     """,
     # F6 future-period guard: cacheable iff period < the fixed 'now'
-    # (2024-01-15), the SliceCache.put refusal rule
+    # (2024-01-15), the cache.cacheable_period rule
     "q34": """
         SELECT strftime(ts, '%Y-%m-%d') AS period,
                CAST(COUNT(*) AS BIGINT) AS n,

@@ -452,11 +452,11 @@ def q33(spark, sf_dir):
 
 def q34(spark, sf_dir):
     """F6: future-period cache guard as a declared query - per day-period
-    of the events table, the row count and whether the immutable slice
+    of the events table, the row count and whether an immutable day-slice
     cache may admit it relative to a fixed 'now' (2024-01-15, mid-range):
-    the SAME ISO-lexicographic rule SliceCache.put enforces (cache.py F6
-    guard; column twin ``cacheable_period``), so the oracle hash witnesses
-    the guard's decision boundary including the today-is-hot edge."""
+    the ISO-lexicographic rule of the reference's guard (hdbpp.py:352-359),
+    whose one engine expression is ``cache.cacheable_period``, so the oracle
+    hash witnesses its decision boundary including the today-is-hot edge."""
     from datetime import date
 
     from ..cache import cacheable_period

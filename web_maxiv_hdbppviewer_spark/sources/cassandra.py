@@ -139,9 +139,12 @@ def cassandra_catalog(
     att_conf: DataFrame | None = None,
     att_names: DataFrame | None = None,
 ):
-    """HdbppCatalog over the connector-backed dimension tables
-    (reference hdbpp.py:213-241 fetches them wholesale every 60 s; pair
-    with cache.TtlDimension for the same refresh behavior)."""
+    """HdbppCatalog over the connector-backed dimension tables. The
+    reference fetches them wholesale every 60 s (hdbpp.py:213-241); the
+    catalog's snapshot does the same, collecting both tables again once
+    it is older than ``hdbpp.CATALOG_TTL_S``. ``att_conf``/``att_names``
+    (tests / non-Cassandra deployments) substitute the connector
+    readers."""
     from .hdbpp import HdbppCatalog
 
     conf = att_conf if att_conf is not None else cassandra_table(

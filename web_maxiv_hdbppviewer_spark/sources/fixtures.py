@@ -56,44 +56,38 @@ def hdbpp_datapoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hdbpp_fixture(spark: SparkSession, sf_dir: str) -> tuple[HdbppCatalog, DataFrame]:
     """(catalog, datapoints) in the engine's HDB++ logical model.
 
-    The att_conf dimension is a session checkpoint (optimization r20,
-    VERDICT r19 #6; registry kind "hdbpp_catalog"): the fixture catalog
-    is a STATIC artifact of the corpus, but every lifecycle query's name
-    resolve re-ran its distinct-over-events derivation to build the
-    catalog snapshot. One lazy localCheckpoint per (session,
-    sf_dir); a deployed HDB++ system reads att_conf from a real (tiny)
-    dimension table, so serving later resolves from the checkpointed
-    rows is the deployment shape, not a benchmark shortcut. Values
-    identical (same deterministic derivation)."""
-    events = load_tables(spark, sf_dir)["events"]
-    uid = F.col("user_id")
+    ``att_conf`` and ``att_names`` are plain derivations over ``events``:
+    the catalog's driver-side snapshot collects them once per
+    CATALOG_TTL_S, in one query that runs their shared distinct once,
+    and answers every resolve, search and control-system listing in
+    between. The catalog object itself is the session
+    artifact (registry kind "hdbpp_catalog", one per (session, sf_dir)),
+    so the lifecycle queries of one session share one snapshot."""
 
-    att_conf = artifacts.get_or_build(
-        spark,
-        "hdbpp_catalog",
-        sf_dir,
-        lambda: (
-            events.select(uid).distinct()
-            .select(
-                F.lit(CS_NAME).alias("cs_name"),
-                _att_name(uid).alias("att_name"),
-                uid.cast("long").alias("att_conf_id"),
-                F.lit(DATA_TYPE).alias("data_type"),
-            )
-            .localCheckpoint(eager=False)
-        ),
-    )
-    att_names = att_conf.select(
-        "cs_name",
-        F.split_part(F.col("att_name"), F.lit("/"), F.lit(1)).alias("domain"),
-        F.split_part(F.col("att_name"), F.lit("/"), F.lit(2)).alias("family"),
-        F.split_part(F.col("att_name"), F.lit("/"), F.lit(3)).alias("member"),
-        F.split_part(F.col("att_name"), F.lit("/"), F.lit(4)).alias("name"),
-    )
+    def build() -> HdbppCatalog:
+        events = load_tables(spark, sf_dir)["events"]
+        uid = F.col("user_id")
+        att_conf = events.select(uid).distinct().select(
+            F.lit(CS_NAME).alias("cs_name"),
+            _att_name(uid).alias("att_name"),
+            uid.cast("long").alias("att_conf_id"),
+            F.lit(DATA_TYPE).alias("data_type"),
+        )
+        att_names = att_conf.select(
+            "cs_name",
+            F.split_part(F.col("att_name"), F.lit("/"), F.lit(1)).alias("domain"),
+            F.split_part(F.col("att_name"), F.lit("/"), F.lit(2)).alias("family"),
+            F.split_part(F.col("att_name"), F.lit("/"), F.lit(3)).alias("member"),
+            F.split_part(F.col("att_name"), F.lit("/"), F.lit(4)).alias("name"),
+        )
+        return HdbppCatalog(att_conf, att_names)
 
     # ro attributes genuinely have no write value (DATAPOINTS_SCHEMA
     # value_w sidecar; the rw carrier is mixed_type_datapoints)
-    return HdbppCatalog(att_conf, att_names), hdbpp_datapoints(spark, sf_dir)
+    return (
+        artifacts.get_or_build(spark, "hdbpp_catalog", sf_dir, build),
+        hdbpp_datapoints(spark, sf_dir),
+    )
 
 
 def parameter_history_fixture(

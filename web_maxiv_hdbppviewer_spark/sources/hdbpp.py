@@ -3,12 +3,16 @@
 Replaces the reference's Cassandra access layer (reference hdbpp.py) with
 DataFrame-native equivalents:
 
-  - catalogs (``att_conf``, ``att_names``) are small cached dimensions; the
-    reference fetches them wholesale every 60 s (hdbpp.py:213-241).
-  - name -> att_conf_id resolution is a lookup in a driver-side snapshot of
-    ``att_conf`` (J1), refreshed on the same 60 s TTL - the reference's
-    dict lookup (hdbpp.py:404). A request's names are a handful; a Spark
-    job per request to join them would cost more than the request.
+  - the catalogs (``att_conf``, ``att_names``) are collected into one
+    driver-side snapshot, again every 60 s, as the reference fetches them
+    wholesale every 60 s (hdbpp.py:213-241). The snapshot answers all
+    three catalog questions without a Spark job: name -> att_conf_id
+    resolution (J1) is a dict lookup, the reference's (hdbpp.py:404);
+    /attributes search matches the sorted name list in Python, as the
+    reference's server does (server.py:78-86); and the control-system
+    listing is the snapshot's keys. A request's names are a handful and
+    the catalog is small; a Spark job per request would cost more than
+    the answer.
   - day-partition enumeration (X1, reference hdbpp.py:303-321 hand-builds
     one CQL future per local-calendar day) becomes partition PRUNING: data
     is stored partitioned by (data_type, period) and the planner emits a
@@ -30,18 +34,21 @@ Storage layout for 100 TB (write_datapoints):
 
 from __future__ import annotations
 
+import fnmatch
+import re
 import time
 from datetime import datetime, timedelta
 from zoneinfo import ZoneInfo
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.names import attr_full_name
 from ..functions.time import utc_ts_lit
 
-#: seconds a catalog snapshot serves name resolution before it is
-#: collected again - the reference's catalog TTL (hdbpp.py:213, 230)
+#: seconds a catalog snapshot serves resolution, search and the
+#: control-system listing before it is collected again - the reference's catalog TTL (hdbpp.py:213, 230)
 CATALOG_TTL_S = 60.0
 
 #: the snapshot's clock; monotonic, so wall-clock steps cannot expire it
@@ -88,25 +95,87 @@ def derive_period(ts_col, zone: str = DEFAULT_PERIOD_ZONE):
     return F.date_format(F.from_utc_timestamp(ts_col, zone), "yyyy-MM-dd")
 
 
+def match_names(
+    names: list[str], pattern: str, contains: bool = False, limit: int | None = None
+) -> list[str]:
+    """The ``names`` a search keeps, in their given order, at most
+    ``limit`` of them (None: all).
+
+    Matching is case-insensitive. A glob matches the WHOLE name, as the
+    reference's ``re.match`` over ``fnmatch.translate`` does
+    (server.py:78-86). ``contains=True`` is the Grafana /search variant
+    (server.py:196-207), but the term is a LITERAL substring: the
+    reference splices it into its ``.*term.*`` regex unescaped, so there
+    ``a.c`` also matches ``abc`` and a malformed term raises.
+
+    ``limit=0`` is a real cap of zero names; a negative limit raises
+    ValueError, since a slice would silently drop the last names."""
+    if limit is not None and limit < 0:
+        raise ValueError(f"search cap must be >= 0, got {limit}")
+    key = pattern.upper()
+    if contains:
+        hits = [n for n in names if key in n.upper()]
+    else:
+        match = re.compile(fnmatch.translate(key)).match
+        hits = [n for n in names if match(n.upper())]
+    return hits if limit is None else hits[:limit]
+
+
 class HdbppCatalog:
-    """The two dimension tables + name resolution/search over them."""
+    """The two dimension tables, and name resolution, search and the
+    control-system listing over one driver-side snapshot of them."""
 
     def __init__(self, att_conf: DataFrame, att_names: DataFrame):
         self.att_conf = att_conf
         self.att_names = att_names
-        self._ids: dict[tuple[str, str], int] | None = None
-        self._ids_at = float("-inf")
+        self._snap: tuple[float, dict, dict[str, list[str]]] | None = None
+
+    def _snapshot(self) -> tuple[float, dict, dict[str, list[str]]]:
+        """(taken at, {(cs_name, att_name): att_conf_id}, {cs_name: sorted
+        full names}). Collected on first use and again once it is older
+        than CATALOG_TTL_S, like the reference's catalog memo
+        (hdbpp.py:213, 230); in between, the catalog launches no Spark
+        job."""
+        now = _clock()
+        snap = self._snap
+        if snap is None or now - snap[0] > CATALOG_TTL_S:
+            # both tables in ONE query, so a catalog whose att_names
+            # derives from att_conf (the fixture's) computes their shared
+            # subplan once (exchange reuse)
+            conf = self.att_conf.select(
+                F.lit(True), "cs_name", "att_name", "att_conf_id"
+            )
+            full = self.att_names.select(
+                F.lit(False),
+                "cs_name",
+                attr_full_name("domain", "family", "member", "name"),
+                F.lit(None).cast("long"),
+            )
+            ids: dict[tuple[str, str], int] = {}
+            names: dict[str, list[str]] = {}
+            for is_conf, cs, name, i in conf.union(full).collect():
+                if is_conf:
+                    ids[(cs, name)] = i
+                else:
+                    names.setdefault(cs, []).append(name)
+            for v in names.values():
+                v.sort()
+            snap = self._snap = (now, ids, names)
+        return snap
+
+    def _frame(self, **columns: list[str]) -> DataFrame:
+        """String columns as a LocalRelation: collecting it runs no job."""
+        return self.att_conf.sparkSession.createDataFrame(
+            pa.table({k: pa.array(v, pa.string()) for k, v in columns.items()})
+        )
+
+    def ids(self) -> dict[tuple[str, str], int]:
+        """The snapshot's {(cs_name, att_name): att_conf_id}."""
+        return self._snapshot()[1]
 
     def controlsystems(self) -> DataFrame:
         """Distinct control systems, sorted (reference server.py:63-70)."""
-        return self.att_conf.select("cs_name").distinct().orderBy("cs_name")
-
-    def full_names(self) -> DataFrame:
-        """cs + formatted 'domain/family/member/name' (reference server.py:83-84)."""
-        return self.att_names.select(
-            "cs_name",
-            attr_full_name("domain", "family", "member", "name").alias("name"),
-        )
+        return self._frame(cs_name=sorted({cs for cs, _ in self.ids()}))
 
     def search(
         self,
@@ -115,7 +184,8 @@ class HdbppCatalog:
         max_n: int | str | None = 100,
         contains: bool = False,
     ) -> DataFrame:
-        """Glob/substring attribute search, sorted + capped (reference
+        """(cs_name, name) of ``cs``'s attributes that ``pattern`` matches
+        (``match_names``), sorted by name and capped (reference
         server.py:73-89; the cap is enforced here unlike the reference).
 
         DOCUMENTED DIVERGENCE (SURVEY O5): the reference PARSES ``max``
@@ -131,31 +201,15 @@ class HdbppCatalog:
         ``max_n`` accepts a STRING like the reference's query param
         (str when the client sends one, int 100 otherwise) and
         int()-coerces it - the coercion the reference would need had it
-        applied the cap it parses. A non-numeric string raises
-        ValueError at the API edge rather than silently scanning
-        uncapped."""
-        from ..operators.search import search_names
-
-        names = self.full_names().where(F.col("cs_name") == cs)
-        return search_names(
-            names,
+        applied the cap it parses. A non-numeric string or a negative
+        cap raises ValueError at the API edge."""
+        hits = match_names(
+            self._snapshot()[2].get(cs, []),
             pattern,
-            "name",
-            contains=contains,
-            limit=None if max_n is None else int(max_n),
+            contains,
+            None if max_n is None else int(max_n),
         )
-
-    def ids(self) -> dict[tuple[str, str], int]:
-        """The driver-side {(cs_name, att_name): att_conf_id} snapshot.
-        Collected on first use and again once it is older than
-        CATALOG_TTL_S, like the reference's catalog memo (hdbpp.py:213,
-        230); in between, name resolution launches no Spark job."""
-        now = _clock()
-        if self._ids is None or now - self._ids_at > CATALOG_TTL_S:
-            rows = self.att_conf.select("cs_name", "att_name", "att_conf_id").collect()
-            self._ids = {(r[0], r[1]): r[2] for r in rows}
-            self._ids_at = now
-        return self._ids
+        return self._frame(cs_name=[cs] * len(hits), name=hits)
 
 
 def write_datapoints(df: DataFrame, path: str, zone: str = DEFAULT_PERIOD_ZONE) -> None:
