@@ -60,15 +60,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # With ~187 declared queries and ~46 fill slots/round, every stable
 # query is re-witnessed at least every 4 rounds.
 #
-# This round's changelist: the three HDB++ lifecycle queries. Their
-# catalog path changed - the fixture's att_conf checkpoint is gone, and
-# name resolution, search and the control-system list read one
-# driver-side snapshot of the catalog, which is the session artifact
-# (registry kind "hdbpp_catalog"). No plan outside them is meant to change.
+# This round's changelist: the three HDB++ lifecycle queries and the two
+# raster queries. The lifecycles' request windows are now one
+# prune_window call and /image takes one extrema job for every axis
+# scale; q20 (bin_2d) and q21 (hover_stats) share one canvas stage. No
+# plan outside them is meant to change.
 _CHANGED_THIS_ROUND = [
     "lifecycle_aggregate",
     "lifecycle_query",
     "lifecycle_image",
+    "q20",
+    "q21",
 ]
 _DECLARED = {**CORE_QUERIES, **EXTENSION_QUERIES}
 

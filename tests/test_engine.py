@@ -11,7 +11,10 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-from web_maxiv_hdbppviewer_spark.api.render import render_csv, render_grafana_json
+from web_maxiv_hdbppviewer_spark.api.render import (
+    render_csv_combined,
+    render_grafana_json_combined,
+)
 from web_maxiv_hdbppviewer_spark.operators.asof import asof_join
 from web_maxiv_hdbppviewer_spark.operators.extrema import pad_range
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
@@ -45,15 +48,23 @@ def _attr_name(uid: int) -> str:
     return f"cs1/dom{uid % 5}/fam{uid % 10}/mem{uid % 3}/attr{uid}"
 
 
+def _series(frame) -> dict:
+    """The combined /query frame as {name: its rows in (t) order}."""
+    out: dict = {}
+    for r in frame.collect():
+        out.setdefault(r["name"], []).append(r)
+    return out
+
+
 # --- /query lifecycle ----------------------------------------------------
 
 
 def test_query_raw_matches_source(engine, events):
     uid = events.select("user_id").limit(1).collect()[0][0]
     name = _attr_name(uid)
-    out = engine.query_raw([name.upper()], T0, T1)  # P8: lookup is case-insensitive
+    out = _series(engine.query_raw_df([name.upper()], T0, T1))  # P8: lookup is case-insensitive
     assert set(out) == {name.upper()}
-    got = out[name.upper()].collect()
+    got = out[name.upper()]
     expected = (
         events.where((F.col("user_id") == uid) & F.col("ts").between(T0, T1))
         .where(F.col("event_type") != "error")  # error rows have NULL value_r
@@ -67,7 +78,7 @@ def test_query_raw_matches_source(engine, events):
 def test_query_raw_resample_means(engine, events):
     uid = events.select("user_id").limit(1).collect()[0][0]
     name = _attr_name(uid)
-    out = engine.query_raw([name], T0, T1, interval="1d")[name].collect()
+    out = _series(engine.query_raw_df([name], T0, T1, interval="1d"))[name]
     # property: count conservation and constant-series mean. Exported t
     # is the MEAN of the member timestamps (reference data.py:47: the
     # groupby().mean() averages t too; the bucket key is the dropped
@@ -104,7 +115,7 @@ def test_query_raw_resample_means(engine, events):
 
 
 def test_query_unknown_attribute_dropped(engine):
-    out = engine.query_raw(["cs1/no/such/attr/x"], T0, T1)
+    out = _series(engine.query_raw_df(["cs1/no/such/attr/x"], T0, T1))
     assert out == {}
 
 
@@ -114,8 +125,8 @@ def test_query_unknown_attribute_dropped(engine):
 def test_render_csv_shape(engine, events):
     uid = events.select("user_id").limit(1).collect()[0][0]
     name = _attr_name(uid)
-    data = engine.query_raw([name], T0, T1)
-    text = render_csv(data).decode()
+    data = engine.query_raw_df([name], T0, T1)
+    text = render_csv_combined(data, [name]).decode()
     lines = text.splitlines()
     assert lines[0] == name
     assert lines[1] == "t[us],value_r"
@@ -127,11 +138,12 @@ def test_render_csv_rw_write_values(spark):
     """A frame carrying the value_w sidecar (rw attribute) renders a third
     CSV column; NULL write values stay empty cells, exactly like value_r
     (the reference's server.py:21 missing write-value surface)."""
+    name = "cs1/a/b/c/rw0"
     df = spark.createDataFrame(
-        [(1, 1.5, 2.0), (2, None, 3.5), (3, 4.25, None)],
-        "t long, value_r double, value_w double",
+        [(name, 1, 1.5, 2.0), (name, 2, None, 3.5), (name, 3, 4.25, None)],
+        "name string, t long, value_r double, value_w double",
     )
-    text = render_csv({"cs1/a/b/c/rw0": df}).decode()
+    text = render_csv_combined(df, [name]).decode()
     lines = text.splitlines()
     assert lines[0] == "cs1/a/b/c/rw0"
     assert lines[1] == "t[us],value_r,value_w"
@@ -146,8 +158,8 @@ def test_render_grafana_json_nan_to_null(engine, events):
         .select("user_id").limit(1).collect()[0][0]
     )
     name = _attr_name(uid)
-    data = engine.query_raw([name], T0, T1)
-    payload = json.loads(render_grafana_json(data).decode())
+    data = engine.query_raw_df([name], T0, T1)
+    payload = json.loads(render_grafana_json_combined(data, [name]).decode())
     assert payload[0]["target"] == name
     values = [p[0] for p in payload[0]["datapoints"]]
     assert None in values  # error samples render as null, never NaN
@@ -365,27 +377,60 @@ def test_stream_events_unit_drift_guard(spark):
 
 
 def test_render_csv_combined_byte_identical(engine, events):
-    from web_maxiv_hdbppviewer_spark.api.render import render_csv_combined
-
+    """The CSV bytes of a 3-attribute /query equal blocks built from the
+    source rows: each series' window rows in t order, error readings as
+    empty cells."""
     uids = [r[0] for r in events.select("user_id").distinct().limit(3).collect()]
     names = [_attr_name(u) for u in uids]
-    per_attr = engine.query_raw(names, T0, T1)
-    combined = engine.query_raw_df(names, T0, T1)
-    assert render_csv_combined(combined, list(per_attr)) == render_csv(per_attr)
+    got = render_csv_combined(engine.query_raw_df(names, T0, T1), names)
+    blocks = []
+    for uid, name in zip(uids, names):
+        rows = (
+            events.where((F.col("user_id") == uid) & F.col("ts").between(T0, T1))
+            .select(
+                F.unix_micros("ts").alias("t"),
+                F.when(F.col("event_type") != "error", F.col("value")).alias("v"),
+            )
+            .orderBy("t")
+            .collect()
+        )
+        lines = [name, "t[us],value_r"] + [
+            f"{r['t']},{'' if r['v'] is None or math.isnan(r['v']) else repr(r['v'])}"
+            for r in rows
+        ]
+        blocks.append("\n".join(lines) + "\n")
+    assert got == "\n".join(blocks).encode()
 
 
 def test_query_raw_df_resample_matches_per_attr(engine, events):
+    """Each series of a 2-attribute resampled /query equals the buckets
+    computed from its own source rows: half-to-even day buckets, t the
+    mean member timestamp, value_r the mean of the non-error values."""
     uids = [r[0] for r in events.select("user_id").distinct().limit(2).collect()]
     names = [_attr_name(u) for u in uids]
-    per_attr = engine.query_raw(names, T0, T1, interval="1d")
     combined = engine.query_raw_df(names, T0, T1, interval="1d")
-    for name in names:
-        a = [(r["t"], r["value_r"]) for r in per_attr[name].collect()]
-        b = [
-            (r["t"], r["value_r"])
-            for r in combined.where(F.col("name") == name).orderBy("t").collect()
-        ]
-        assert a == b
+    width = 86_400_000_000
+    for uid, name in zip(uids, names):
+        want = (
+            events.where((F.col("user_id") == uid) & F.col("ts").between(T0, T1))
+            .groupBy(F.bround(F.unix_micros("ts") / float(width)).alias("b"))
+            .agg(
+                F.avg(F.unix_micros("ts")).alias("t"),
+                F.avg(
+                    F.when(F.col("event_type") != "error", F.col("value"))
+                ).alias("v"),
+            )
+            .orderBy("t")
+            .collect()
+        )
+        got = combined.where(F.col("name") == name).orderBy("t").collect()
+        assert len(got) == len(want) > 0
+        for g, w in zip(got, want):
+            assert g["t"] == pytest.approx(w["t"], abs=1.0)  # sub-µs
+            if w["v"] is None:
+                assert g["value_r"] is None
+            else:
+                assert g["value_r"] == pytest.approx(w["v"], rel=1e-12)
 
 
 # --- dedup: skew cap + partial-color compose ------------------------------
@@ -2127,7 +2172,6 @@ def test_engine_named_edges_empty_day_single_point_all_null(spark):
     from datetime import datetime
 
     from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-    from web_maxiv_hdbppviewer_spark.api.render import render_csv
     from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
     catalog, _ = hdbpp_fixture(spark, SF_SMOKE)
@@ -2148,8 +2192,9 @@ def test_engine_named_edges_empty_day_single_point_all_null(spark):
     )
     assert [f.name for f in empty.schema.fields] == ["name", "t", "value_r"]
     assert empty.count() == 0
-    csv = render_csv(
-        engine.query_raw([name(0)], datetime(2024, 2, 1), datetime(2024, 2, 2))
+    csv = render_csv_combined(
+        engine.query_raw_df([name(0)], datetime(2024, 2, 1), datetime(2024, 2, 2)),
+        [name(0)],
     ).decode()
     assert csv == f"{name(0)}\nt[us],value_r\n"  # header-only block
 
@@ -2169,8 +2214,9 @@ def test_engine_named_edges_empty_day_single_point_all_null(spark):
         [name(1)], datetime(2024, 1, 10), datetime(2024, 1, 11), interval="12h"
     ).collect()
     assert res and all(r["value_r"] is None for r in res)
-    csv = render_csv(
-        engine.query_raw([name(1)], datetime(2024, 1, 10), datetime(2024, 1, 11))
+    csv = render_csv_combined(
+        engine.query_raw_df([name(1)], datetime(2024, 1, 10), datetime(2024, 1, 11)),
+        [name(1)],
     ).decode()
     body = [l for l in csv.splitlines()[2:] if l]
     assert len(body) == 2 and all(l.endswith(",") for l in body)

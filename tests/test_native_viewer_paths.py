@@ -151,6 +151,74 @@ def test_render_image_builds_no_binned_or_hover_plan(engine, monkeypatch):
     assert sorted(want["images"]) == [0, 1]
 
 
+def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
+    """An /image with a linear and a log axis collects ``series_extrema``
+    once: each series' row carries the all-values and the positive-values
+    extrema, and each axis reads its scale's pair. The same attribute on
+    both axes gets the linear extrema on one and the positive ones on the
+    other. The expected descs and y-ranges are those of the former
+    one-job-per-scale pass."""
+    from web_maxiv_hdbppviewer_spark.api import lifecycle
+    from web_maxiv_hdbppviewer_spark.sources.hdbpp import HdbppCatalog, derive_period
+    from pyspark.sql import functions as F
+
+    att_conf = spark.createDataFrame(
+        [("cs1", "dom0/fam0/mem0/attr0", 1, "t"), ("cs1", "dom1/fam1/mem1/attr1", 2, "t")],
+        "cs_name string, att_name string, att_conf_id long, data_type string",
+    )
+    att_names = spark.createDataFrame(
+        [("cs1", "dom0", "fam0", "mem0", "attr0"), ("cs1", "dom1", "fam1", "mem1", "attr1")],
+        "cs_name string, domain string, family string, member string, name string",
+    )
+    rows = [
+        (1, datetime(2024, 1, 10, 1), 5.0), (1, datetime(2024, 1, 10, 2), None),
+        (1, datetime(2024, 1, 10, 3), -2.0), (1, datetime(2024, 1, 10, 4), 20.0),
+        (2, datetime(2024, 1, 10, 1, 30), 0.5), (2, datetime(2024, 1, 10, 2, 30), 100.0),
+        (2, datetime(2024, 1, 10, 3, 30), 3.0),
+    ]
+    dp = spark.createDataFrame(
+        rows, "att_conf_id long, ts timestamp, value_r double"
+    ).withColumn("period", derive_period(F.col("ts")))
+    engine = lifecycle.HdbppQueryEngine(HdbppCatalog(att_conf, att_names), dp)
+    a0, a1 = "cs1/dom0/fam0/mem0/attr0", "cs1/dom1/fam1/mem1/attr1"
+    window = (datetime(2024, 1, 10), datetime(2024, 1, 11), (50, 40))
+    axes = {"1": {"scale": "log"}}
+
+    calls = []
+    real = lifecycle.series_extrema
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lifecycle, "series_extrema", counting)
+
+    out = engine.render_image(
+        [{"name": a0, "y_axis": 0}, {"name": a1, "y_axis": 1}], *window, axes
+    )
+    assert len(calls) == 1
+    assert out["descs"] == {
+        a0: {"total_points": 4, "min_value": -2.0, "max_value": 20.0},
+        a1: {"total_points": 3, "min_value": 0.5, "max_value": 100.0},
+    }
+    assert out["images"][0]["y_range"] == [-3.1, 21.1]
+    assert out["images"][1]["y_range"] == [0.38363524950546274, 130.33213205630634]
+
+    calls.clear()
+    aggs = engine.image_aggregates(
+        [{"name": a0, "y_axis": 0}, {"name": a0, "y_axis": 1}], *window, axes
+    )
+    assert len(calls) == 1
+    assert aggs[0]["descs"] == {
+        a0: {"total_points": 4, "min_value": -2.0, "max_value": 20.0}
+    }
+    assert aggs[1]["descs"] == {
+        a0: {"total_points": 4, "min_value": 5.0, "max_value": 20.0}
+    }
+    assert aggs[0]["y_range"] == (-3.1, 21.1)
+    assert aggs[1]["y_range"] == (4.665164957684037, 21.43546925072587)
+
+
 def test_fixture_opens_only_the_events_table(spark, tmp_path):
     """The HDB++ fixture reads ``events`` alone: built over a directory
     holding nothing else, the session's table mapping has one entry."""

@@ -386,11 +386,10 @@ def test_lifecycle_image_digest_matches_independent_compositor(spark):
 
 
 def test_extrema_cache_keyed_by_axis_scale(spark):
-    # ADVICE r19 (medium): the per-scale extrema cache must be keyed by
-    # (log_scale, att_conf_id), not att_conf_id alone - the same attribute
-    # requested on a linear AND a log axis must give each axis its own
-    # extrema row (the log group's positivity-filtered vmin must not
-    # overwrite the linear group's).
+    # ADVICE r19 (medium): the same attribute requested on a linear AND a
+    # log axis must give each axis its own extrema - the log axis'
+    # positivity-filtered vmin must not overwrite the linear axis' (each
+    # axis reads its scale's pair from the one series_extrema row).
     catalog, dp = hdbpp_fixture(spark, SF_SMOKE)
     uid = dp.select("att_conf_id").limit(1).collect()[0][0]
     sub = dp.where(F.col("att_conf_id") == uid)

@@ -195,19 +195,19 @@ def test_grafana_json_byte_shape_nan_to_null_ordering(spark):
     import json
     import math
 
-    from web_maxiv_hdbppviewer_spark.api.render import render_grafana_json
+    from web_maxiv_hdbppviewer_spark.api.render import render_grafana_json_combined
 
     name = "cs1/dom0/fam0/mem0/attr0"
     df = spark.createDataFrame(
         [
-            (1_704_067_200_000_000, 1.5),
-            (1_704_067_201_000_000, float("nan")),
-            (1_704_067_202_000_000, None),
-            (1_704_067_203_000_000, -42.0),
+            (name, 1_704_067_200_000_000, 1.5),
+            (name, 1_704_067_201_000_000, float("nan")),
+            (name, 1_704_067_202_000_000, None),
+            (name, 1_704_067_203_000_000, -42.0),
         ],
-        "t long, value_r double",
+        "name string, t long, value_r double",
     )
-    out = render_grafana_json({name: df})
+    out = render_grafana_json_combined(df, [name])
     expected = json.dumps(
         [
             {
@@ -386,10 +386,8 @@ def test_httpquery_day_span_respects_period_zone(spark):
     UTC+1: the local day 2024-01-05 is [2024-01-04 23:00, 2024-01-05
     23:00) UTC, so a 23:30-UTC-on-Jan-4 row belongs to the covered
     period under the Stockholm zone but not under UTC."""
-    from web_maxiv_hdbppviewer_spark.api.lifecycle import (
-        HdbppQueryEngine,
-        _covered_day_span_utc,
-    )
+    from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
+    from web_maxiv_hdbppviewer_spark.sources.hdbpp import _covered_day_span_utc
 
     assert _covered_day_span_utc(
         datetime(2024, 1, 5, 12), datetime(2024, 1, 5, 13), "UTC"
@@ -446,7 +444,7 @@ def test_resampled_t_is_member_mean_reference_ground_truth(spark):
     bucket yet exports its own 119 s timestamp. The pre-r13 engine
     emitted bucket*width (0 / 60_000_000 / 120_000_000) - red here."""
     from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-    from web_maxiv_hdbppviewer_spark.api.render import render_csv
+    from web_maxiv_hdbppviewer_spark.api.render import render_csv_combined
 
     catalog = _slashed_catalog(spark)
     name = "cs1/dom0/fam0/mem0/attr0"
@@ -472,8 +470,8 @@ def test_resampled_t_is_member_mean_reference_ground_truth(spark):
     assert (raw_t, res_t) == ("bigint", "double")
 
     # CSV bytes match the reference's to_csv float formatting
-    csv = render_csv(
-        engine.query_raw([name], t0, t1, interval="1m")
+    csv = render_csv_combined(
+        engine.query_raw_df([name], t0, t1, interval="1m"), [name]
     ).decode()
     assert csv == (
         f"{name}\nt[us],value_r\n"
@@ -751,9 +749,8 @@ def test_total_points_counts_error_rows_and_log_masked_rows(spark):
     )
     got = series_extrema(
         neg.where(F.col("ts").between(t0, t1)), ["att_conf_id"], "value_r",
-        log_scale=True,
     ).collect()
-    assert [(r["vmin"], r["vmax"], r["n"]) for r in got] == [(None, None, 2)]
+    assert [(r["pmin"], r["pmax"], r["n"]) for r in got] == [(None, None, 2)]
 
 
 def test_manual_axis_bounds_float_coerced_and_missing_axis_degrades(spark):
@@ -798,7 +795,7 @@ def test_covered_day_span_handles_dst_transition_days():
     2024-03-31 spans only 23 UTC hours and the fall-back day 2024-10-27
     spans 25 - a fixed 24 h bound would leak an hour of the neighboring
     period or drop one."""
-    from web_maxiv_hdbppviewer_spark.api.lifecycle import _covered_day_span_utc
+    from web_maxiv_hdbppviewer_spark.sources.hdbpp import _covered_day_span_utc
 
     assert _covered_day_span_utc(
         datetime(2024, 3, 31, 10), datetime(2024, 3, 31, 11),

@@ -244,7 +244,7 @@ def test_csv_rw_null_value_w_bytes_match_pandas_twin(spark):
     pandas' default float_format=None shortest-repr."""
     import pandas as pd
 
-    from web_maxiv_hdbppviewer_spark.api.render import render_csv
+    from web_maxiv_hdbppviewer_spark.api.render import render_csv_combined
 
     name = "cs1/dom0/fam0/mem0/attr0"
     rows = [
@@ -252,8 +252,11 @@ def test_csv_rw_null_value_w_bytes_match_pandas_twin(spark):
         (1_700_000_001_000_000, -0.125, None),   # NULL value_w -> empty cell
         (1_700_000_002_000_000, None, 3.0),      # NULL value_r too
     ]
-    df = spark.createDataFrame(rows, "t long, value_r double, value_w double")
-    got = render_csv({name: df})
+    df = spark.createDataFrame(
+        [(name, *r) for r in rows],
+        "name string, t long, value_r double, value_w double",
+    )
+    got = render_csv_combined(df, [name])
 
     pdf = pd.DataFrame(rows, columns=["t", "value_r", "value_w"])
     want = "{}\n{}".format(

@@ -639,8 +639,8 @@ def test_lifecycle_api_hardening(spark):
     catalog, datapoints = hdbpp_fixture(spark, SF_SMOKE)
     engine = HdbppQueryEngine(catalog, datapoints)
     assert engine._resolve([]) == {}
-    out = engine.query_raw([], datetime(2024, 1, 1), datetime(2024, 1, 2))
-    assert out == {}
+    out = engine.query_raw_df([], datetime(2024, 1, 1), datetime(2024, 1, 2))
+    assert out.collect() == []
 
     assert _parse_color("#abc") == (0xAA, 0xBB, 0xCC)
     assert _parse_color("#a1b2c3") == (0xA1, 0xB2, 0xC3)

@@ -8,24 +8,34 @@ the reference's hand-built day fan-out, pushdown replaces its incremental
 lower-bound scan) -> only bounded aggregates (pixels, extrema) ever reach
 the driver. /attributes and name resolution run no Spark job: they read the
 catalog's driver-side snapshot (``HdbppCatalog``).
+
+Each viewer rule has one implementation: every request window is one
+``hdbpp.prune_window`` call, an /image collects ONE ``series_extrema`` job
+whatever its axes' scales, and /query is one combined frame
+(``query_raw_df``) that ``api.render`` collects once.
 """
 
 from __future__ import annotations
 
 import math
-from datetime import datetime, timedelta, timezone
+from datetime import datetime
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.time import (
-    datetime_to_epoch_us, epoch_us, push_time_filter, utc_ts_lit,
-)
+from ..functions.time import datetime_to_epoch_us, epoch_us, utc_ts_lit
 from ..operators.extrema import pad_range, series_extrema
 from ..operators.raster import bin_2d, hover_stats
 from ..operators.resample import freq_to_us, resample_mean
-from ..sources.hdbpp import HdbppCatalog, day_partitions
+from ..sources.hdbpp import HdbppCatalog, _covered_day_span_utc, prune_window
+
+#: the thread-local job properties ``SparkContext.setJobGroup`` sets
+_JOB_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+)
 
 
 def _split_attr(full_name: str) -> tuple[str, str]:
@@ -37,47 +47,6 @@ def _split_attr(full_name: str) -> tuple[str, str]:
     raises ValueError for names with fewer than four separators."""
     cs, domain, family, member, name = full_name.rsplit("/", 4)
     return cs, "/".join((domain, family, member, name))
-
-
-def _covered_day_span_utc(
-    t0: datetime, t1: datetime, zone: str
-) -> tuple[datetime, datetime]:
-    """[start, end) naive-UTC instants of the ``zone``-local calendar days
-    covering [t0, t1] (reference hdbpp.py:304-308: periods are LOCAL
-    dates, timestamps UTC). Inputs are the engine's naive-UTC datetimes;
-    for zone='UTC' this is plain midnight flooring.
-
-    Documented divergence (ADVICE r13): ``zone`` models the INTENDED
-    semantics - "periods are the storage partition's local calendar
-    dates" - not the reference's literal mechanism. The reference
-    attaches tzlocal to its naive request instants via ``replace()``
-    (hdbpp.py:298-306), an identity conversion, so its covered days are
-    always the naive timestamp's OWN calendar date regardless of the
-    deployment zone; this engine genuinely converts UTC instants into
-    ``zone`` before taking the date, so a non-UTC zone can cover a
-    shifted day set near local midnight (e.g. 23:30 UTC -> the next CET
-    day). The default zone='UTC' is instant-for-instant identical to the
-    reference's behavior on a UTC-clock deployment - the only
-    configuration the engine's naive-UTC timestamps describe; a non-UTC
-    ``zone`` is the correct day-partition fan-out such a deployment
-    WOULD want, which the reference can't express."""
-    from zoneinfo import ZoneInfo
-
-    from ..sources.hdbpp import _as_naive_utc
-
-    tz = ZoneInfo(zone)
-    utc = timezone.utc
-    # aware datetimes are CONVERTED to UTC first (r19 review, the
-    # day_partitions fix): a bare replace() would reinterpret a non-UTC
-    # offset as UTC wall-clock and disagree with the ts predicate
-    d0 = _as_naive_utc(t0).replace(tzinfo=utc).astimezone(tz).date()
-    d1 = _as_naive_utc(t1).replace(tzinfo=utc).astimezone(tz).date() + timedelta(days=1)
-    to_naive_utc = lambda d: (  # noqa: E731
-        datetime(d.year, d.month, d.day, tzinfo=tz)
-        .astimezone(utc)
-        .replace(tzinfo=None)
-    )
-    return to_naive_utc(d0), to_naive_utc(d1)
 
 
 #: basic CSS/matplotlib color names -> RGB; the reference hands color
@@ -146,33 +115,6 @@ class HdbppQueryEngine:
         self.history = history
         self.period_zone = period_zone
 
-    def _time_window(
-        self, df: DataFrame, t0: datetime, t1: datetime,
-        upper_inclusive: bool = False,
-    ) -> DataFrame:
-        """Sargable request-window scan (r19 review): push_time_filter
-        expresses the bounds on the raw ``_ts_ns`` integer scan column
-        where it exists (X2 - a predicate on the DERIVED timestamp is
-        opaque to parquet row-group statistics, so /query and the
-        /image extrema+line scans previously read full history on
-        ns-backed stores), and when the store carries the reference's
-        ``period`` day-partition column, the covered local-date keys
-        are added as an IN-list - the reference's day fan-out
-        (hdbpp.py:303-321) as a PRUNING predicate, without which the
-        planner enumerates every day directory of the documented
-        (data_type, period)-partitioned 100 TB layout."""
-        out = push_time_filter(
-            df, t0=t0, t1=t1, upper_inclusive=upper_inclusive
-        )
-        if "period" in df.columns:
-            p1 = t1 if upper_inclusive else t1 - timedelta(microseconds=1)
-            out = out.where(
-                F.col("period").isin(
-                    day_partitions(t0, max(t0, p1), self.period_zone)
-                )
-            )
-        return out
-
     # --- name resolution -------------------------------------------------
 
     def _resolve(self, attributes: list[str]) -> dict[str, int]:
@@ -203,8 +145,15 @@ class HdbppQueryEngine:
         reference instead gathered 50 concurrent day-queries
         (hdbpp.py:312-321); Catalyst's task scheduler subsumes that.
 
+        restrict_time=True trims exactly to [t0, t1] (F1, data.py:102-108);
+        False returns the whole covered day-periods (the reference's
+        over-fetch-for-cache behavior, hdbpp.py:16-21). Both windows are
+        one ``prune_window`` call.
+
         Returns (name, t, value_r) ordered by (name, t); t is int64 µs for
-        raw queries, DOUBLE (mean member timestamp) when resampled.
+        raw queries, DOUBLE (mean member timestamp) when resampled. The
+        renderers (``api.render``) collect it once for all attributes.
+        ``_ids`` is an already-resolved {name: att_conf_id}.
         """
         ids = _ids if _ids is not None else self._resolve(attributes)
         spark = self.datapoints.sparkSession
@@ -214,22 +163,23 @@ class HdbppQueryEngine:
             "name": pa.array(list(ids), pa.string()),
             "att_conf_id": pa.array(list(ids.values()), pa.int64()),
         }))
-        df = self.datapoints.where(F.col("att_conf_id").isin(list(ids.values()) or [-1]))
-        if restrict_time:
-            df = self._time_window(df, t0, t1, upper_inclusive=True)
-        else:
-            # /httpquery semantics (reference server.py:167-181 ->
-            # get_data restrict_time=False): WHOLE covered day-periods,
-            # never the full history - the reference fetches only the
-            # periods overlapping [t0, t1] (hdbpp.py:304-308) and skips
-            # the exact trim. "Day" means the deployment's period zone
-            # (self.period_zone; the reference's periods are local-time
-            # dates while timestamps are UTC) - the bounds are the
-            # zone-local midnights converted back to the engine's naive
-            # UTC, still one sargable ts-range predicate, so partition
-            # pruning holds at scale.
-            day0, day1 = _covered_day_span_utc(t0, t1, self.period_zone)
-            df = self._time_window(df, day0, day1, upper_inclusive=False)
+        # /httpquery semantics (reference server.py:167-181 -> get_data
+        # restrict_time=False): WHOLE covered day-periods, never the full
+        # history - the reference fetches only the periods overlapping
+        # [t0, t1] (hdbpp.py:304-308) and skips the exact trim. "Day"
+        # means the deployment's period zone (self.period_zone; the
+        # reference's periods are local-time dates while timestamps are
+        # UTC) - the bounds are the zone-local midnights converted back to
+        # the engine's naive UTC, still one sargable ts-range predicate,
+        # so partition pruning holds at scale.
+        lo, hi = (
+            (t0, t1) if restrict_time
+            else _covered_day_span_utc(t0, t1, self.period_zone)
+        )
+        df = prune_window(
+            self.datapoints, list(ids.values()) or [-1], lo, hi,
+            self.period_zone, upper_inclusive=restrict_time,
+        )
         if interval:
             width = freq_to_us(interval)
             res = resample_mean(df, width, value_col="value_r", keys=["att_conf_id"])
@@ -252,32 +202,6 @@ class HdbppQueryEngine:
             .orderBy("name", "t")
         )
 
-    def query_raw(
-        self,
-        attributes: list[str],
-        t0: datetime,
-        t1: datetime,
-        interval: str | None = None,
-        restrict_time: bool = True,
-    ) -> dict[str, DataFrame]:
-        """Raw or resampled (t, value_r) series per attribute.
-
-        restrict_time=False returns whole covered days (the reference's
-        over-fetch-for-cache behavior, hdbpp.py:16-21); True trims exactly
-        (F1, data.py:102-108).
-
-        The per-attribute frames are views over the ONE combined plan of
-        ``query_raw_df`` - collect the combined frame (renderers do) for a
-        single job; the dict form exists for per-series consumers and is
-        byte-identical per attribute.
-        """
-        ids = self._resolve(attributes)
-        combined = self.query_raw_df(attributes, t0, t1, interval, restrict_time, _ids=ids)
-        return {
-            name: combined.where(F.col("name") == name).select("t", "value_r").orderBy("t")
-            for name in ids
-        }
-
     # --- /image lifecycle (SURVEY §3.1, pre-render aggregates) -----------
 
     def _axis_windows(
@@ -288,9 +212,15 @@ class HdbppQueryEngine:
         axes: dict[str, dict] | None = None,
     ) -> dict:
         """The per-axis preparation both /image paths share: one resolve,
-        per-scale extrema, and for each axis its y-range, its descs (point
-        count and extrema per series), its window plan (log projection
-        included) and its bin geometry. Builds no raster or hover plan.
+        ONE extrema job for every series of every axis, and for each axis
+        its y-range, its descs (point count and extrema per series), its
+        window plan (log projection included) and its bin geometry. Builds
+        no raster or hover plan.
+
+        Each series' extrema row carries both the all-values pair and the
+        positive-values pair (``series_extrema``); an axis reads the pair
+        of its own scale, so one attribute on a linear and a log axis
+        needs no second job.
 
         ``attributes``: [{"name": full_name, "y_axis": 0|1}, ...]
         ``axes``: {"0": {"scale": "linear"|"log", "min": x?, "max": x?}}
@@ -311,85 +241,53 @@ class HdbppQueryEngine:
         # semantics (F7).
         all_ids = self._resolve([spec["name"] for spec in attributes])
 
-        # ONE extrema job per distinct axis SCALE, not per axis
-        # (optimization r19): series_extrema groups by att_conf_id, so
-        # the per-series rows over the union of a scale-group's ids are
-        # identical to the per-axis runs - one collect instead of one
-        # per axis (the 2-axis fixture halves the extrema jobs; the
-        # log-positivity filter is the only per-axis plan difference,
-        # hence the grouping key). Driver result stays <= |attributes|
-        # rows.
-        scale_of = {
-            axis: axes.get(str(axis), {}).get("scale") == "log"
-            for axis in by_axis
-        }
-        # keyed by (log_scale, id), NOT id alone: the same attribute may
-        # be requested on two axes with different scales (nothing upstream
-        # prevents it), and the log group's positivity-filtered row must
-        # not overwrite the linear group's (ADVICE r19)
-        ext_rows: dict[tuple[bool, int], dict] = {}
-        for log_scale in sorted(set(scale_of.values())):
-            grp_ids = [
-                all_ids[n]
-                for axis in by_axis
-                if scale_of[axis] == log_scale
-                for n in by_axis[axis]
-                if n in all_ids
-            ]
-            if not grp_ids:
-                continue
-            routed_grp = self.datapoints.where(
-                F.col("att_conf_id").isin(grp_ids)
+        # reference /image windows (r13 parity): get_images fetches WHOLE
+        # covered day-periods (get_data restrict_time defaults False,
+        # server.py:124 -> data.py:78-114), computes extrema over the
+        # HALF-OPEN request slice [t0, t1) (plot.py:88-90 searchsorted
+        # both sides), and rasterizes from the full whole-days frame with
+        # the canvas clipping to [t0, t1] INCLUSIVE (so line segments
+        # enter the view from off-screen anchor points, and a point
+        # exactly at t1 is drawn but not counted in extrema). Both windows
+        # stay sargable ts ranges.
+        day0, day1 = _covered_day_span_utc(t0, t1, self.period_zone)
+        # per-series extrema (A2, log filter F3) of every requested series
+        # in one collect; the driver result stays <= |attributes| rows
+        ext: dict = {}
+        if all_ids:
+            view = prune_window(
+                self.datapoints, list(all_ids.values()), t0, t1,
+                self.period_zone, upper_inclusive=False,
             )
-            view_grp = self._time_window(
-                routed_grp, t0, t1, upper_inclusive=False
-            )
-            for r in series_extrema(
-                view_grp, ["att_conf_id"], "value_r", log_scale
-            ).collect():
-                ext_rows[(log_scale, r["att_conf_id"])] = r
+            ext = {
+                r["att_conf_id"]: r
+                for r in series_extrema(view, ["att_conf_id"], "value_r").collect()
+            }
 
         for axis, names in by_axis.items():
             cfg = axes.get(str(axis), {})
-            log_scale = scale_of[axis]
+            log_scale = cfg.get("scale") == "log"
+            lo, hi = ("pmin", "pmax") if log_scale else ("vmin", "vmax")
             ids = {n: all_ids[n] for n in names if n in all_ids}
             if not ids:
                 continue
             id_to_name = {v: k for k, v in ids.items()}
-            routed = self.datapoints.where(
-                F.col("att_conf_id").isin(list(ids.values()))
+            plot_data = prune_window(
+                self.datapoints, list(ids.values()), day0, day1,
+                self.period_zone, upper_inclusive=False,
             )
-            # reference /image windows (r13 parity): get_images fetches
-            # WHOLE covered day-periods (get_data restrict_time defaults
-            # False, server.py:124 -> data.py:78-114), computes extrema
-            # over the HALF-OPEN request slice [t0, t1) (plot.py:88-90
-            # searchsorted both sides), and rasterizes from the full
-            # whole-days frame with the canvas clipping to [t0, t1]
-            # INCLUSIVE (so line segments enter the view from off-screen
-            # anchor points, and a point exactly at t1 is drawn but not
-            # counted in extrema). Both windows stay sargable ts ranges.
-            day0, day1 = _covered_day_span_utc(t0, t1, self.period_zone)
-            days = self._time_window(routed, day0, day1, upper_inclusive=False)
-
-            # per-series extrema (A2, log filter F3) - sliced from the
-            # scale-group collect above WITH this axis's own scale key,
-            # values identical per series
-            ext = {
-                i: ext_rows[(log_scale, i)]
-                for i in ids.values()
-                if (log_scale, i) in ext_rows
-            }
             descs = {
                 id_to_name[i]: {
-                    "total_points": r["n"],
-                    "min_value": r["vmin"],
-                    "max_value": r["vmax"],
+                    "total_points": ext[i]["n"],
+                    "min_value": ext[i][lo],
+                    "max_value": ext[i][hi],
                 }
-                for i, r in ext.items()
+                for i in id_to_name
+                if i in ext
             }
             # axis fold (A3) + manual overrides (J4) + padding (plot.py:160-188)
-            mins = [r["vmin"] for r in ext.values() if r["vmin"] is not None]
-            maxs = [r["vmax"] for r in ext.values() if r["vmax"] is not None]
+            mins = [d["min_value"] for d in descs.values() if d["min_value"] is not None]
+            maxs = [d["max_value"] for d in descs.values() if d["max_value"] is not None]
             # manual bounds are float()-coerced like the reference
             # (plot.py:103-104) - JSON clients send axis config numbers
             # as strings; a computed fallback passes through unchanged.
@@ -403,7 +301,6 @@ class HdbppQueryEngine:
             vmax = float(vmax) if vmax is not None else (max(maxs) if maxs else None)
             y0, y1 = pad_range(vmin, vmax, log_scale)
 
-            plot_data = days
             # log axes bin on log10 POSITIONS while aggregating RAW
             # values - datashader Canvas(y_axis_type='log'), reference
             # plot.py:24 (r19 review: the raster previously binned log
@@ -510,14 +407,7 @@ class HdbppQueryEngine:
         # are thread-local; copy the caller's into each worker so
         # run_cancellable's tag (X10) still covers every job.
         sc = self.datapoints.sparkSession.sparkContext
-        job_props = {
-            p: sc.getLocalProperty(p)
-            for p in (
-                "spark.jobGroup.id",
-                "spark.job.description",
-                "spark.job.interruptOnCancel",
-            )
-        }
+        job_props = {p: sc.getLocalProperty(p) for p in _JOB_PROPS}
 
         def _axis_image(item):
             axis, ax = item
@@ -649,18 +539,13 @@ class HdbppQueryEngine:
         outer request's remaining jobs under nesting).
         """
         sc = self.datapoints.sparkSession.sparkContext
-        props = (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        )
-        prev = {p: sc.getLocalProperty(p) for p in props}
+        prev = {p: sc.getLocalProperty(p) for p in _JOB_PROPS}
         sc.setJobGroup(tag, f"hdbpp request {tag}", interruptOnCancel=True)
         try:
             return fn()
         finally:
-            for p in props:
-                sc.setLocalProperty(p, prev[p])
+            for p, v in prev.items():
+                sc.setLocalProperty(p, v)
 
     def cancel(self, tag: str) -> None:
         """Cancel all running Spark jobs tagged with ``tag`` (X10)."""

@@ -6,9 +6,10 @@ Byte-compatible with the reference's renderers:
   - Grafana JSON (reference data.py:58-75): [{"target": name,
     "datapoints": [[value, t_ms], ...]}] with NaN -> null.
 
-These run at the API edge on BOUNDED results (a Grafana panel's resampled
-series, a capped raw window) - the only place data is collected. The t/value
-assembly itself happens engine-side as columns.
+Both take the single-plan /query frame (``HdbppQueryEngine.query_raw_df``:
+name, t, value_r) and collect it ONCE for every attribute - the only place
+/query data reaches the driver. The t/value assembly itself happens
+engine-side as columns.
 """
 
 from __future__ import annotations
@@ -19,74 +20,46 @@ import math
 from pyspark.sql import DataFrame
 
 
-def _rows(df: DataFrame, value_col: str = "value_r", t_col: str = "t"):
-    for row in df.select(t_col, value_col).collect():
-        yield row[0], row[1]
-
-
 def _cell(v) -> str:
     return "" if v is None or (isinstance(v, float) and math.isnan(v)) else repr(v)
 
 
-def render_csv(data: dict[str, DataFrame]) -> bytes:
-    """Per-attribute CSV blocks, header 't[us],value_r' (data.py:50-55).
-
-    Frames carrying the ``value_w`` sidecar (rw attributes,
-    DATAPOINTS_SCHEMA) get a third column 'value_w' - the write-value
-    surface the reference lists as missing (server.py:21)."""
-    blocks = []
-    for name, df in data.items():
-        if "value_w" in df.columns:
-            lines = [name, "t[us],value_r,value_w"]
-            for row in df.select("t", "value_r", "value_w").collect():
-                lines.append(f"{row[0]},{_cell(row[1])},{_cell(row[2])}")
-        else:
-            lines = [name, "t[us],value_r"]
-            for t, v in _rows(df):
-                lines.append(f"{t},{_cell(v)}")
-        blocks.append("\n".join(lines) + "\n")
-    return "\n".join(blocks).encode()
-
-
-def render_grafana_json(data: dict[str, DataFrame]) -> bytes:
-    """Grafana datasource format with ms float timestamps (data.py:58-75)."""
-    out = []
-    for name, df in data.items():
-        points = []
-        for t, v in _rows(df):
-            if v is not None and isinstance(v, float) and math.isnan(v):
-                v = None
-            points.append([v, t / 1000.0])
-        out.append({"target": name, "datapoints": points})
-    return json.dumps(out).encode()
-
-
-def _split_combined(combined: DataFrame, names: list[str]) -> dict[str, list]:
-    """ONE collect of a (name, t, value_r) combined frame -> per-name rows
-    in requested order (names absent from the result get empty series)."""
+def _split_combined(
+    combined: DataFrame, names: list[str], cols: tuple[str, ...]
+) -> dict[str, list]:
+    """ONE collect of the combined frame's (name, *cols) -> per-name rows
+    of ``cols`` in requested order (names absent from the result get empty
+    series)."""
     by_name: dict[str, list] = {n: [] for n in names}
-    for row in combined.select("name", "t", "value_r").collect():
-        by_name.setdefault(row[0], []).append((row[1], row[2]))
+    for name, *vals in combined.select("name", *cols).collect():
+        by_name.setdefault(name, []).append(vals)
     return by_name
 
 
 def render_csv_combined(combined: DataFrame, names: list[str]) -> bytes:
-    """CSV from the single-plan /query frame: one Spark job for every
-    attribute (vs one collect per attribute in the dict form), byte-
-    identical output."""
+    """Per-attribute CSV blocks, header 't[us],value_r' (data.py:50-55).
+
+    A frame carrying the ``value_w`` sidecar (rw attributes,
+    DATAPOINTS_SCHEMA) gets a third column 'value_w' - the write-value
+    surface the reference lists as missing (server.py:21)."""
+    rw = "value_w" in combined.columns
+    cols = ("t", "value_r", "value_w") if rw else ("t", "value_r")
+    header = ",".join(("t[us]",) + cols[1:])
     blocks = []
-    for name, rows in _split_combined(combined, names).items():
-        lines = [name, "t[us],value_r"]
-        for t, v in rows:
-            lines.append(f"{t},{_cell(v)}")
+    for name, rows in _split_combined(combined, names, cols).items():
+        lines = [name, header]
+        if rw:
+            lines += [f"{t},{_cell(v)},{_cell(w)}" for t, v, w in rows]
+        else:
+            lines += [f"{t},{_cell(v)}" for t, v in rows]
         blocks.append("\n".join(lines) + "\n")
     return "\n".join(blocks).encode()
 
 
 def render_grafana_json_combined(combined: DataFrame, names: list[str]) -> bytes:
-    """Grafana JSON from the single-plan /query frame (one Spark job)."""
+    """Grafana datasource format with ms float timestamps (data.py:58-75)."""
     out = []
-    for name, rows in _split_combined(combined, names).items():
+    for name, rows in _split_combined(combined, names, ("t", "value_r")).items():
         points = []
         for t, v in rows:
             if v is not None and isinstance(v, float) and math.isnan(v):

@@ -4,10 +4,12 @@ The reference computes per-series min/max over the view window (reference
 plot.py:92-99), dropping non-positive values first when the axis is log
 scaled (plot.py:94-97), then folds min-of-mins / max-of-maxes across all
 series on one axis (plot.py:112-130), finally merging manual axis overrides
-(plot.py:101-104). The per-series pass is one aggregation here; series with
-no surviving points surface as null extrema (the reference's ``nodata``
-set). The axis fold and the manual overrides are driver-side over those
-few rows (``api.lifecycle``), followed by ``pad_range``.
+(plot.py:101-104). The per-series pass is one aggregation here that yields
+both the all-values and the positive-values extrema, so one job serves
+linear and log axes alike; series with no surviving points surface as null
+extrema (the reference's ``nodata`` set). The axis fold and the manual
+overrides are driver-side over those few rows (``api.lifecycle``),
+followed by ``pad_range``.
 """
 
 from __future__ import annotations
@@ -19,13 +21,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def series_extrema(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str = "value",
-    log_scale: bool = False,
-) -> DataFrame:
-    """Per-series (vmin, vmax, n) with optional log-axis positivity filter.
+def series_extrema(df: DataFrame, keys: list[str], value_col: str = "value") -> DataFrame:
+    """Per-series (vmin, vmax, pmin, pmax, n) in ONE aggregate.
+
+    ``vmin``/``vmax`` span every value - a linear axis reads them;
+    ``pmin``/``pmax`` span the positive values only - a log axis reads
+    them (the reference masks non-positive values for log axes only,
+    plot.py:94-97). One pass thus serves every axis scale.
 
     ``n`` is the ROW count of the series' window slice - the reference's
     ``points = len(relevant)`` (plot.py:107) counts every row, NaN/error
@@ -34,13 +36,15 @@ def series_extrema(
     plot.py:95). A ``count(value)`` here - the pre-r13 form - undercounted
     both. The positivity mask is a null-out, not a filter, for the same
     reason: an all-nonpositive series still reports its row count with
-    NULL extrema (the reference's NaN-extrema ``nodata`` entries,
-    plot.py:115-121)."""
+    NULL ``pmin``/``pmax`` (the reference's NaN-extrema ``nodata``
+    entries, plot.py:115-121)."""
     v = F.col(value_col)
-    valid = F.when(v > 0, v) if log_scale else v  # plot.py:94-97
+    positive = F.when(v > 0, v)  # plot.py:94-97
     return df.groupBy(*keys).agg(
-        F.min(valid).alias("vmin"),
-        F.max(valid).alias("vmax"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+        F.min(positive).alias("pmin"),
+        F.max(positive).alias("pmax"),
         F.count(F.lit(1)).alias("n"),
     )
 

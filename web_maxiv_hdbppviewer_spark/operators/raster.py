@@ -86,6 +86,33 @@ def ybin(v: Column, ymin: float, ymax: float, ny: int) -> Column:
     return F.floor((v - F.lit(float(ymin))) / F.lit(float(ymax) - float(ymin)) * F.lit(ny)).cast("int")
 
 
+def _canvas_columns(
+    df: DataFrame,
+    x0_us: int,
+    span_us: float,
+    nx: int,
+    y: Column,
+    ymin: float,
+    ymax: float,
+    ts_col: str,
+    keys: list[str] | None,
+    *columns: Column,
+) -> DataFrame:
+    """The canvas rule ``bin_2d`` and ``hover_stats`` share: rows with
+    ymin <= y <= ymax inside the inclusive time canvas
+    (``_canvas_time_clip``), projected to (keys..., xb, columns...) with
+    the pixel column's upper edge snapped into the last bin via
+    ``least(xbin, nx - 1)`` (datashader's map_onto_pixel)."""
+    t_us = epoch_us(F.col(ts_col))
+    return _canvas_time_clip(
+        df.where((y >= ymin) & (y <= ymax)), x0_us, span_us, ts_col
+    ).select(
+        *(keys or []),
+        F.least(xbin(t_us, x0_us, span_us, nx), F.lit(nx - 1)).alias("xb"),
+        *columns,
+    )
+
+
 def bin_2d(
     df: DataFrame,
     x0_us: int,
@@ -127,19 +154,10 @@ def bin_2d(
     """
     v = F.col(value_col)
     bv = F.col(bin_col) if bin_col is not None else v
-    t_us = epoch_us(F.col(ts_col))
-    binned = (
-        _canvas_time_clip(
-            df.where((bv >= ymin) & (bv <= ymax)), x0_us, span_us, ts_col
-        )
-        .select(
-            *(keys or []),
-            F.least(
-                xbin(t_us, x0_us, span_us, nx), F.lit(nx - 1)
-            ).alias("xb"),
-            F.least(ybin(bv, ymin, ymax, ny), F.lit(ny - 1)).alias("yb"),
-            v.alias("_v"),
-        )
+    binned = _canvas_columns(
+        df, x0_us, span_us, nx, bv, ymin, ymax, ts_col, keys,
+        F.least(ybin(bv, ymin, ymax, ny), F.lit(ny - 1)).alias("yb"),
+        v.alias("_v"),
     )
     return binned.groupBy(*(keys or []), "xb", "yb").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -166,23 +184,13 @@ def hover_stats(
     (reference plot.py:44-60: nanmin of mins, nanmax of maxes, sum of
     counts per x column, keeping only columns with data). Expressed
     directly as a 1-D binned aggregate - Catalyst's partial/final agg is
-    the reference's collapse. Canvas clip and upper-edge snap as in
-    ``bin_2d`` (the reference's hover reads the same canvas-clipped
-    aggregate, plot.py:28-33,44-51).
+    the reference's collapse. Canvas clip and upper-edge snap are
+    ``bin_2d``'s own (``_canvas_columns``; the reference's hover reads the
+    same canvas-clipped aggregate, plot.py:28-33,44-51).
     """
     v = F.col(value_col)
-    t_us = epoch_us(F.col(ts_col))
-    binned = (
-        _canvas_time_clip(
-            df.where((v >= ymin) & (v <= ymax)), x0_us, span_us, ts_col
-        )
-        .select(
-            *(keys or []),
-            F.least(
-                xbin(t_us, x0_us, span_us, nx), F.lit(nx - 1)
-            ).alias("xb"),
-            v.alias("_v"),
-        )
+    binned = _canvas_columns(
+        df, x0_us, span_us, nx, v, ymin, ymax, ts_col, keys, v.alias("_v")
     )
     return (
         binned.groupBy(*(keys or []), "xb")

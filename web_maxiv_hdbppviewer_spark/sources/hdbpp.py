@@ -37,7 +37,7 @@ from __future__ import annotations
 import fnmatch
 import re
 import time
-from datetime import datetime, timedelta
+from datetime import date, datetime, timedelta, timezone
 from zoneinfo import ZoneInfo
 
 import pyarrow as pa
@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.names import attr_full_name
-from ..functions.time import utc_ts_lit
+from ..functions.time import push_time_filter
 
 #: seconds a catalog snapshot serves resolution, search and the
 #: control-system listing before it is collected again - the reference's catalog TTL (hdbpp.py:213, 230)
@@ -71,6 +71,13 @@ def _as_naive_utc(t: datetime) -> datetime:
     return t.astimezone(ZoneInfo("UTC")).replace(tzinfo=None)
 
 
+def _local_date(t: datetime, tz: ZoneInfo) -> date:
+    """The ``tz``-local calendar date of an engine datetime: the one
+    UTC -> local-date step of the period rule (reference hdbpp.py:303-308:
+    periods are LOCAL dates, timestamps UTC)."""
+    return _as_naive_utc(t).replace(tzinfo=timezone.utc).astimezone(tz).date()
+
+
 def day_partitions(t0: datetime, t1: datetime, zone: str = DEFAULT_PERIOD_ZONE) -> list[str]:
     """Enumerate local-calendar-date period keys covering [t0, t1].
 
@@ -79,14 +86,46 @@ def day_partitions(t0: datetime, t1: datetime, zone: str = DEFAULT_PERIOD_ZONE) 
     planner does the rest; no per-day query fan-out.
     """
     tz = ZoneInfo(zone)
-    d0 = _as_naive_utc(t0).replace(tzinfo=ZoneInfo("UTC")).astimezone(tz).date()
-    d1 = _as_naive_utc(t1).replace(tzinfo=ZoneInfo("UTC")).astimezone(tz).date()
+    d, d1 = _local_date(t0, tz), _local_date(t1, tz)
     days = []
-    d = d0
     while d <= d1:
         days.append(d.isoformat())
         d += timedelta(days=1)
     return days
+
+
+def _covered_day_span_utc(
+    t0: datetime, t1: datetime, zone: str
+) -> tuple[datetime, datetime]:
+    """[start, end) naive-UTC instants of the ``zone``-local calendar days
+    covering [t0, t1] - the days ``day_partitions`` names. Inputs are the
+    engine's naive-UTC datetimes; for zone='UTC' this is plain midnight
+    flooring.
+
+    Documented divergence (ADVICE r13): ``zone`` models the INTENDED
+    semantics - "periods are the storage partition's local calendar
+    dates" - not the reference's literal mechanism. The reference
+    attaches tzlocal to its naive request instants via ``replace()``
+    (hdbpp.py:298-306), an identity conversion, so its covered days are
+    always the naive timestamp's OWN calendar date regardless of the
+    deployment zone; this engine genuinely converts UTC instants into
+    ``zone`` before taking the date, so a non-UTC zone can cover a
+    shifted day set near local midnight (e.g. 23:30 UTC -> the next CET
+    day). The default zone='UTC' is instant-for-instant identical to the
+    reference's behavior on a UTC-clock deployment - the only
+    configuration the engine's naive-UTC timestamps describe; a non-UTC
+    ``zone`` is the correct day-partition fan-out such a deployment
+    WOULD want, which the reference can't express."""
+    tz = ZoneInfo(zone)
+
+    def midnight_utc(d: date) -> datetime:
+        local = datetime(d.year, d.month, d.day, tzinfo=tz)
+        return local.astimezone(timezone.utc).replace(tzinfo=None)
+
+    return (
+        midnight_utc(_local_date(t0, tz)),
+        midnight_utc(_local_date(t1, tz) + timedelta(days=1)),
+    )
 
 
 def derive_period(ts_col, zone: str = DEFAULT_PERIOD_ZONE):
@@ -275,21 +314,29 @@ def prune_window(
     t0: datetime | None = None,
     t1: datetime | None = None,
     zone: str = DEFAULT_PERIOD_ZONE,
+    upper_inclusive: bool = True,
 ) -> DataFrame:
-    """The engine's ONE store-pruning predicate (r19 review - previously
-    three divergence-prone copies across the readers): the ``period``
-    day-key IN-list when BOTH bounds exist (an open-ended bound cannot
-    enumerate days), the ``ts`` bounds applied INDEPENDENTLY - a single
-    bound previously disabled time filtering entirely, silently
-    returning the full-history scan - and the attribute IN-list."""
-    if t0 is not None and t1 is not None:
-        df = df.where(F.col("period").isin(day_partitions(t0, t1, zone)))
-    if t0 is not None:
-        df = df.where(F.col("ts") >= utc_ts_lit(t0))
-    if t1 is not None:
-        df = df.where(F.col("ts") <= utc_ts_lit(t1))
+    """The engine's ONE store-pruning predicate: the readers and every
+    request window (/query's exact trim and covered days, the /image
+    extrema slice and whole-days raster feed) call it.
+
+    - the attribute IN-list;
+    - the ``ts`` bounds apply INDEPENDENTLY (a single bound once disabled
+      time filtering entirely, silently returning the full-history
+      scan), ``[t0, t1]`` or, with ``upper_inclusive=False``, ``[t0,
+      t1)``. They go through ``push_time_filter``, so a store carrying
+      the raw ``_ts_ns`` scan column is filtered on that integer and the
+      bounds reach parquet row-group statistics (X2);
+    - when BOTH bounds exist and the frame has a ``period`` column, the
+      covered local-date day keys as an IN-list (an open-ended bound
+      cannot enumerate days): the reference's day fan-out
+      (hdbpp.py:303-321) as a partition-PRUNING predicate."""
     if att_conf_ids is not None:
         df = df.where(F.col("att_conf_id").isin([int(i) for i in att_conf_ids]))
+    df = push_time_filter(df, t0, t1, upper_inclusive=upper_inclusive)
+    if t0 is not None and t1 is not None and "period" in df.columns:
+        last = t1 if upper_inclusive else t1 - timedelta(microseconds=1)
+        df = df.where(F.col("period").isin(day_partitions(t0, max(t0, last), zone)))
     return df
 
 
