@@ -1,16 +1,52 @@
-"""Per-row reference for ``api.png.compose_image``.
+"""Per-row references for ``api.png.compose_image`` and
+``api.png.encode_png_rgba``.
 
 The compositor as first written: pixel rows read one at a time by column
-name, grouped into per-series lists, and every layer shaded, spread and
-stacked over the whole canvas. ``compose_image`` must return the same
-RGBA array, bit for bit, for any input this accepts.
+name, grouped into per-series lists, and every layer shaded, spread (one
+shifted canvas per kernel offset) and stacked over the whole canvas.
+``compose_image`` must return the same RGBA array, bit for bit, for any
+input this accepts.
+
+The encoder as first written: one ``bytes`` object per scanline, joined.
+``encode_png_rgba`` must return the same PNG bytes.
 """
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 
-from web_maxiv_hdbppviewer_spark.api.png import LINE_COLORS, _eq_hist_alpha, _spread
+from web_maxiv_hdbppviewer_spark.api.png import LINE_COLORS, _chunk, _eq_hist_alpha
+
+
+def _spread_reference(alpha: np.ndarray, px: int) -> np.ndarray:
+    if px <= 0:
+        return alpha
+    h, w = alpha.shape
+    out = alpha.copy()
+    for dy in range(-px, px + 1):
+        for dx in range(-px, px + 1):
+            if dy == 0 and dx == 0:
+                continue
+            shifted = np.zeros_like(alpha)
+            ys0, ys1 = max(dy, 0), h + min(dy, 0)
+            xs0, xs1 = max(dx, 0), w + min(dx, 0)
+            shifted[ys0:ys1, xs0:xs1] = alpha[ys0 - dy : ys1 - dy, xs0 - dx : xs1 - dx]
+            np.maximum(out, shifted, out=out)
+    return out
+
+
+def encode_png_rgba_reference(img: np.ndarray) -> bytes:
+    h, w = img.shape[:2]
+    raw = b"".join(b"\x00" + img[row].tobytes() for row in range(h))
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0))
+        + _chunk(b"IDAT", zlib.compress(raw, 6))
+        + _chunk(b"IEND", b"")
+    )
 
 
 def compose_image_reference(
@@ -49,7 +85,7 @@ def compose_image_reference(
             alphas = _eq_hist_alpha(cnts)
         layer_a = np.zeros((h, w), dtype=np.float64)
         layer_a[ys, xs] = alphas / 255.0
-        layer_a = _spread(layer_a, int((widths or {}).get(s, 0)))
+        layer_a = _spread_reference(layer_a, int((widths or {}).get(s, 0)))
         rgb = np.array(color_of[s], dtype=np.float64)
         a = layer_a[..., None]
         acc[..., :3] = rgb * a + acc[..., :3] * (1.0 - a)

@@ -20,7 +20,10 @@ from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
 from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
-from tests.compose_reference import compose_image_reference
+from tests.compose_reference import (
+    compose_image_reference,
+    encode_png_rgba_reference,
+)
 from tests.rasterline_reference import (
     _segments_to_pixels,
     assert_native_equals_reference,
@@ -180,6 +183,10 @@ def test_spread_widens_line():
     img = compose_image(rows, 5, 5, widths={1: 1})
     on = {(x, y) for y in range(5) for x in range(5) if img[y, x][3] > 0}
     assert on == {(x, y) for x in (1, 2, 3) for y in (1, 2, 3)}  # 3x3 block
+    # a width reaching past the canvas edges (a request's width is outside
+    # input) paints the whole canvas instead of failing
+    img = compose_image([{"series": 1, "xb": 1, "yb": 0, "cnt": 1}], 3, 2, widths={1: 5})
+    assert (img[..., 3] == 255).all()
 
 
 def test_stack_later_series_over_earlier():
@@ -289,6 +296,55 @@ def test_compose_image_matches_per_row_reference():
             got = compose_image(given, w, h, **kwargs)
             assert got.dtype == want.dtype and got.shape == want.shape
             assert (got == want).all(), f"case {case} ({form} rows, {kwargs})"
+
+
+def test_encode_png_rgba_matches_per_row_reference():
+    """The single-buffer encoder writes the same PNG bytes as the per-row
+    encoder on seeded images: dense noise, sparse composed images, the
+    1x1, one-row and one-column edges, and a non-contiguous view."""
+    rng = np.random.default_rng(20261019)
+    images = [
+        rng.integers(0, 256, size=shape, dtype=np.uint8)
+        for shape in ((1, 1, 4), (1, 17, 4), (23, 1, 4), (13, 7, 4), (40, 64, 4))
+    ]
+    for _ in range(20):
+        w, h = int(rng.integers(1, 40)), int(rng.integers(1, 30))
+        rows = [
+            {"series": s, "xb": x, "yb": y, "cnt": c}
+            for s, x, y, c in _random_pixel_rows(rng, w, h)
+        ]
+        images.append(compose_image(rows, w, h))
+    images.append(rng.integers(0, 256, size=(30, 20, 4), dtype=np.uint8)[::2, 3:])
+    for img in images:
+        assert encode_png_rgba(img) == encode_png_rgba_reference(img), img.shape
+
+
+def test_render_png_memory_is_sized_by_painted_pixels():
+    """One /image axis of ~2,000 pixel rows over 4 series on the viewer's
+    800x400 canvas peaks well under one dense float64 RGBA canvas
+    (800*400*4*8 bytes = 10.24 MB) of Python allocations: compose and
+    encode allocate by painted pixel, and the only canvas-sized arrays
+    are the uint8 image and its scanline buffer (1.28 MB each)."""
+    import tracemalloc
+
+    rng = np.random.default_rng(1544)
+    w, h, n = 800, 400, 2000
+    rows = [
+        {"series": int(s), "xb": int(x), "yb": int(y), "cnt": int(c)}
+        for s, x, y, c in zip(
+            rng.choice([4, 9, 17, 23], size=n),
+            rng.integers(0, w, size=n),
+            rng.integers(0, h, size=n),
+            rng.integers(1, 50, size=n),
+        )
+    ]
+    tracemalloc.start()
+    try:
+        render_png_base64(rows, w, h)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak <= 4_000_000, f"peak {peak / 1e6:.1f} MB"
 
 
 def test_lifecycle_image_digest_matches_independent_compositor(spark):

@@ -20,9 +20,14 @@ dependency-free PNG writer (stdlib zlib):
     with itself equivalent to max-alpha).
   - stack: source-over in premultiplied float, unpremultiplied once at
     the end; later series over earlier in request order (ascending id
-    without one), like the reference. Each layer is composited only at
-    the pixels it paints: over-compositing a zero-alpha pixel leaves it
-    unchanged, so the result equals a whole-canvas stack bit for bit.
+    without one), like the reference. Each layer is a (flat pixel,
+    alpha) pair of arrays, and the accumulator holds one premultiplied
+    RGBA row per pixel some layer paints: over-compositing a zero-alpha
+    pixel leaves it unchanged, so the result equals a whole-canvas stack
+    bit for bit. The only canvas-sized array is the (h, w, 4) uint8
+    image.
+  - encode: the filter bytes and scanlines are written into one
+    (h, 1 + 4w) uint8 buffer, which zlib compresses as it stands.
 """
 
 from __future__ import annotations
@@ -57,7 +62,9 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
 def encode_png_rgba(img: np.ndarray) -> bytes:
     """Minimal RGBA PNG encoder: img is (h, w, 4) uint8, row 0 = top."""
     h, w = img.shape[:2]
-    raw = b"".join(b"\x00" + img[row].tobytes() for row in range(h))
+    # each scanline is filter byte 0 followed by the row's RGBA bytes
+    raw = np.zeros((h, 1 + 4 * w), dtype=np.uint8)
+    raw[:, 1:] = img.reshape(h, 4 * w)
     return (
         b"\x89PNG\r\n\x1a\n"
         + _chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0))
@@ -118,20 +125,23 @@ def _eq_hist_alpha(cnts: np.ndarray, min_alpha: int = MIN_ALPHA) -> np.ndarray:
 
 def _spread(alpha: np.ndarray, px: int) -> np.ndarray:
     """Max-alpha dilation by a (2*px+1)^2 kernel (reference tf.spread,
-    plot.py:38-42): widens 1-pixel lines for visibility."""
+    plot.py:38-42): widens 1-pixel lines for visibility. Each kernel
+    offset raises the overlapping slice of one copy of ``alpha`` in
+    place; offsets that leave the canvas are skipped, which for
+    non-negative alphas changes nothing."""
     if px <= 0:
         return alpha
     h, w = alpha.shape
     out = alpha.copy()
-    for dy in range(-px, px + 1):
-        for dx in range(-px, px + 1):
+    ry, rx = min(px, h - 1), min(px, w - 1)
+    for dy in range(-ry, ry + 1):
+        for dx in range(-rx, rx + 1):
             if dy == 0 and dx == 0:
                 continue
-            shifted = np.zeros_like(alpha)
             ys0, ys1 = max(dy, 0), h + min(dy, 0)
             xs0, xs1 = max(dx, 0), w + min(dx, 0)
-            shifted[ys0:ys1, xs0:xs1] = alpha[ys0 - dy : ys1 - dy, xs0 - dx : xs1 - dx]
-            np.maximum(out, shifted, out=out)
+            dst = out[ys0:ys1, xs0:xs1]
+            np.maximum(dst, alpha[ys0 - dy : ys1 - dy, xs0 - dx : xs1 - dx], out=dst)
     return out
 
 
@@ -201,9 +211,12 @@ def compose_image(
     stacking between runs. ``widths`` maps series -> spread px.
 
     The rows become columns once and are grouped by a stable argsort of
-    their series, so each series keeps its row order; each layer touches
-    only the pixels it paints (after ``_spread``), and over-compositing an
-    unpainted pixel is the identity."""
+    their series, so each series keeps its row order. Everything else is
+    sized by the pixels the image paints: each layer is a (flat pixel,
+    alpha) pair of arrays, a series with a spread width builds its
+    footprint on one (h, w) layer, and the layers are stacked into one
+    premultiplied RGBA row per painted pixel, with the same IEEE
+    operations in the same order as a whole-canvas stack."""
     series, xb, yb, cnt = _pixel_columns(pixel_rows)
     present, code = np.unique(np.asarray(series), return_inverse=True)
     present = present.tolist()
@@ -226,47 +239,52 @@ def compose_image(
     xs = np.asarray(xb).astype(np.int64)
     ys = np.asarray(yb).astype(np.int64)
     keep = (xs >= 0) & (xs < w) & (ys >= 0) & (ys < h)
-    xs, ys, code = xs[keep], h - 1 - ys[keep], code[keep]
+    flat, code = (h - 1 - ys[keep]) * w + xs[keep], code[keep]
     cnts = np.asarray(cnt, dtype=np.float64)[keep]
     by_series = np.argsort(code, kind="stable")
     bounds = np.searchsorted(code[by_series], np.arange(len(present) + 1))
     rows_of = {s: by_series[bounds[i] : bounds[i + 1]] for i, s in enumerate(present)}
 
-    # premultiplied float compositing; unpremultiply at the end
-    acc = np.zeros((h, w, 4), dtype=np.float64)
-    layer = np.zeros((h, w), dtype=np.float64)
+    # pass 1: each series' layer as sorted flat pixels and their alphas
+    layers = []
     for s in series_ids:
         rows = rows_of[s]
         if not len(rows):
             continue
-        py, px = ys[rows], xs[rows]
         c = cnts[rows]
         if shading == "linear":
             alphas = 128.0 + 127.0 * np.minimum(c / c.max(), 1.0)
         else:
             alphas = _eq_hist_alpha(c)
-        # a pixel listed twice keeps the value the canvas assignment
-        # leaves, as a dense layer would
-        layer[py, px] = alphas / 255.0
+        # a pixel listed twice keeps its last row's alpha, as a canvas
+        # assignment leaves it: its first row in reversed order
+        pix, last = np.unique(flat[rows][::-1], return_index=True)
+        a = (alphas / 255.0)[::-1][last]
         spread_px = int((widths or {}).get(s, 0))
         if spread_px > 0:
-            wide = _spread(layer, spread_px)
-            layer[py, px] = 0.0
-            py, px = np.nonzero(wide)
-            a = wide[py, px]
-        else:
-            a = layer[py, px]
-            layer[py, px] = 0.0
-        rgb = np.array(color_of[s], dtype=np.float64)
-        acc[py, px, :3] = rgb * a[:, None] + acc[py, px, :3] * (1.0 - a[:, None])
-        acc[py, px, 3] = a + acc[py, px, 3] * (1.0 - a)
+            layer = np.zeros(h * w, dtype=np.float64)
+            layer[pix] = a
+            wide = _spread(layer.reshape(h, w), spread_px).ravel()
+            pix = np.flatnonzero(wide)
+            a = wide[pix]
+        layers.append((color_of[s], pix, a))
+
+    # pass 2: premultiplied source-over into one row per painted pixel
+    painted = np.unique(np.concatenate([np.empty(0, np.int64)] + [p for _, p, _ in layers]))
+    acc = np.zeros((len(painted), 4), dtype=np.float64)
+    for color, pix, a in layers:
+        at = np.searchsorted(painted, pix)
+        rgb = np.array(color, dtype=np.float64)
+        acc[at, :3] = rgb * a[:, None] + acc[at, :3] * (1.0 - a[:, None])
+        acc[at, 3] = a + acc[at, 3] * (1.0 - a)
 
     img = np.zeros((h, w, 4), dtype=np.uint8)
-    visible = acc[..., 3] > 0
-    img[..., 3] = np.rint(acc[..., 3] * 255.0).astype(np.uint8)
+    out = img.reshape(h * w, 4)
+    out[painted, 3] = np.rint(acc[:, 3] * 255.0).astype(np.uint8)
     # unpremultiply for straight-alpha PNG output
-    img[..., :3][visible] = np.rint(
-        acc[..., :3][visible] / acc[..., 3][visible][:, None]
+    visible = acc[:, 3] > 0
+    out[painted[visible], :3] = np.rint(
+        acc[visible, :3] / acc[visible, 3][:, None]
     ).astype(np.uint8)
     return img
 
