@@ -187,6 +187,10 @@ def test_spread_widens_line():
     # input) paints the whole canvas instead of failing
     img = compose_image([{"series": 1, "xb": 1, "yb": 0, "cnt": 1}], 3, 2, widths={1: 5})
     assert (img[..., 3] == 255).all()
+    # on the 800x400 viewer canvas: a width past the bottom edge but not
+    # the right one covers every row and the columns it reaches
+    img = compose_image([{"series": 1, "xb": 0, "yb": 0, "cnt": 1}], 800, 400, widths={1: 500})
+    assert (img[:, :501, 3] == 255).all() and (img[:, 501:, 3] == 0).all()
 
 
 def test_stack_later_series_over_earlier():

@@ -4,12 +4,13 @@
 Usage (from the repository root):
 
     python tools/ab_perfbench.py --workload session --seed-start 81 [--pairs 10]
-        [--parent HEAD] [--seconds 8]
+        [--parent HEAD]
 
 The parent commit is exported with ``git archive`` into a temporary
 directory; the change is the checkout this script lives in, as it stands.
 Pair ``i`` runs ``perfbench/run.py --workload W --seed <seed-start + i>
---seconds S --trace 0`` on both sides, one run at a time; even pairs run the
+--seconds S --trace 0`` on both sides, S being ``BENCHMARK.json``'s
+``run_seconds``, one run at a time; even pairs run the
 parent first, odd pairs the change first. Each run's end-to-end metrics
 (those ``BENCHMARK.json`` lists under ``end_to_end``) are read from its JSON
 result line.
@@ -21,8 +22,11 @@ parent's quartile spread, the change in percent, and two verdicts:
 - ``gain``: at least 10 pairs, the change won at least nine tenths of them,
   and the medians differ in its favour by more than the parent's quartile
   spread;
-- ``in_bound``: the change's median is worse than the parent's by no more
-  than the metric's bound.
+- ``in_bound``: ``"unresolved"`` when the parent's quartile spread is wider
+  than the metric's bound (the runs cannot tell a move of that size) and not
+  every change run beats every parent run; otherwise ``"yes"`` when the
+  change's median is worse than the parent's by no more than the bound,
+  else ``"no"``.
 
 Readable lines go to stdout as the runs finish; the last line is the summary
 as JSON.
@@ -41,6 +45,9 @@ import tempfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
+BENCHMARK = json.loads((ROOT / "BENCHMARK.json").read_text())
+#: fewest pairs a gain may be claimed on
+MIN_PAIRS = 10
 
 
 def export_commit(rev: str, dest: Path) -> None:
@@ -70,7 +77,7 @@ def quartiles(values: list) -> tuple:
     return q1, median, q3
 
 
-def summarize(spec: dict, parent: list, change: list, min_pairs: int = 10) -> dict:
+def summarize(spec: dict, parent: list, change: list) -> dict:
     """The A/B verdict for one metric over paired runs (pair i is
     ``parent[i]`` against ``change[i]``)."""
     sign = 1.0 if spec["better"] == "lower" else -1.0
@@ -79,6 +86,11 @@ def summarize(spec: dict, parent: list, change: list, min_pairs: int = 10) -> di
     wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
     gap = sign * (p_med - c_med)  # positive when the change is better
     spread = p_q3 - p_q1
+    if spread > spec["bound"] * p_med and not all(
+            sign * (p - c) > 0 for p in parent for c in change):
+        in_bound = "unresolved"
+    else:
+        in_bound = "yes" if -gap <= spec["bound"] * p_med else "no"
     return {
         "parent": {"median": p_med, "q1": p_q1, "q3": p_q3, "runs": parent},
         "change": {"median": c_med, "q1": c_q1, "q3": c_q3, "runs": change},
@@ -87,8 +99,8 @@ def summarize(spec: dict, parent: list, change: list, min_pairs: int = 10) -> di
         "gap": gap,
         "parent_spread": spread,
         "change_pct": 100.0 * (c_med - p_med) / p_med,
-        "gain": len(parent) >= min_pairs and wins >= 0.9 * len(parent) and gap > spread,
-        "in_bound": -gap <= spec["bound"] * p_med,
+        "gain": len(parent) >= MIN_PAIRS and wins >= 0.9 * len(parent) and gap > spread,
+        "in_bound": in_bound,
     }
 
 
@@ -98,10 +110,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seed-start", type=int, required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--parent", default="HEAD")
-    ap.add_argument("--seconds", type=float,
-                    default=json.loads((ROOT / "BENCHMARK.json").read_text())["run_seconds"])
     args = ap.parse_args(argv)
-    specs = json.loads((ROOT / "BENCHMARK.json").read_text())["end_to_end"]
+    specs = BENCHMARK["end_to_end"]
 
     runs = {"parent": [], "change": []}
     with tempfile.TemporaryDirectory(prefix="ab-perfbench-") as tmp:
@@ -110,7 +120,7 @@ def main(argv=None) -> int:
         for i in range(args.pairs):
             seed = args.seed_start + i
             for side in ("parent", "change") if i % 2 == 0 else ("change", "parent"):
-                out = run_bench(sides[side], args.workload, seed, args.seconds)
+                out = run_bench(sides[side], args.workload, seed, BENCHMARK["run_seconds"])
                 runs[side].append(out)
                 values = " ".join(f"{s['name']}={out['metrics'][s['name']]['value']}"
                                   for s in specs)
@@ -133,7 +143,7 @@ def main(argv=None) -> int:
               f"{s['change_pct']:+.1f}%, change won {s['wins']}/{s['pairs']}, "
               f"gap {s['gap']:.2f} vs parent spread {s['parent_spread']:.2f}: "
               f"gain {'yes' if s['gain'] else 'no'}, "
-              f"within bound {spec['bound']:.0%} {'yes' if s['in_bound'] else 'NO'}")
+              f"within bound {spec['bound']:.0%} {s['in_bound']}")
     print(f"failed parent {summary['failed']['parent']}/{summary['attempted']['parent']}, "
           f"change {summary['failed']['change']}/{summary['attempted']['change']}")
     print(json.dumps(summary))

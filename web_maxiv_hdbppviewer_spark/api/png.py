@@ -125,23 +125,23 @@ def _eq_hist_alpha(cnts: np.ndarray, min_alpha: int = MIN_ALPHA) -> np.ndarray:
 
 def _spread(alpha: np.ndarray, px: int) -> np.ndarray:
     """Max-alpha dilation by a (2*px+1)^2 kernel (reference tf.spread,
-    plot.py:38-42): widens 1-pixel lines for visibility. Each kernel
-    offset raises the overlapping slice of one copy of ``alpha`` in
-    place; offsets that leave the canvas are skipped, which for
-    non-negative alphas changes nothing."""
+    plot.py:38-42): widens 1-pixel lines for visibility. A max over a
+    square kernel is a max over the column offsets of a max over the row
+    offsets, so it runs as two 1-D passes, each raising overlapping
+    slices of the result in place from an unchanged source (2*px slice
+    maxima per axis, not (2*px+1)^2). Offsets that leave the canvas are
+    skipped, which for non-negative alphas changes nothing."""
     if px <= 0:
         return alpha
     h, w = alpha.shape
     out = alpha.copy()
-    ry, rx = min(px, h - 1), min(px, w - 1)
-    for dy in range(-ry, ry + 1):
-        for dx in range(-rx, rx + 1):
-            if dy == 0 and dx == 0:
-                continue
-            ys0, ys1 = max(dy, 0), h + min(dy, 0)
-            xs0, xs1 = max(dx, 0), w + min(dx, 0)
-            dst = out[ys0:ys1, xs0:xs1]
-            np.maximum(dst, alpha[ys0 - dy : ys1 - dy, xs0 - dx : xs1 - dx], out=dst)
+    for d in range(1, min(px, h - 1) + 1):
+        np.maximum(out[d:], alpha[:-d], out=out[d:])
+        np.maximum(out[:-d], alpha[d:], out=out[:-d])
+    cols = out.copy()
+    for d in range(1, min(px, w - 1) + 1):
+        np.maximum(out[:, d:], cols[:, :-d], out=out[:, d:])
+        np.maximum(out[:, :-d], cols[:, d:], out=out[:, :-d])
     return out
 
 
