@@ -135,11 +135,12 @@ def reference_pixels(rows, x0_us, span_us, w, ymin, ymax, h) -> dict:
 
 def native_pixels(df, x0_us, span_us, w, ymin, ymax, h, **kw) -> dict:
     """{(series, xb, yb): cnt} drawn by the Catalyst operator."""
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+    from web_maxiv_hdbppviewer_spark.operators.rasterline import canvas_table, rasterize_lines
 
+    canvas = canvas_table(df.sparkSession, [(x0_us, span_us, w, ymin, ymax, h)])
     return {
         (r["series"], r["xb"], r["yb"]): r["cnt"]
-        for r in rasterize_lines(df, x0_us, span_us, w, ymin, ymax, h, **kw).collect()
+        for r in rasterize_lines(df.crossJoin(canvas), **kw).collect()
     }
 
 

@@ -19,7 +19,7 @@ import pytest
 from tests.conftest import SF_SMOKE
 
 from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+from web_maxiv_hdbppviewer_spark.operators.rasterline import canvas_table, rasterize_lines
 from web_maxiv_hdbppviewer_spark.sources import hdbpp
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
@@ -61,8 +61,10 @@ def test_viewer_plans_have_no_python_nodes(engine):
     assert len(ids) == len(NAMES)
     frames = {
         "rasterize_lines": rasterize_lines(
-            engine.datapoints.where(engine.datapoints.att_conf_id.isin(list(ids.values()))),
-            1_704_067_200_000_000, 2_592_000_000_000.0, 200, 0.0, 500.0, 120,
+            engine.datapoints.where(engine.datapoints.att_conf_id.isin(list(ids.values())))
+            .crossJoin(canvas_table(engine.datapoints.sparkSession, [
+                (1_704_067_200_000_000, 2_592_000_000_000.0, 200, 0.0, 500.0, 120),
+            ])),
         ),
         "query_raw_df raw": engine.query_raw_df(NAMES, T0, T1, _ids=ids),
         "query_raw_df resampled": engine.query_raw_df(NAMES, T0, T1, interval="12h", _ids=ids),
@@ -151,14 +153,9 @@ def test_render_image_builds_no_binned_or_hover_plan(engine, monkeypatch):
     assert sorted(want["images"]) == [0, 1]
 
 
-def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
-    """An /image with a linear and a log axis collects ``series_extrema``
-    once: each series' row carries the all-values and the positive-values
-    extrema, and each axis reads its scale's pair. The same attribute on
-    both axes gets the linear extrema on one and the positive ones on the
-    other. The expected descs and y-ranges are those of the former
-    one-job-per-scale pass."""
-    from web_maxiv_hdbppviewer_spark.api import lifecycle
+def _two_attribute_engine(spark):
+    """An engine over two attributes of one day: attr0 with a null, a
+    negative and positive values, attr1 with positive values only."""
     from web_maxiv_hdbppviewer_spark.sources.hdbpp import HdbppCatalog, derive_period
     from pyspark.sql import functions as F
 
@@ -179,7 +176,21 @@ def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
     dp = spark.createDataFrame(
         rows, "att_conf_id long, ts timestamp, value_r double"
     ).withColumn("period", derive_period(F.col("ts")))
-    engine = lifecycle.HdbppQueryEngine(HdbppCatalog(att_conf, att_names), dp)
+    return HdbppQueryEngine(HdbppCatalog(att_conf, att_names), dp)
+
+
+def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
+    """An /image with a linear and a log axis collects ``series_extrema``
+    once: each series' row carries the all-values and the positive-values
+    extrema, and each axis reads its scale's pair. The same attribute on
+    both axes gets the linear extrema on one and the positive ones on the
+    other. The expected descs and y-ranges are those of the former
+    one-job-per-scale pass. The whole two-axis /image is 5 Spark jobs, all
+    in the caller's job group: 2 for the extrema and 3 for the one line
+    raster of both axes."""
+    from web_maxiv_hdbppviewer_spark.api import lifecycle
+
+    engine = _two_attribute_engine(spark)
     a0, a1 = "cs1/dom0/fam0/mem0/attr0", "cs1/dom1/fam1/mem1/attr1"
     window = (datetime(2024, 1, 10), datetime(2024, 1, 11), (50, 40))
     axes = {"1": {"scale": "log"}}
@@ -193,9 +204,14 @@ def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
 
     monkeypatch.setattr(lifecycle, "series_extrema", counting)
 
-    out = engine.render_image(
+    engine._resolve([a0, a1])  # the catalog snapshot's job is not /image's
+    tracker = spark.sparkContext.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    out, jobs = _jobs_in_group(spark, "image-two-axes", lambda: engine.render_image(
         [{"name": a0, "y_axis": 0}, {"name": a1, "y_axis": 1}], *window, axes
-    )
+    ))
+    assert jobs == 5
+    assert not set(tracker.getJobIdsForGroup(None)) - untagged
     assert len(calls) == 1
     assert out["descs"] == {
         a0: {"total_points": 4, "min_value": -2.0, "max_value": 20.0},
@@ -217,6 +233,34 @@ def test_one_extrema_job_per_image_whatever_the_axis_scales(spark, monkeypatch):
     }
     assert aggs[0]["y_range"] == (-3.1, 21.1)
     assert aggs[1]["y_range"] == (4.665164957684037, 21.43546925072587)
+
+
+def test_two_axis_image_matches_each_axis_alone(spark):
+    """Each axis of a two-axis /image is the image of that axis requested
+    alone: a linear and a log axis drawn by one plan, with one attribute
+    on both axes keyed as two series, each with its own color, width and
+    stacking slot."""
+    import base64
+
+    import numpy as np
+
+    from web_maxiv_hdbppviewer_spark.api.png import decode_png_rgba
+
+    engine = _two_attribute_engine(spark)
+    a0, a1 = "cs1/dom0/fam0/mem0/attr0", "cs1/dom1/fam1/mem1/attr1"
+    window = (datetime(2024, 1, 10), datetime(2024, 1, 11), (50, 40))
+    axes = {"0": {"scale": "linear"}, "1": {"scale": "log"}}
+    linear = [{"name": a0, "y_axis": 0, "color": "red", "width": 1}]
+    log = [{"name": a1, "y_axis": 1}, {"name": a0, "y_axis": 1, "color": "#00f"}]
+    both = engine.render_image([log[0], linear[0], log[1]], *window, axes)["images"]
+    assert sorted(both) == [0, 1]
+    for axis, specs in ((0, linear), (1, log)):
+        alone = engine.render_image(specs, *window, axes)["images"]
+        assert list(alone) == [axis]
+        assert both[axis]["y_range"] == alone[axis]["y_range"]
+        got, want = (decode_png_rgba(base64.b64decode(i[axis]["image"])) for i in (both, alone))
+        assert want[..., 3].any()
+        assert np.array_equal(got, want)
 
 
 def test_fixture_opens_only_the_events_table(spark, tmp_path):

@@ -17,7 +17,7 @@ from web_maxiv_hdbppviewer_spark.api.png import (
     render_png_base64,
 )
 from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+from web_maxiv_hdbppviewer_spark.operators.rasterline import canvas_table, rasterize_lines
 from web_maxiv_hdbppviewer_spark.sources.fixtures import hdbpp_fixture
 
 from tests.compose_reference import (
@@ -72,7 +72,7 @@ def test_rasterize_lines_single_series(spark):
     ]
     df = spark.createDataFrame(rows, ["att_conf_id", "ts", "value_r"])
     x0 = int(datetime(2024, 1, 1).timestamp() * 1e6)
-    out = rasterize_lines(df, x0, 60e6, 6, 0.0, 6.0, 6).collect()
+    out = rasterize_lines(df.crossJoin(canvas_table(spark, [(x0, 60e6, 6, 0.0, 6.0, 6)]))).collect()
     # segment from pixel (0,0) to (4,4): the diagonal
     got = {(r["xb"], r["yb"]) for r in out}
     assert (0, 0) in got and (4, 4) in got
@@ -86,7 +86,7 @@ def test_rasterize_lines_null_values_skipped(spark):
     ]
     df = spark.createDataFrame(rows, "att_conf_id long, ts timestamp, value_r double")
     x0 = int(datetime(2024, 1, 1).timestamp() * 1e6)
-    out = rasterize_lines(df, x0, 60e6, 6, 0.0, 6.0, 6).collect()
+    out = rasterize_lines(df.crossJoin(canvas_table(spark, [(x0, 60e6, 6, 0.0, 6.0, 6)]))).collect()
     assert len(out) == 1  # single surviving point, single pixel
 
 
@@ -369,7 +369,7 @@ def test_lifecycle_image_digest_matches_independent_compositor(spark):
 
     from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
     from web_maxiv_hdbppviewer_spark.api.png import LINE_COLORS
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+    from web_maxiv_hdbppviewer_spark.operators.rasterline import canvas_table, rasterize_lines
     from web_maxiv_hdbppviewer_spark.plans.queries import lifecycle_image
 
     declared = {
@@ -391,7 +391,9 @@ def test_lifecycle_image_digest_matches_independent_compositor(spark):
         y0, y1 = ax["y_range"]
         x0 = ax["x_range"][0]
         rows = rasterize_lines(
-            ax["data"], x0, float(ax["x_range"][1] - x0), w, y0, y1, h
+            ax["data"].select("att_conf_id", "ts", "value_r").crossJoin(
+                canvas_table(spark, [(x0, float(ax["x_range"][1] - x0), w, y0, y1, h)])
+            )
         ).collect()
         # request-order compositing (= ascending u here), palette by slot
         order = [ax["ids"][a["name"]] for a in attrs if a["name"] in ax["ids"]]

@@ -547,7 +547,9 @@ def test_image_windows_match_reference_slices(spark):
         the covered days (the raster is drawn from the full frame).
     Pre-r13 all three were the single closed trim [t0, t1]."""
     from web_maxiv_hdbppviewer_spark.api.lifecycle import HdbppQueryEngine
-    from web_maxiv_hdbppviewer_spark.operators.rasterline import rasterize_lines
+    from web_maxiv_hdbppviewer_spark.operators.rasterline import (
+        canvas_table, rasterize_lines,
+    )
 
     catalog = _slashed_catalog(spark)
     name = "cs1/dom0/fam0/mem0/attr0"
@@ -589,7 +591,9 @@ def test_image_windows_match_reference_slices(spark):
     # lit column would be the 12:00 point's
     x0_us, x1_us = ax["x_range"]
     pix = rasterize_lines(
-        ax["data"], x0_us, float(x1_us - x0_us), w, *ax["y_range"], h
+        ax["data"].select("att_conf_id", "ts", "value_r").crossJoin(
+            canvas_table(spark, [(x0_us, float(x1_us - x0_us), w, *ax["y_range"], h)])
+        )
     ).collect()
     assert min(r["xb"] for r in pix) == 0
     assert max(r["xb"] for r in pix) == w - 1  # ...and exits right

@@ -11,8 +11,10 @@ catalog's driver-side snapshot (``HdbppCatalog``).
 
 Each viewer rule has one implementation: every request window is one
 ``hdbpp.prune_window`` call, an /image collects ONE ``series_extrema`` job
-whatever its axes' scales, and /query is one combined frame
-(``query_raw_df``) that ``api.render`` collects once.
+whatever its axes' scales and draws every axis' series from ONE window
+frame in ONE line-raster collect, and /query is one combined frame
+(``query_raw_df``) that ``api.render`` collects once. All of a request's
+Spark jobs run on the calling thread, under its job group.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.time import datetime_to_epoch_us, epoch_us, utc_ts_lit
+from ..operators import rasterline
 from ..operators.extrema import pad_range, series_extrema
 from ..operators.raster import bin_2d, hover_stats
 from ..operators.resample import freq_to_us, resample_mean
@@ -209,23 +212,35 @@ class HdbppQueryEngine:
         attributes: list[dict],
         t0: datetime,
         t1: datetime,
+        size: tuple[int, int],
         axes: dict[str, dict] | None = None,
-    ) -> dict:
-        """The per-axis preparation both /image paths share: one resolve,
-        ONE extrema job for every series of every axis, and for each axis
-        its y-range, its descs (point count and extrema per series), its
-        window plan (log projection included) and its bin geometry. Builds
-        no raster or hover plan.
+    ) -> tuple[dict, DataFrame | None]:
+        """The preparation both /image paths share: one resolve, ONE
+        extrema job for every series of every axis, each axis' y-range,
+        descs (point count and extrema per series) and bin geometry, and
+        ONE window frame for all axes. Builds no raster or hover plan.
 
         Each series' extrema row carries both the all-values pair and the
         positive-values pair (``series_extrema``); an axis reads the pair
         of its own scale, so one attribute on a linear and a log axis
         needs no second job.
 
+        The frame is one ``prune_window`` scan of the covered days,
+        broadcast-joined on att_conf_id to a ``canvas_table`` with one row
+        per (axis, series): its ``series`` index, att_conf_id, axis, log
+        flag and that axis' canvas in bin space. An attribute listed on
+        both axes is two series, so its points reach both canvases. The
+        log-axis rule is the frame's: ``NOT log OR value_r > 0`` and the
+        bin value ``v_bin = IF(log, log10(value_r), value_r)``.
+
+        Returns ({axis: preparation}, frame); the frame is None when no
+        name resolves.
+
         ``attributes``: [{"name": full_name, "y_axis": 0|1}, ...]
         ``axes``: {"0": {"scale": "linear"|"log", "min": x?, "max": x?}}
         """
         axes = axes or {}
+        w, h = size
         by_axis: dict[int, list[str]] = {}
         for spec in attributes:
             by_axis.setdefault(int(spec.get("y_axis", 0)), []).append(spec["name"])
@@ -240,6 +255,8 @@ class HdbppQueryEngine:
         # below is a driver-side dict slice. Same drop-unknown-names
         # semantics (F7).
         all_ids = self._resolve([spec["name"] for spec in attributes])
+        if not all_ids:
+            return result, None
 
         # reference /image windows (r13 parity): get_images fetches WHOLE
         # covered day-periods (get_data restrict_time defaults False,
@@ -253,17 +270,18 @@ class HdbppQueryEngine:
         day0, day1 = _covered_day_span_utc(t0, t1, self.period_zone)
         # per-series extrema (A2, log filter F3) of every requested series
         # in one collect; the driver result stays <= |attributes| rows
-        ext: dict = {}
-        if all_ids:
-            view = prune_window(
-                self.datapoints, list(all_ids.values()), t0, t1,
-                self.period_zone, upper_inclusive=False,
-            )
-            ext = {
-                r["att_conf_id"]: r
-                for r in series_extrema(view, ["att_conf_id"], "value_r").collect()
-            }
+        view = prune_window(
+            self.datapoints, list(all_ids.values()), t0, t1,
+            self.period_zone, upper_inclusive=False,
+        )
+        ext = {
+            r["att_conf_id"]: r
+            for r in series_extrema(view, ["att_conf_id"], "value_r").collect()
+        }
 
+        # one canvas row per (axis, series): series index, att_conf_id,
+        # axis, log flag, then the axis' canvas
+        members: list[tuple] = []
         for axis, names in by_axis.items():
             cfg = axes.get(str(axis), {})
             log_scale = cfg.get("scale") == "log"
@@ -272,10 +290,6 @@ class HdbppQueryEngine:
             if not ids:
                 continue
             id_to_name = {v: k for k, v in ids.items()}
-            plot_data = prune_window(
-                self.datapoints, list(ids.values()), day0, day1,
-                self.period_zone, upper_inclusive=False,
-            )
             descs = {
                 id_to_name[i]: {
                     "total_points": ext[i]["n"],
@@ -305,41 +319,45 @@ class HdbppQueryEngine:
             # values - datashader Canvas(y_axis_type='log'), reference
             # plot.py:24 (r19 review: the raster previously binned log
             # axes in LINEAR value space, collapsing an exponential
-            # decade spread into the bottom pixels). Positivity filter
-            # (F3) guarantees log10 is defined; pad_range's log clamp
-            # keeps y0 > 0. bin_range/bin_col carry the transformed
-            # geometry to the line raster in render_image.
-            if log_scale:
-                plot_data = plot_data.where(F.col("value_r") > 0)
-                plot_data = plot_data.withColumn(
-                    "_v_bin", F.log10(F.col("value_r"))
-                )
-                if y0 > 0 and y1 > 0:
-                    bin_lo, bin_hi = math.log10(y0), math.log10(y1)
-                else:
-                    # pad_range's total-surface fallbacks for no-data /
-                    # zero-constant axes ((0,1), (-0.5,0.5)) are not
-                    # log-representable; the positivity filter leaves
-                    # such rasters EMPTY, so any valid log band renders
-                    # identically - one decade keeps the surface total
-                    bin_lo, bin_hi = 0.0, 1.0
-                bin_col = "_v_bin"
-            else:
+            # decade spread into the bottom pixels). The frame's
+            # positivity filter (F3) guarantees log10 is defined;
+            # pad_range's log clamp keeps y0 > 0.
+            if not log_scale:
                 bin_lo, bin_hi = y0, y1
-                bin_col = "value_r"
+            elif y0 > 0 and y1 > 0:
+                bin_lo, bin_hi = math.log10(y0), math.log10(y1)
+            else:
+                # pad_range's total-surface fallbacks for no-data /
+                # zero-constant axes ((0,1), (-0.5,0.5)) are not
+                # log-representable; the positivity filter leaves such
+                # rasters EMPTY, so any valid log band renders
+                # identically - one decade keeps the surface total
+                bin_lo, bin_hi = 0.0, 1.0
+            canvas = (x0_us, float(x1_us - x0_us), w, bin_lo, bin_hi, h)
+            series = {i: len(members) + k for k, i in enumerate(id_to_name)}
+            members += [(s, i, axis, log_scale, *canvas) for i, s in series.items()]
             result[axis] = {
                 "y_range": (y0, y1),
                 "x_range": (x0_us, x1_us),
                 "bin_range": (bin_lo, bin_hi),
-                "bin_col": bin_col,
                 "descs": descs,
-                # resolved routing + the filtered window plan, exposed so
-                # the raster passes reuse them instead of re-resolving
-                # names and rebuilding the scan
+                # resolved routing, and each name's series in the frame
                 "ids": ids,
-                "data": plot_data,
+                "series": {n: series[i] for n, i in ids.items()},
             }
-        return result
+        canvas = rasterline.canvas_table(
+            self.datapoints.sparkSession, members, ("series", "att_conf_id", "axis", "log")
+        )
+        frame = (
+            prune_window(
+                self.datapoints, list(all_ids.values()), day0, day1,
+                self.period_zone, upper_inclusive=False,
+            )
+            .join(canvas, "att_conf_id")
+            .where("NOT log OR value_r > 0")
+            .selectExpr("*", "IF(log, log10(value_r), value_r) AS v_bin")
+        )
+        return result, frame
 
     def image_aggregates(
         self,
@@ -350,19 +368,22 @@ class HdbppQueryEngine:
         axes: dict[str, dict] | None = None,
     ) -> dict:
         """The /image pre-render aggregates: ``_axis_windows``' per-axis
-        y_range, descs and window plan (extrema + padding + manual
-        overrides, plot.py:74-188), plus the 2-D binned raster aggregate
-        (A6, ``raster``) and per-column hover stats (A8, ``hover``) as
-        lazy plans. Driver receives <= w*h rows per axis when collected.
+        y_range and descs (extrema + padding + manual overrides,
+        plot.py:74-188), the axis' slice of its window frame (``data``),
+        and from that slice the 2-D binned raster aggregate (A6,
+        ``raster``, binned on ``v_bin``) and per-column hover stats (A8,
+        ``hover``) as lazy plans. Driver receives <= w*h rows per axis
+        when collected.
         """
         w, h = size
-        result = self._axis_windows(attributes, t0, t1, axes)
-        for ax in result.values():
+        result, frame = self._axis_windows(attributes, t0, t1, size, axes)
+        for axis, ax in result.items():
             x0_us, x1_us = ax["x_range"]
             span_us = float(x1_us - x0_us)
+            ax["data"] = frame.where(F.col("axis") == axis)
             ax["raster"] = bin_2d(
                 ax["data"], x0_us, span_us, w, *ax["bin_range"], h,
-                value_col="value_r", keys=["att_conf_id"], bin_col=ax["bin_col"],
+                value_col="value_r", keys=["att_conf_id"], bin_col="v_bin",
             )
             # hover clips on raw values (monotone-equivalent to the bin-
             # space clip) and never y-bins, so it stays in data space
@@ -385,75 +406,52 @@ class HdbppQueryEngine:
          "descs": {attr: per-series point count and extrema}}.
 
         Reads only ``_axis_windows``' preparation and the line raster (A7,
-        Catalyst expressions per segment): the binned raster and hover
-        plans of ``image_aggregates`` are not part of the response, so
-        they are never built. The driver only ever sees pixel rows and
-        the tiny extrema results.
+        Catalyst expressions per segment) of its window frame: every
+        axis' series are drawn by ONE plan and collected ONCE, then each
+        axis is composed and encoded in turn, its rows released after its
+        compose. The binned raster and hover plans of ``image_aggregates``
+        are not part of the response, so they are never built. The
+        driver only ever sees pixel rows and the tiny extrema results.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        from ..operators.rasterline import rasterize_lines
         from .png import render_png_base64
 
         w, h = size
-        aggs = self._axis_windows(attributes, t0, t1, axes)
+        aggs, frame = self._axis_windows(attributes, t0, t1, size, axes)
+        rows_of: dict[int, list] = {axis: [] for axis in aggs}
+        if frame is not None:
+            axis_of = {s: axis for axis, ax in aggs.items() for s in ax["series"].values()}
+            # the canvases are in bin space (log10 positions on a log
+            # axis); ``rasterize_lines`` is looked up at call time
+            for r in rasterline.rasterize_lines(frame, "series", value_col="v_bin").collect():
+                rows_of[axis_of[r[0]]].append(r)
+        images: dict = {}
         descs: dict = {}
-
-        # per-axis line raster + PNG encode are INDEPENDENT chains
-        # (separate ids, separate bin geometry) - overlap them from a
-        # small thread pool (guide-standard concurrent-jobs pattern) so
-        # axis 1's raster tasks back-fill executors freed by axis 0's
-        # stragglers instead of running serially. Job-group properties
-        # are thread-local; copy the caller's into each worker so
-        # run_cancellable's tag (X10) still covers every job.
-        sc = self.datapoints.sparkSession.sparkContext
-        job_props = {p: sc.getLocalProperty(p) for p in _JOB_PROPS}
-
-        def _axis_image(item):
-            axis, ax = item
-            for p, v in job_props.items():
-                if v is not None:
-                    sc.setLocalProperty(p, v)
-            # reuse the axis' resolved ids and filtered window plan from the
-            # aggregate pass - no second catalog collect, no rebuilt scan
-            ids = ax["ids"]
-            y0, y1 = ax["y_range"]
-            # the line raster draws in the BIN space (log10 positions on
-            # a log axis - the aggregate pass already projected _v_bin)
-            b0, b1 = ax["bin_range"]
-            x0 = ax["x_range"][0]
-            pixel_rows = rasterize_lines(
-                ax["data"], x0, float(ax["x_range"][1] - x0), w, b0, b1, h,
-                value_col=ax["bin_col"],
-            ).collect()
-            colors = {}
-            widths = {}
+        for axis, ax in aggs.items():
+            series_of = ax["series"]
+            specs = [
+                spec for spec in attributes
+                if int(spec.get("y_axis", 0)) == axis and spec["name"] in series_of
+            ]
             # z-order follows the request's attribute listing (reference
             # plot.py tf.stack over attributes.items()), not catalog id
-            order = [ids[spec["name"]] for spec in attributes if spec["name"] in ids]
-            for spec in attributes:
-                if spec["name"] not in ids:
-                    continue
-                if spec.get("color"):
-                    colors[ids[spec["name"]]] = _parse_color(spec["color"])
-                if spec.get("width"):
-                    # per-series line widening (reference tf.spread px=width)
-                    widths[ids[spec["name"]]] = int(spec["width"])
-            return axis, {
+            order = [series_of[spec["name"]] for spec in specs]
+            colors = {
+                series_of[spec["name"]]: _parse_color(spec["color"])
+                for spec in specs if spec.get("color")
+            }
+            # per-series line widening (reference tf.spread px=width)
+            widths = {
+                series_of[spec["name"]]: int(spec["width"])
+                for spec in specs if spec.get("width")
+            }
+            images[axis] = {
                 "image": render_png_base64(
-                    pixel_rows, w, h, colors or None, widths=widths or None,
+                    rows_of.pop(axis), w, h, colors or None, widths=widths or None,
                     order=order,
                 ),
-                "y_range": [y0, y1],
+                "y_range": list(ax["y_range"]),
                 "x_range": list(ax["x_range"]),
             }
-
-        if len(aggs) > 1:
-            with ThreadPoolExecutor(max_workers=min(len(aggs), 3)) as pool:
-                images = dict(pool.map(_axis_image, aggs.items()))
-        else:
-            images = dict(map(_axis_image, aggs.items()))
-        for ax in aggs.values():
             descs.update(ax["descs"])
         return {"images": images, "descs": descs}
 

@@ -67,6 +67,7 @@ _BY_TIME = "PARTITION BY series ORDER BY t_us, v"
 #: each point with the next one of its series, connected in (t, v) order
 _PAIRED = (
     "series",
+    "x_lo", "x_span", "w", "y_lo", "y_span", "h",
     f"row_number() OVER ({_BY_TIME}) AS seg",
     f"count(1) OVER ({_BY_TIME} ROWS BETWEEN UNBOUNDED PRECEDING"
     " AND UNBOUNDED FOLLOWING) = 1 AS lone",
@@ -134,40 +135,44 @@ _STAGES = (
 )
 
 
+def canvas_table(spark, rows: list[tuple], keys: tuple[str, ...] = ()) -> DataFrame:
+    """One broadcast row per canvas, from ``rows`` of ``(*key values,
+    x0_us, span_us, w, ymin, ymax, h)``: the ``keys`` columns, then the
+    canvas columns the walk reads, (x_lo, x_span, w, y_lo, y_span, h).
+    Join it to the points each canvas draws.
+
+    The canvas enters the walk as columns, not as literals: the generated
+    code then does not change between requests, so it is compiled once per
+    session instead of once per request. A zero span maps every point off
+    the canvas (NaN), as numpy's division by zero does."""
+    *key_values, x0, span, w, ymin, ymax, h = zip(*rows)
+    return F.broadcast(spark.createDataFrame(pa.table({
+        **{k: pa.array(v) for k, v in zip(keys, key_values)},
+        "x_lo": [float(x) for x in x0],
+        "x_span": [float(s) if s else math.nan for s in span],
+        "w": [float(n) for n in w],
+        "y_lo": [float(lo) for lo in ymin],
+        "y_span": [float(hi - lo) if hi != lo else math.nan for lo, hi in zip(ymin, ymax)],
+        "h": [float(n) for n in h],
+    })))
+
+
 def rasterize_lines(
     df: DataFrame,
-    x0_us: int,
-    span_us: float,
-    w: int,
-    ymin: float,
-    ymax: float,
-    h: int,
     series_col: str = "att_conf_id",
     ts_col: str = "ts",
     value_col: str = "value_r",
 ) -> DataFrame:
-    """Connect-the-dots raster -> (series, xb, yb, cnt) rows: ``cnt`` is
-    the number of segments of ``series`` that paint pixel (xb, yb). Null
-    values are skipped; their neighbors connect."""
-    paired = df.select(
+    """Connect-the-dots raster of points that carry their canvas columns
+    (``canvas_table``) -> (series, xb, yb, cnt) rows: ``cnt`` is the
+    number of segments of ``series`` that paint pixel (xb, yb) of its
+    canvas. Null values are skipped; their neighbors connect."""
+    walked = df.select(
         F.col(series_col).cast("long").alias("series"),
         epoch_us(F.col(ts_col)).alias("t_us"),
         F.col(value_col).cast("double").alias("v"),
+        "x_lo", "x_span", "w", "y_lo", "y_span", "h",
     ).where("v IS NOT NULL").selectExpr(*_PAIRED)
-    # the canvas enters as the columns of one broadcast row, not as
-    # literals: the generated code then does not change between requests,
-    # so it is compiled once per session instead of once per request. A
-    # zero span maps every point off the canvas (NaN), as numpy's division
-    # by zero does.
-    canvas = df.sparkSession.createDataFrame(pa.table({
-        "x_lo": [float(x0_us)],
-        "x_span": [float(span_us) if span_us else math.nan],
-        "w": [float(w)],
-        "y_lo": [float(ymin)],
-        "y_span": [float(ymax - ymin) if ymax != ymin else math.nan],
-        "h": [float(h)],
-    }))
-    walked = paired.crossJoin(F.broadcast(canvas))
     for stage in _STAGES:
         walked = walked.selectExpr(*stage)
     # a pixel counts once per segment however many of its samples land
